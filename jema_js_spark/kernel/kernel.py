@@ -307,6 +307,9 @@ class Validator:
         if prop == "type":
             members = keyword_value if isinstance(keyword_value, list) \
                 else [keyword_value]
+            if any(isinstance(m, list) for m in members):
+                # _v_type recurses into nested member lists: no fold
+                return (prop, keyword_value, fast, True)
             if any(m == vt for m in members):
                 return None                      # constant true → drop
             if "integer" in members and vt == "number":

@@ -770,9 +770,11 @@ def test_errors_path_screen_gating_plans(spark):
     """Physical-plan pins for the errors path's three screening shapes
     (round 6 gating + the round-7 masked screen, VERDICT r6 #5): pure
     Plane A screens with zero Python; a Plane-B-carrying routable plan
-    screens with ONE masked whole-doc verdict UDF (ArrowEvalPython)
-    and still rebalances only the screened residue; unroutable
-    contracts skip screening and add NO full-input shuffle."""
+    screens with ONE masked whole-doc verdict UDF (ArrowEvalPython).
+    Both screened shapes feed the residue straight into MapInPandas
+    with no Exchange below it (a residue rebalance would let AQE pack
+    the small residue into one Python task); unroutable contracts skip
+    screening and add NO shuffle either."""
     from jema_js_spark.validation.json_plane import json_violation_rows
 
     df = spark.createDataFrame([(1, '{"k":1}')], "i long, doc string")
@@ -783,16 +785,16 @@ def test_errors_path_screen_gating_plans(spark):
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("simple"))
 
-    # pure Plane A: screened + rebalanced, no ArrowEvalPython verdict UDF
+    # pure Plane A: screened in-stage, no ArrowEvalPython verdict UDF
     pure = {"type": "object", "required": ["k"],
             "properties": {"k": {"type": "integer", "minimum": 0}}}
     p = phys(pure)
     assert "ArrowEvalPython" not in p, p
-    assert "Exchange" in p and "MapInPandas" in p, p
+    assert "Exchange" not in p and "MapInPandas" in p, p
 
     # Plane-B-carrying routable contract: the masked verdict screen —
     # exactly one ArrowEvalPython stage (inputs nulled on rows the
-    # screen can't exonerate), residue rebalance Exchange, MapInPandas
+    # screen can't exonerate), then MapInPandas in the same stage
     from jema_js_spark.compiler.compile import SchemaCompiler
 
     planeb = {
@@ -811,7 +813,7 @@ def test_errors_path_screen_gating_plans(spark):
     assert bcompiled.coverage()["plane_b_checks"] > 0   # the premise
     p2 = phys(planeb)
     assert p2.count("ArrowEvalPython") == 1, p2
-    assert "Exchange" in p2 and "MapInPandas" in p2, p2
+    assert "Exchange" not in p2 and "MapInPandas" in p2, p2
 
     # unroutable contract: whole-input shape, no screen, no shuffle
     # (layoutless roots route keys-only since round 7 session 4, so
@@ -821,6 +823,89 @@ def test_errors_path_screen_gating_plans(spark):
                "unevaluatedProperties": False})
     assert "ArrowEvalPython" not in p3, p3
     assert "Exchange" not in p3 and "MapInPandas" in p3, p3
+
+
+def _group_stage_tasks(spark, group):
+    """Task counts per stage (stage id order) of the jobs run under a
+    job group, read once every job of the group has finished."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 10
+    while True:
+        infos = [tracker.getJobInfo(j)
+                 for j in tracker.getJobIdsForGroup(group)]
+        if all(i is not None and i.status in ("SUCCEEDED", "FAILED")
+               for i in infos) or time.monotonic() > deadline:
+            break
+        time.sleep(0.02)
+    stages = [tracker.getStageInfo(sid) for sid in sorted(
+        {sid for i in infos if i is not None for sid in i.stageIds})]
+    return [st.numTasks for st in stages if st is not None]
+
+
+@pytest.mark.parametrize("screen,contract", [
+    ("plane_a", {"type": "object", "required": ["k"],
+                 "properties": {"k": {"type": "integer", "minimum": 0}}}),
+    ("masked", {"type": "object",
+                "properties": {"k": {"type": "integer", "minimum": 0},
+                               "name": {"type": "string"}},
+                "anyOf": [{"required": ["k"]},
+                          {"properties": {"alias": {"type": "string"}},
+                           "required": ["alias"]}],
+                "unevaluatedProperties": False}),
+])
+def test_errors_path_python_parallelism(spark, screen, contract):
+    """The screened residue's iter_errors stage runs at the input's
+    partitioning (after _maybe_consolidate), not at whatever AQE makes
+    of a rebalance of a few-KB residue — which is ONE task, leaving the
+    whole Python pass on one core.  Pinned with statusTracker task
+    counts under a job group: exactly one stage, one task per input
+    partition, and one error row per invalid document."""
+    from jema_js_spark.validation.json_plane import (_maybe_consolidate,
+                                                     json_violation_rows)
+
+    src = spark.range(0, 400, 1, 4).selectExpr(
+        "id as i",
+        "concat('{\"k\":', if(id % 4 = 0, -1, id), '}') as doc")
+    parts = _maybe_consolidate(src).rdd.getNumPartitions()
+    assert parts == 4
+    group = f"errors-parallelism-{screen}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "errors path parallelism pin")
+    try:
+        rows = json_violation_rows(src, "doc", contract,
+                                   id_cols=["i"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r["i"] for r in rows) == list(range(0, 400, 4))
+    assert {r["keyword"] for r in rows} == {"minimum"}
+    assert _group_stage_tasks(spark, group) == [parts]
+
+
+def test_resubmitted_contract_copy_hits_route_bundle_memo(spark):
+    """Schema() injects "$schema" into the contract dict it is given,
+    so a memo keyed after that injection misses on a caller's fresh
+    copy of an equal contract whenever the analysis memo hit (and no
+    Schema() ran).  Every memo keys on the text taken before the
+    injection: fresh deep copies through both entry points add ONE
+    route-bundle entry."""
+    import copy
+
+    from jema_js_spark.validation import json_plane as jp
+
+    contract = {"$comment": "route-bundle memo pin", "type": "object",
+                "properties": {"k": {"type": "integer", "minimum": 0}}}
+    df = spark.createDataFrame([('{"k":1}',), ('{"k":-1}',)], "doc string")
+
+    def entries():
+        return sum(1 for k in jp._ROUTE_BUNDLE_CACHE
+                   if "route-bundle memo pin" in k[1])
+
+    jp.with_valid_json(df, "doc", copy.deepcopy(contract))
+    jp.with_valid_json(df, "doc", copy.deepcopy(contract))
+    jp.json_violation_rows(df, "doc", copy.deepcopy(contract))
+    assert entries() == 1
 
 
 def test_errors_path_masked_screen_output_identical(spark):

@@ -221,6 +221,52 @@ def test_depth_limits_are_clean_on_both_axes():
         rec.validate(deep_v)
 
 
+@pytest.mark.parametrize("shape,lo,hi", [
+    ("recursive_ref", 4500, 5500),
+    ("literal_nesting", 9000, 11000),
+])
+@pytest.mark.parametrize("path", ["validate", "iter_errors"])
+def test_depth_limit_thresholds_are_pinned(shape, lo, hi, path):
+    """Where DepthLimitExceeded first fires, per evaluator, in a bracket
+    (measured under the 20,000-frame budget: 4,998 levels against a
+    recursive $ref schema and 9,995 against a literally nested one, the
+    same on the fast boolean path and the generator path — a $ref hop
+    costs extra frames per level).  A rewrite of either evaluator that
+    moves the threshold out of its bracket must do so on purpose."""
+    import sys
+
+    from jema_js_spark.kernel.kernel import DepthLimitExceeded
+
+    def deep_value(n):
+        v = {}
+        for _ in range(n):
+            v = {"a": v}
+        return v
+
+    def deep_schema(n):
+        s = {"type": "object"}
+        for _ in range(n):
+            s = {"properties": {"a": s}}
+        return s
+
+    rec = {"$defs": {"n": {"properties": {"a": {"$ref": "#/$defs/n"}},
+                           "type": "object"}},
+           "$ref": "#/$defs/n"}
+
+    def run(n):
+        schema = Schema(rec if shape == "recursive_ref" else deep_schema(n))
+        v = Validator(schema)
+        doc = deep_value(n)
+        if path == "validate":
+            return v.validate(doc)
+        return not any(True for _ in v.iter_errors(doc))
+
+    assert sys.getrecursionlimit() < 20000   # the evaluators raise it
+    assert run(lo) is True
+    with pytest.raises(DepthLimitExceeded):
+        run(hi)
+
+
 class TestFastPlanConstantFolds:
     """Round 9: the fast-path per-vtype plans constant-fold ``type``
     checks (and ``format`` with assertion off) at plan time
@@ -258,6 +304,8 @@ class TestFastPlanConstantFolds:
         ({"properties": {"a": {"type": "string"}}}, {"a": 1}),
         ({"items": {"type": "integer"}}, [1, "x", 3]),
         ({"format": "email"}, "not an email"),   # annotation-only: folded true
+        ({"type": [["string"]]}, "x"),      # nested member list: no fold
+        ({"type": [["integer"], "null"]}, 5.0),
     ])
     def test_fold_verdict_and_residue_match_generator(self, schema, doc):
         fast, gen, f_res, g_res = self._both(schema, doc)
