@@ -287,11 +287,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # are the routed plane's oracle surface, so no present or
         # future auto cost-model policy (expected_docs hints,
         # recalibrated cutoffs) may ever divert them to the kernel.
-        # masked, not union: each union shape references its whole
-        # input plan twice, so stacking seven would re-reference the
-        # base subtree 2^7 times (the exponential stacked-union hazard
-        # the full-corpus route test documents); masked stacks
-        # linearly.  Verdicts are plane-independent (differentially
+        # masked stacks linearly: each shape references its input plan
+        # once.  Verdicts are plane-independent (differentially
         # pinned), so the oracle twins are unchanged.
         routed = with_valid_json(ev, "props", schema,
                                  col_name="valid_columnar",

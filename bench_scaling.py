@@ -36,8 +36,6 @@ import time
 
 PAGES_PARQUET = os.environ.get("SPARK_GRAFT_SCALE_PARQUET",
                                "/tmp/jema_scale_pages.parquet")
-DOCS_PARQUET = os.environ.get("SPARK_GRAFT_SCALE_DOCS_PARQUET",
-                              "/tmp/jema_scale_docs.parquet")
 N_PAGES = int(os.environ.get("SPARK_GRAFT_SCALE_PAGES", "20000000"))
 N_DOCS = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "4800000"))
 
@@ -124,53 +122,6 @@ t0 = time.perf_counter()
 res = run()
 print(json.dumps({"cpus": cpus, "sec": time.perf_counter() - t0,
                   "valid": res[0][0]}))
-spark.stop()
-'''
-
-
-_DOC_WRITER = r'''
-import sys
-from jema_js_spark.runtime.session import build_session
-from jema_js_spark.bench_contracts import representative_json_docs
-path, n = sys.argv[1], int(sys.argv[2])
-spark = build_session(app_name="docwriter", master="local[32]",
-                      shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-representative_json_docs(spark, n, num_partitions=96) \
-    .write.mode("overwrite").parquet(path)
-spark.stop()
-'''
-
-_SHAPE = r'''
-import json, sys, time
-from pyspark.sql import functions as F
-from jema_js_spark.runtime.session import build_session
-from jema_js_spark.validation.json_plane import with_valid_json
-from jema_js_spark.bench_contracts import REPRESENTATIVE_KERNEL_CONTRACT
-# plan-shape comparison on a SCAN-BOUND source (round 7, VERDICT r6 #2):
-# the docstring claim at json_plane.py — "union reads the source twice;
-# masked is the right shape when the scan is the bottleneck" — measured
-# instead of asserted.  The source is UNCACHED parquet, so every pass
-# pays scan + from_json parse per branch; the union shape pays that
-# twice (fast filter + residue filter), masked once plus an all-rows
-# null-masked Arrow projection.  OS page cache stays warm (shared box —
-# dropping it would spoil neighbors), so the measured union overhead is
-# parquet decode + parse, a LOWER bound on the gap against a cold
-# 100-TB object-store scan where the second pass re-pays real IO.
-cpus, path, shape = int(sys.argv[1]), sys.argv[2], sys.argv[3]
-spark = build_session(app_name=f"shape-{shape}-{cpus}",
-                      master=f"local[{cpus}]", shuffle_partitions=cpus)
-spark.sparkContext.setLogLevel("ERROR")
-df = spark.read.parquet(path)      # NOT cached: the scan IS the workload
-def run():
-    out = with_valid_json(df, "doc", REPRESENTATIVE_KERNEL_CONTRACT,
-                          plan_shape=shape)
-    return out.agg(F.sum(F.col("valid").cast("long"))).collect()
-run()                              # warm: JIT + Python workers + page cache
-t0 = time.perf_counter()
-res = run()
-print(json.dumps({"cpus": cpus, "shape": shape,
-                  "sec": time.perf_counter() - t0, "valid": res[0][0]}))
 spark.stop()
 '''
 
@@ -273,46 +224,6 @@ def main() -> None:
     r_eff_sub = (r_thr[8] / r_thr[2]) / 4
     r_eff = (r_thr[32] / r_thr[8]) / 4
 
-    # plan-shape comparison on an uncached parquet source (round 7,
-    # VERDICT r6 #2) — protocol notes in the _SHAPE script
-    if not os.path.exists(DOCS_PARQUET):
-        w = subprocess.run(
-            [sys.executable, "-c", _DOC_WRITER, DOCS_PARQUET, str(N_DOCS)],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True)
-        if w.returncode != 0:
-            raise RuntimeError(f"docs writer failed:\n{w.stderr[-2000:]}")
-    shapes = {s: best_of(_SHAPE, 32, DOCS_PARQUET, s, repeats=3)
-              for s in ("union", "masked")}
-    assert shapes["union"]["valid"] == shapes["masked"]["valid"]
-    masked_vs_union = shapes["union"]["sec"] / shapes["masked"]["sec"]
-    if masked_vs_union > 1.15:
-        shape_note = (
-            "Decision (round 8): masked wins decisively scan-bound AND "
-            "is the auto default for pure-Plane-A plans (robust across "
-            "residue rates — see the shape decomposition below); union "
-            "remains the auto choice for Plane-B-carrying plans "
-            "(CaseWhen-extracted Python UDFs would run per row under "
-            "masked) and the manual opt-in for ~100%-canonical cached "
-            "corpora.")
-    elif masked_vs_union >= 0.9:
-        shape_note = (
-            "Decision (round 7): a WASH at this scale — the union's "
-            "second decode+parse pass and masked's all-rows null-masked "
-            "Arrow projection cost about the same against a warm page "
-            "cache (masked led 1.48x at 100k-doc batches on local[8], "
-            "where the union's per-branch fixed floors dominate).  "
-            "union stays the auto default (keeps r6 comparability and "
-            "wins when the source is cached); masked remains the "
-            "documented opt-in for genuinely cold object-store scans, "
-            "where the second pass re-pays real IO that this box's page "
-            "cache hides, and for small per-batch row counts.")
-    else:
-        shape_note = (
-            "Decision: union stays the auto default — it beats masked "
-            "even when the second pass re-decodes uncached parquet; "
-            "masked remains the opt-in for cold-IO single-pass sources.")
-
     ctrl_runs = [_mp_control(), _mp_control()]
     ctrl = {k: min(r[k] for r in ctrl_runs) for k in ("sec8", "sec32")}
     ctrl_eff = (ctrl["sec8"] / ctrl["sec32"]) / 4
@@ -379,30 +290,19 @@ without a hint auto assumes the 100-TB large-batch regime.
         if cal.get("shape_decomposition"):
             srows = "\n".join(
                 f"| {r['stream']} | {r['kernel_sec']} | {r['masked_sec']} "
-                f"({r['masked_vs_kernel']}×) | {r['union_sec']} "
-                f"({r['union_vs_kernel']}×) |"
+                f"({r['masked_vs_kernel']}×) |"
                 for r in cal["shape_decomposition"])
             cal_md += f"""
 Shape decomposition per stream class (representative contract,
 {cal['contract_sweep_docs']:,} docs; ×-ratios are vs the pure kernel
-plane, >1 = shape wins):
+plane, >1 = the routed plan wins):
 
-| stream | kernel sec | masked sec | union sec |
-|---|---|---|---|
+| stream | kernel sec | masked sec |
+|---|---|---|
 {srows}
 
-The union shape's residue path costs 4-5× the pure kernel per row
-(the wasted parse + gate evaluation + the full-residue rebalance
-shuffle), so union LOSES on any residue-heavy or mixed stream while
-masked stays robust — the round-8 default flip: `plan_shape="auto"`
-resolves to masked for pure-Plane-A compiled plans; Plane-B-carrying
-plans keep union (Catalyst extracts Python UDFs from CaseWhen
-branches and runs them per row — masked would pay the embedded
-kernel check on every row), and union stays the manual opt-in for
-~100%-canonical corpora (zero Python on healthy partitions, ~1.1× on
-all-canonical).  The route verdict is also materialized as a
-generated attribute so the gate tree evaluates once per row, not once
-per consumer.
+The route verdict is materialized as a generated attribute so the
+gate tree evaluates once per row, not once per consumer.
 """
     except FileNotFoundError:
         pass
@@ -458,10 +358,9 @@ number is the honest single-box proxy for the N→4N executor criterion.
 ## Scaling, routed JSON plane (with_valid_json, the auto default)
 
 The SAME representative contract + document stream as the kernel
-levels, through the routed plane's AUTO plan (round 8: the masked
-shape for this pure-Plane-A plan — one parse, round-trip shortcut →
-Plane-A predicates, kernel UDF input nulled on routed rows, no
-shuffle):
+levels, through the routed plane's AUTO plan (the masked shape —
+one parse, round-trip shortcut → Plane-A predicates, kernel UDF input
+nulled on routed rows, no shuffle):
 
 | level | docs | wall sec | docs/sec | vs kernel |
 |---|---|---|---|---|
@@ -475,21 +374,6 @@ N→4N efficiency, 2→8 threads: **{r_eff_sub:.3f}**; 8→32:
 level) — the per-level ratio the bench's json_columnar/kernel_json
 entries approximate under ambient noise.
 
-## Plan shapes on a scan-bound source (round 7, VERDICT r6 #2)
-
-``with_valid_json``'s two plan shapes over {N_DOCS:,} representative
-docs read from UNCACHED parquet at local[32] (MIN-of-3, fresh
-subprocess per run, warm OS page cache — so the union's second pass
-re-pays parquet decode + ``from_json`` parse but not cold IO; against
-a cold object store the gap below is a LOWER bound):
-
-| shape | wall sec | docs/sec |
-|---|---|---|
-| union (two filtered scans, residue rebalanced) | {shapes['union']['sec']:.2f} | {N_DOCS / shapes['union']['sec']:,.0f} |
-| masked (one scan + all-rows null-masked Arrow projection) | {shapes['masked']['sec']:.2f} | {N_DOCS / shapes['masked']['sec']:,.0f} |
-
-union/masked: **{masked_vs_union:.2f}** (>1 = masked faster on this
-source).  {shape_note}
 {cal_md}
 ## Machine controls
 
@@ -616,9 +500,6 @@ are the measured engine baselines for future rounds.
         "route_efficiency": round(r_eff_sub, 3),
         "route_vs_kernel_8": round(kernel[8]["sec"] / route[8]["sec"], 2),
         "route_vs_kernel_32": round(kernel[32]["sec"] / route[32]["sec"], 2),
-        "shape_union_sec": round(shapes["union"]["sec"], 2),
-        "shape_masked_sec": round(shapes["masked"]["sec"], 2),
-        "masked_vs_union": round(masked_vs_union, 2),
         "control_efficiency": round(ctrl_eff, 3),
         "pages_per_sec_32": round(thr(col[32]["rows"], col[32]["sec"])),
         "kernel_docs_per_sec_32": round(k_thr[32]),

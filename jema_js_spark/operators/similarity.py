@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jema_js_spark.runtime.colcache import cached_column
+
 __all__ = ["dot", "l2_norm", "cosine_sim", "brute_force_topk",
            "fit_centroids", "ivf_assign", "ivf_topk", "embedding_near_dups"]
 
@@ -157,34 +159,20 @@ def fit_centroids(corpus: DataFrame, nlist: int = 16, vec_col: str = "embedding"
     return centroids.tolist()
 
 
-# Round 9: session-scoped memo of the centroid-scoring Column.  The
-# expression embeds nlist array literals (one per unit centroid) and
-# 2·nlist lambda builders; constructing it measured ~0.9 s of pure
-# driver time PER CALL for 16×64 centroids — dominating ivf_topk's
-# wall at bench scale.  The Column is an immutable expression tree
-# addressed by the vector column name, reusable across queries; the
-# applicationId in the key retires handles from stopped sessions.
-_BEST_CENT_CACHE: dict = {}
-_BEST_CENT_CAP = 32
-
-
+# Round 9: session-scoped memo of the centroid-scoring Column
+# (runtime/colcache.py).  The expression embeds nlist array literals
+# (one per unit centroid) and 2·nlist lambda builders; constructing it
+# measured ~0.9 s of pure driver time PER CALL for 16×64 centroids —
+# dominating ivf_topk's wall at bench scale.  The Column is an
+# immutable expression tree addressed by the vector column name,
+# reusable across queries.
 def _best_centroids(vec: Column, centroids: List[List[float]], n: int,
                     vec_name: Optional[str] = None) -> Column:
-    if vec_name is not None:
-        from pyspark.sql import SparkSession
-        sess = SparkSession.getActiveSession()
-        app = sess.sparkContext.applicationId if sess is not None else None
-        key = (app, vec_name, n,
-               tuple(tuple(float(x) for x in c) for c in centroids))
-        hit = _BEST_CENT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        col = _best_centroids_build(vec, centroids, n)
-        if len(_BEST_CENT_CACHE) >= _BEST_CENT_CAP:
-            _BEST_CENT_CACHE.clear()
-        _BEST_CENT_CACHE[key] = col
-        return col
-    return _best_centroids_build(vec, centroids, n)
+    key = None if vec_name is None else (
+        "similarity.best_centroids", vec_name, n,
+        tuple(tuple(float(x) for x in c) for c in centroids))
+    return cached_column(
+        key, lambda: _best_centroids_build(vec, centroids, n))
 
 
 def _best_centroids_build(vec: Column, centroids: List[List[float]],

@@ -17,9 +17,9 @@ contracts lose on the route.  The committed artifact
 default under ambient load): trivial 2-property 1.0×, five
 properties 1.05×, ten 1.08×, array+enum 1.21×, nested 1.15×,
 unevaluated* 1.14×, $ref-chain 1.27×, representative Plane-B
-contract 1.74× — ≥ parity on every grade; the quiet-box union-shape
-sweep of the same grades read higher still (1.13-2.2× light incl.
-1KB docs 2.21×, representative 2.13×).  The route wins wherever
+contract 1.74× — ≥ parity on every grade; a quiet-box sweep of the
+same grades read higher still (1.13-2.2× light incl. 1KB docs 2.21×,
+representative 2.13×).  The route wins wherever
 documents take the round-trip shortcut.  The round-7 "0.7-0.9×
 trivial loss" decomposes into the two regimes the routed plan
 actually has:
@@ -36,10 +36,7 @@ actually has:
    not statically derivable, so the decision takes an
    ``expected_docs`` hint (streaming microbatches and small lookups
    pass it; the 100-TB default is the large-batch regime) against
-   ONE calibrated cutoff.  (The union opt-in has a different profile
-   — near-zero floor on all-conforming data, catastrophic on
-   residue-heavy data — see the shape decomposition in
-   BENCH/route_cost_calibration.json.)
+   ONE calibrated cutoff.
 2. **Shortcut-miss-heavy data**: documents that systematically fail
    the ``to_json`` round-trip equality pay parse + re-render + a
    second (variant) parse per row — measured 0.68-0.84× when EVERY
@@ -64,9 +61,9 @@ small-batch floor tracking residue rate rather than contract weight
 win MAGNITUDE (trivial score 2.85 → 1.48×; representative score
 34.5 → 2.13×), i.e. how much a pipeline loses by opting out.
 
-``plan_shape="union"/"masked"`` remain the explicit force-route
-opt-ins, ``plan_shape="kernel"`` the force-kernel opt-out; only
-``"auto"`` consults this model.
+``plan_shape="masked"`` remains the explicit force-route opt-in,
+``plan_shape="kernel"`` the force-kernel opt-out; only ``"auto"``
+consults this model.
 """
 
 from __future__ import annotations

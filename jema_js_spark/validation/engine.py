@@ -22,38 +22,34 @@ map-side-combinable aggregation keyed by ``spark_partition_id()``.
 from __future__ import annotations
 
 import json
-from typing import Dict, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jema_js_spark.compiler.compile import CompiledPlan, SchemaCompiler
+from jema_js_spark.runtime.colcache import cached_column
 from jema_js_spark.schema.frontend import Schema
 
 __all__ = ["compile_for", "with_valid", "violation_rows",
            "partition_verdicts", "validation_report"]
 
-# Round 9: session-scoped compiled-plan memo.  Compiling a contract is
-# driver-side py4j expression construction — hundreds of JVM round
-# trips — and was paid on EVERY with_valid/violation_rows call even
-# for an unchanged (schema, input-shape) pair.  A CompiledPlan is a
-# bundle of immutable Column expression trees addressed by field name,
-# so it is reusable across any DataFrame with the same schema in the
-# same Spark application (the applicationId in the key retires handles
+# Round 9: session-scoped compiled-plan memo (runtime/colcache.py).
+# Compiling a contract is driver-side py4j expression construction —
+# hundreds of JVM round trips — and was paid on EVERY
+# with_valid/violation_rows call even for an unchanged (schema,
+# input-shape) pair.  A CompiledPlan is a bundle of immutable Column
+# expression trees addressed by field name, so it is reusable across
+# any DataFrame with the same schema in the same Spark application
+# (colcache scopes every key to the applicationId, retiring handles
 # from stopped sessions).  This caches plan CONSTRUCTION only — every
 # query still builds a fresh DataFrame lineage and recomputes from its
-# inputs.  Bounded: cleared wholesale when it outgrows _CACHE_CAP
-# (corpus sweeps compile thousands of distinct schemas; the steady
-# state of a real deployment is a handful).
-_COMPILE_CACHE: Dict[tuple, CompiledPlan] = {}
-_CACHE_CAP = 64
-
-
+# inputs.
 def _compile_key(df: DataFrame, schema, format_assertion: bool):
     if not isinstance(schema, (dict, bool)):
         return None        # Schema instances may carry registries; skip
     try:
-        return (df.sparkSession.sparkContext.applicationId,
+        return ("engine.compile_for",
                 json.dumps(schema, sort_keys=True),
                 format_assertion,
                 df.schema.json())
@@ -63,18 +59,10 @@ def _compile_key(df: DataFrame, schema, format_assertion: bool):
 
 def compile_for(df: DataFrame, schema, format_assertion: bool = False
                 ) -> CompiledPlan:
-    key = _compile_key(df, schema, format_assertion)
-    if key is not None:
-        plan = _COMPILE_CACHE.get(key)
-        if plan is not None:
-            return plan
-    plan = SchemaCompiler(schema,
-                          format_assertion=format_assertion).compile_plan(df)
-    if key is not None:
-        if len(_COMPILE_CACHE) >= _CACHE_CAP:
-            _COMPILE_CACHE.clear()
-        _COMPILE_CACHE[key] = plan
-    return plan
+    return cached_column(
+        _compile_key(df, schema, format_assertion),
+        lambda: SchemaCompiler(
+            schema, format_assertion=format_assertion).compile_plan(df))
 
 
 def with_valid(df: DataFrame, schema, col_name: str = "valid",

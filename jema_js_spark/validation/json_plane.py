@@ -55,35 +55,17 @@ This module routes each row at runtime, entirely JVM-side:
 4. Every other row (malformed JSON, duplicate keys — ``try_parse_json``
    nulls both — non-objects, extra keys, JSON-null-valued fields,
    wrong-typed fields, numeric-exactness hazards) takes the kernel UDF,
-   which is always right.  Two plan shapes deliver this split:
-
-   - ``union`` (default): two filters over the source, fast ∪ slow,
-     with the slow subset **rebalanced** (AQE shuffle) before its
-     Python stage — the residue shuffle moves only non-conforming rows
-     (tiny on a healthy corpus) and collapses near-empty partitions so
-     the per-task Python worker handshake isn't paid by partitions
-     that routed everything columnar.  Python touches ONLY residue
-     rows.  Measured round 6 (same-harness MIN-of-3 per level,
-     bench_scaling.py, quiet box): 3.0-4.3× over the kernel on the
-     representative stream (4.32× at 2 threads/1.2M docs, 3.40× at
-     8/4.8M, 3.05× at 32/4.8M; ~1.07M docs/s at 32 threads);
-     floor-dominated 1M-doc interleaved pairs under ambient load
-     read 1.6-2.1×.
-   - ``masked`` (opt-in): ONE pass over the source; the kernel UDF is
-     projected for every row (an ArrowEvalPython node cannot be
-     skipped per-row) but its input is masked to SQL NULL for routed
-     rows, and the UDF's null fast path (kernel_udf.py) vector-fills
-     those in one validate call per batch.  Measured on an UNCACHED
-     parquet source (round 7, bench_scaling.py plan-shape section):
-     a wash at scale against a warm page cache (masked 5.19 s vs
-     union 5.34 s at 4.8M docs/local[32] — the union's second
-     decode+parse pass ≈ masked's all-rows Arrow projection), masked
-     1.48× ahead at 100k-doc batches on local[8] where the union's
-     per-branch fixed floors dominate.  On a CACHED source union wins
-     (1.16 s vs 1.97 s at 1M docs — the projection floor is ~0.9 s at
-     1M×96 tasks even for null input).  masked is the right opt-in
-     for genuinely cold object-store scans (the page cache hides the
-     union's re-paid IO here) and small per-batch row counts.
+   which is always right.  ONE plan shape (``masked``) delivers this
+   split in a single pass over the source: the kernel UDF is projected
+   for every row (an ArrowEvalPython node cannot be skipped per-row)
+   but its input is masked to SQL NULL for routed rows, and the UDF's
+   null fast path (kernel_udf.py) vector-fills those in one validate
+   call per batch — no shuffle, no second scan.  A fast ∪ slow split
+   (two filters, the residue shuffled before its Python stage) measured
+   1.3-2.0× slower than this shape in every run (local[4] on 4 vCPUs,
+   100k-400k docs), Plane-B-carrying contracts included: the Python
+   stage costs per row and per task, so a second scan and a shuffle
+   placed in front of it do not pay for themselves.
 
 Routing gates that protect exact kernel parity (each has a
 differential test in tests/test_json_plane.py):
@@ -126,6 +108,7 @@ from pyspark.sql import types as T
 from jema_js_spark.compiler.compile import (CompiledPlan, SchemaCompiler,
                                             _dynamic_scope_hazard,
                                             variant_tag_affine)
+from jema_js_spark.runtime.colcache import cached_column
 from jema_js_spark.schema.frontend import Schema
 
 __all__ = ["analyze_json_contract", "with_valid_json",
@@ -263,13 +246,6 @@ _MAX_NEST = 12
 # budget bounds compiled-plan size, not just analysis time).
 _MAX_UNROLL_SLOTS = 64
 _BUDGET_FREE_DEPTH = 3
-
-# streaming residue floor (round 7): the union shape's kernel branch is
-# repartitioned to this many partitions per microbatch — enough to keep
-# a few Python workers busy on a residue-heavy batch, small enough that
-# a near-empty residue doesn't pay the per-task Arrow handshake once
-# per source partition
-_STREAM_RESIDUE_PARTITIONS = 4
 
 
 def _node_dtype(node: Tuple[str, Any]) -> T.DataType:
@@ -1215,45 +1191,34 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
     wins on EVERY graded contract class — 1.13-2.2× on light
     contracts, 2.7-4.3× on kernel-heavy ones — so auto routes every
     routable contract by default.  The kernel's winning regime is
-    SMALL BATCHES: the default masked plan pays the all-rows
-    Python-wave handshake whatever the data, so below
+    SMALL BATCHES: the routed plan pays the all-rows Python-wave
+    handshake whatever the data, so below
     ``cost_model.SMALL_BATCH_DOCS`` (calibrated ~5×10^5 on local[32])
     the kernel's single stage wins — pass ``expected_docs`` (e.g. a
-    streaming microbatch's typical size) and auto picks it.  A second, data-dependent slow case the static
-    model only flags (``plan_choice(...)["shortcut_sensitive"]``):
-    documents that systematically miss the ``to_json`` round-trip
-    proof (integer-form tokens in a ``number``-typed slot) pay the
-    gate path per row — correct verdicts, measured 0.68× when every
-    doc misses; watch ``route_col``/ledger metrics and opt out with
+    streaming microbatch's typical size) and auto picks it.  A second,
+    data-dependent slow case the static model only flags
+    (``plan_choice(...)["shortcut_sensitive"]``): documents that
+    systematically miss the ``to_json`` round-trip proof (integer-form
+    tokens in a ``number``-typed slot) pay the gate path per row —
+    correct verdicts, measured 0.68× when every doc misses; watch
+    ``route_col``/ledger metrics and opt out with
     ``plan_shape="kernel"`` if the live data hits it.
 
-    Routed plan shape (round 8: auto resolves to ``"masked"`` for
-    pure-Plane-A compiled plans, ``"union"`` for Plane-B-carrying
-    ones): ``"masked"`` is one pass — kernel UDF input masked to NULL
-    on routed rows — no shuffle, single scan.  ``"union"`` (fast ∪
-    slow filters, residue rebalanced before its Python stage) touches
-    Python only on residue rows, but its residue path costs 4-5× the
-    kernel plane per row (wasted parse + the full-residue rebalance
-    shuffle): the round-8 stream decomposition measured union 0.51×
-    vs the PURE KERNEL on the 80%-conforming mixed stream while
-    masked won 1.14-1.47×, and union ahead only on an all-canonical
-    stream (~1.1×, the per-partition Python handshake it avoids).
-    Robust beats best-case at 100 TB, so auto = masked — EXCEPT when
-    the compiled plan carries Plane-B checks (variant nets, whole-node
-    unevaluated gates, recursive-tail nets): Catalyst extracts Python
-    UDFs out of CaseWhen branches and runs them per ROW, so masked
-    would pay the embedded kernel check on every row where union's
-    fast filter isolates it to routed rows — those plans take union.
-    ``"union"`` is also the manual opt-in for corpora known ~100%
-    canonical (it keeps healthy partitions entirely JVM-side — no
-    Python worker memory).  ``"kernel"`` forces the kernel UDF on
-    every row (skips the routing analysis entirely).
+    The routed plan has one shape, ``"masked"`` (see the module
+    docstring): one pass, kernel UDF input masked to NULL on routed
+    rows, no shuffle, single scan.  Catalyst extracts Python UDFs out
+    of CaseWhen branches, so a compiled plan carrying Plane-B checks
+    (variant nets, whole-node unevaluated gates, recursive-tail nets)
+    runs them on every row; measured, that still beats splitting the
+    rows into a fast and a slow branch.  ``"masked"`` forces the route
+    even under a small ``expected_docs`` hint; ``"kernel"`` forces the
+    kernel UDF on every row (skips the routing analysis entirely).
 
     Verdict-equivalent to ``kernel_validate_udf(schema)(json_col)`` on
     every row (differentially pinned in tests/test_json_plane.py)."""
     from jema_js_spark.validation.kernel_udf import kernel_validate_udf
 
-    if plan_shape not in ("auto", "masked", "union", "kernel"):
+    if plan_shape not in ("auto", "masked", "kernel"):
         raise ValueError(f"unknown plan_shape {plan_shape!r}")
     df = _maybe_consolidate(df)
     contract_json = _contract_json(schema)
@@ -1292,86 +1257,25 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
             out = out.withColumn(route_col, F.lit("kernel"))
         return out
 
-    cache_key = _route_bundle_key(df, json_col, contract_json,
+    cache_key = _route_bundle_key(json_col, contract_json,
                                   format_assertion)
     b3, route, compiled, work = _routing_pieces(
         df, json_col, schema, plan, format_assertion, cache_key=cache_key)
     doc = F.col(json_col)
 
-    # auto shape (round 8): masked for pure-Plane-A compiled plans —
-    # the robust default (see the docstring).  A plan CARRYING Plane-B
-    # checks must take the union shape: Catalyst extracts Python UDFs
-    # out of CaseWhen branches and evaluates them per ROW, so under
-    # masked a variant-net/whole-node kernel check would run on every
-    # row (routed or not) instead of only the routed rows the union's
-    # fast filter isolates.
-    if plan_shape == "auto":
-        shape = "masked" if all(c.plane == "A" for c in compiled.checks) \
-            else "union"
-    else:
-        shape = plan_shape
-
-    if shape == "masked":
-        import json as _json
-        mkey = (cache_key, _json.dumps(remotes, sort_keys=True)
-                if remotes else None) if cache_key is not None else None
-        masked = _MASKED_EXPR_CACHE.get(mkey) if mkey is not None else None
-        if masked is None:
-            masked = F.when(
-                route, compiled.valid_column()).otherwise(
-                F.coalesce(kernel_pred(F.when(~route, doc)), F.lit(False)))
-            if mkey is not None:
-                if len(_MASKED_EXPR_CACHE) >= _ROUTE_CACHE_CAP:
-                    _MASKED_EXPR_CACHE.clear()
-                _MASKED_EXPR_CACHE[mkey] = masked
-        out = b3.withColumn(col_name, masked)
-        if route_col:
-            out = out.withColumn(route_col, F.when(
-                route, F.lit("columnar")).otherwise(F.lit("kernel")))
-        return out.drop(*work)
-
-    fast = (b3.filter(route)
-            .withColumn(col_name, compiled.valid_column())
-            .drop(*work))
-    # residue rebalance (round 6): shuffles ONLY non-conforming rows
-    # (working columns dropped first — the struct/variant never ship),
-    # so near-empty residue partitions coalesce under AQE and the
-    # Python worker handshake isn't paid 96× for nothing.  Measured:
-    # 2.05 s → 1.16 s at 1M all-conforming docs.  Streaming plans (AQE
-    # does not apply to microbatches) instead repartition the residue
-    # to a small fixed floor (round 7, VERDICT r6 #6): without it every
-    # microbatch pays the ~10 ms/task ArrowEvalPython handshake once
-    # per SOURCE partition on near-empty residue.  repartition, not
-    # coalesce: coalesce would collapse the residue FILTER itself into
-    # N tasks (it merges upstream), while this shuffle moves only the
-    # residue rows and keeps the scan/gate work at full parallelism.
-    slow = b3.filter(~route).drop(*work)
-    if not slow.isStreaming:
-        slow = slow.hint("rebalance")
-    else:
-        slow = slow.repartition(_STREAM_RESIDUE_PARTITIONS)
-    slow = slow.withColumn(
-        col_name, F.coalesce(kernel_pred(doc), F.lit(False)))
+    import json as _json
+    mkey = None if cache_key is None else (
+        "json_plane.masked", cache_key,
+        _json.dumps(remotes, sort_keys=True) if remotes else None)
+    masked = cached_column(mkey, lambda: F.when(
+        route, compiled.valid_column()).otherwise(
+        F.coalesce(kernel_pred(F.when(~route, doc)), F.lit(False))))
+    out = b3.withColumn(col_name, masked)
     if route_col:
-        fast = fast.withColumn(route_col, F.lit("columnar"))
-        slow = slow.withColumn(route_col, F.lit("kernel"))
-    return fast.unionByName(slow)
+        out = out.withColumn(route_col, F.when(
+            route, F.lit("columnar")).otherwise(F.lit("kernel")))
+    return out.drop(*work)
 
-
-# Round 9: session-scoped route-expression memo.  Building the routed
-# plan's expression trees (parse struct, round-trip guards, sentinel
-# wrap, variant gates, compiled Plane-A plan) is driver-side py4j work
-# measured at ~0.6 s per with_valid_json call for the representative
-# contract — paid per QUERY even when the (contract, column) pair is
-# unchanged.  The bundle is df-independent (every expression addresses
-# the input by column name and the generated __j* attributes), so it is
-# reusable across DataFrames within one Spark application.  Caches
-# expression CONSTRUCTION only — each query still builds a fresh
-# DataFrame lineage and recomputes from its inputs.  Only plain-dict
-# contracts are cached (a caller-supplied Schema may carry a registry
-# whose remote documents the compiled Plane-B fallbacks embed).
-_ROUTE_BUNDLE_CACHE: Dict[tuple, dict] = {}
-_ROUTE_CACHE_CAP = 64
 
 # Small-partition consolidation for Python-stage plans (round 9).  An
 # ArrowEvalPython task costs ~8 ms of fixed per-task overhead
@@ -1404,17 +1308,24 @@ def _maybe_consolidate(df: DataFrame) -> DataFrame:
                  size // _CONSOLIDATE_TARGET_BYTES + 1)
     return df.coalesce(target)   # no-op when target >= current partitions
 
-# (schema-json, format_assertion) → (Schema, JsonColumnPlan): the pure-
-# Python contract analysis is deterministic in its inputs; one shared
-# Schema instance also keeps the kernel's id()-keyed node plans warm
-_ANALYZE_CACHE: Dict[tuple, tuple] = {}
 
-# (bundle key, remotes-json) → the masked-shape verdict Column (its
-# construction registers the kernel UDF with the JVM — the most
-# expensive single py4j call in the masked plan build)
-_MASKED_EXPR_CACHE: Dict[tuple, Any] = {}
-
-
+# Round 9: session-scoped memos (runtime/colcache.py).  Building the
+# routed plan's expression trees (parse struct, round-trip guards,
+# sentinel wrap, variant gates, compiled Plane-A plan) is driver-side
+# py4j work measured at ~0.6 s per with_valid_json call for the
+# representative contract — paid per QUERY even when the (contract,
+# column) pair is unchanged.  The route bundle is df-independent (every
+# expression addresses the input by column name and the generated __j*
+# attributes), so it is reusable across DataFrames within one Spark
+# application; so is the masked verdict Column (its construction
+# registers the kernel UDF with the JVM — the most expensive single
+# py4j call in the plan build) and the pure-Python contract analysis
+# (one shared Schema instance also keeps the kernel's id()-keyed node
+# plans warm).  Caches expression CONSTRUCTION only — each query still
+# builds a fresh DataFrame lineage and recomputes from its inputs.
+# Only plain-dict contracts are cached (a caller-supplied Schema may
+# carry a registry whose remote documents the compiled Plane-B
+# fallbacks embed).
 def _contract_json(raw_schema) -> Optional[str]:
     """Memo key text of a plain contract.  Take it once per call, before
     any ``Schema()`` injects ``"$schema"`` into the dict (schema.js:37),
@@ -1430,26 +1341,22 @@ def _contract_json(raw_schema) -> Optional[str]:
 
 def _cached_analysis(raw_schema, contract_json: Optional[str],
                      format_assertion: bool):
-    key = (contract_json, format_assertion)
-    if contract_json is not None:
-        hit = _ANALYZE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    schema = Schema(raw_schema)
-    plan = analyze_json_contract(schema, format_assertion=format_assertion)
-    if contract_json is not None:
-        if len(_ANALYZE_CACHE) >= _ROUTE_CACHE_CAP:
-            _ANALYZE_CACHE.clear()
-        _ANALYZE_CACHE[key] = (schema, plan)
-    return schema, plan
+    def build():
+        schema = Schema(raw_schema)
+        return schema, analyze_json_contract(
+            schema, format_assertion=format_assertion)
+
+    key = None if contract_json is None else (
+        "json_plane.analyze", contract_json, format_assertion)
+    return cached_column(key, build)
 
 
-def _route_bundle_key(df: DataFrame, json_col: str,
-                      contract_json: Optional[str], format_assertion: bool):
+def _route_bundle_key(json_col: str, contract_json: Optional[str],
+                      format_assertion: bool):
     if contract_json is None:
         return None
-    return (df.sparkSession.sparkContext.applicationId, contract_json,
-            format_assertion, json_col)
+    return ("json_plane.route_bundle", contract_json, format_assertion,
+            json_col)
 
 
 def _routing_pieces(df: DataFrame, json_col: str, schema: Schema,
@@ -1469,14 +1376,8 @@ def _routing_pieces(df: DataFrame, json_col: str, schema: Schema,
             "rename or drop them on the input")
 
     work = ["__jp", "__jsc", "__jw", "__jv", "__jr"]
-    bundle = _ROUTE_BUNDLE_CACHE.get(cache_key) \
-        if cache_key is not None else None
-    if bundle is None:
-        bundle = _route_bundle(json_col, schema, plan, format_assertion)
-        if cache_key is not None:
-            if len(_ROUTE_BUNDLE_CACHE) >= _ROUTE_CACHE_CAP:
-                _ROUTE_BUNDLE_CACHE.clear()
-            _ROUTE_BUNDLE_CACHE[cache_key] = bundle
+    bundle = cached_column(cache_key, lambda: _route_bundle(
+        json_col, schema, plan, format_assertion))
     b4 = (df.select("*", bundle["jp"])
           .select("*", bundle["jsc"])
           .select("*", bundle["jw"])
@@ -1695,9 +1596,9 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     full_gates = functools.reduce(lambda a, b: a & b, gates)
     # shortcut hits skip the gate chain entirely (CaseWhen-lazy).  The
     # route verdict is then MATERIALIZED as a generated attribute
-    # (round 8): every plan shape references `route` twice (the two
-    # union filters / the masked CaseWhen + kernel-input mask), and
-    # Catalyst re-inlines the gate expression tree into each reference
+    # (round 8): the masked plan references `route` twice (the
+    # CaseWhen + the kernel-input mask), and Catalyst re-inlines the
+    # gate expression tree into each reference
     # — on gate-path rows that re-ran schema_of_variant/_reprable
     # trees per consumer (part of the measured 4-5× residue-stream
     # overhead, BENCH/route_cost_calibration.json).
@@ -1781,7 +1682,7 @@ def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
     if plan.routable:
         b3, route, compiled, work = _routing_pieces(
             base, json_col, schema, plan, format_assertion,
-            cache_key=_route_bundle_key(base, json_col, contract_json,
+            cache_key=_route_bundle_key(json_col, contract_json,
                                         format_assertion))
         if compiled.coverage()["plane_b_checks"] == 0:
             residue = b3.filter(~(route & F.coalesce(

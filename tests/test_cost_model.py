@@ -153,12 +153,9 @@ def test_auto_picks_kernel_under_small_batch_hint(spark):
 
 
 def test_explicit_shapes_override_the_hint(spark):
-    """plan_shape="union"/"masked" force the route even under a
-    small-batch hint — the oracle surfaces and scan-bound opt-ins
-    depend on it."""
+    """plan_shape="masked" forces the route even under a small-batch
+    hint — the oracle surfaces depend on it."""
     df = spark.createDataFrame([('{"k":1,"name":"a"}',)], "doc string")
-    for shape in ("union", "masked"):
-        out = with_valid_json(df, "doc", TRIVIAL, route_col="route",
-                              plan_shape=shape,
-                              expected_docs=10).collect()
-        assert out[0]["route"] == "columnar", (shape, out)
+    out = with_valid_json(df, "doc", TRIVIAL, route_col="route",
+                          plan_shape="masked", expected_docs=10).collect()
+    assert out[0]["route"] == "columnar", out

@@ -137,7 +137,7 @@ def _kernel_verdicts(contract, docs):
     return out
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 @pytest.mark.parametrize("contract,docs", [
     (CONTRACT, HOSTILE_DOCS),
     (NUM_CONTRACT, NUM_DOCS),
@@ -182,7 +182,7 @@ ROUNDTRIP_HAZARDS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 def test_roundtrip_shortcut_hazards(spark, shape):
     df = spark.createDataFrame([(d,) for d in ROUNDTRIP_HAZARDS],
                                "doc string")
@@ -513,14 +513,14 @@ MAP_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 @pytest.mark.parametrize("contract", MAP_CONTRACTS,
                          ids=[str(i) for i in range(len(MAP_CONTRACTS))])
 def test_map_route_matches_kernel(spark, contract, shape):
     """Round 6 (VERDICT r5 #6): dynamic-key contracts
     (patternProperties / propertyNames / additionalProperties with one
     value type) route via map<string,T> extraction — every verdict
-    equals the kernel's, on both plan shapes, against duplicate keys,
+    equals the kernel's, on the routed shape, against duplicate keys,
     JSON-null values (map to_json RENDERS those — gated), huge
     integers, off-type values, and non-objects."""
     plan = analyze_json_contract(contract)
@@ -609,28 +609,6 @@ def test_json_violation_rows_map_contract(spark):
         expected = sorted(e.message for e in v.iter_errors(json.loads(d)))
         assert sorted(m for _, m in got[i]) == expected, (i, got[i])
     assert got[4] == [("__parse__", "document is not parseable JSON")]
-
-
-def test_union_shape_python_only_on_residue(spark):
-    """Physical-plan pin for the union opt-in (round 8: auto = masked;
-    union remains the zero-Python-on-healthy-data shape): exactly ONE
-    Python node, sitting below the residue's rebalance Exchange — the
-    fast branch validates with zero Python."""
-    from jema_js_spark.bench_contracts import REPRESENTATIVE_KERNEL_CONTRACT
-
-    df = spark.createDataFrame([('{"k":1,"name":"user1","xs":[1,2,3]}',)],
-                               ["doc"])
-    out = with_valid_json(df, "doc", REPRESENTATIVE_KERNEL_CONTRACT,
-                          plan_shape="union")
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("simple"))
-    assert plan.count("ArrowEvalPython") == 1, plan
-    # the Python node's DIRECT child is the rebalance Exchange: Python
-    # runs on post-shuffle residue partitions, never on the scan side
-    # (round-6 review find: the previous or-form was a tautology)
-    import re
-    assert re.search(r"ArrowEvalPython[^\n]*\n[^\n]*Exchange", plan), plan
 
 
 def test_formatting_perturbation_fuzz(spark):
@@ -730,13 +708,13 @@ def test_mixed_value_types_fall_through_to_struct_mode(spark):
     assert routes['{"id":"ab","z":3}'] == "kernel"    # extra key
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 def test_plane_b_compiled_contract_both_shapes(spark, shape):
     """A routable contract whose COMPILED plan still carries Plane-B
     checks (uncovered unevaluatedProperties claims → whole-node kernel
-    fallback): verdicts stay kernel-exact on both plan shapes — the
-    masked shape runs the embedded kernel check per row (documented
-    cost), never a different answer."""
+    fallback): verdicts stay kernel-exact — the masked shape runs the
+    embedded kernel check per row (documented cost), never a different
+    answer."""
     from jema_js_spark.compiler.compile import SchemaCompiler
 
     contract = {
@@ -892,6 +870,7 @@ def test_resubmitted_contract_copy_hits_route_bundle_memo(spark):
     route-bundle entry."""
     import copy
 
+    from jema_js_spark.runtime import colcache
     from jema_js_spark.validation import json_plane as jp
 
     contract = {"$comment": "route-bundle memo pin", "type": "object",
@@ -899,8 +878,10 @@ def test_resubmitted_contract_copy_hits_route_bundle_memo(spark):
     df = spark.createDataFrame([('{"k":1}',), ('{"k":-1}',)], "doc string")
 
     def entries():
-        return sum(1 for k in jp._ROUTE_BUNDLE_CACHE
-                   if "route-bundle memo pin" in k[1])
+        # colcache keys: (applicationId, namespace, *memo key)
+        return sum(1 for k in colcache._CACHE
+                   if k[1] == "json_plane.route_bundle"
+                   and "route-bundle memo pin" in k[2])
 
     jp.with_valid_json(df, "doc", copy.deepcopy(contract))
     jp.with_valid_json(df, "doc", copy.deepcopy(contract))
@@ -1050,9 +1031,7 @@ def test_conformance_corpus_through_route(spark):
     # verdicts to the targeted batteries, and the last two verdict
     # bugs lived exactly in routing-mode interactions.  Batched 16
     # schemas per job as stacked plan_shape="masked" columns: masked
-    # references its input ONCE per stack (linear plan growth), while
-    # stacked union shapes re-reference the child plan twice per level
-    # (exponential — the json_props_kernel caveat, VERDICT r7).  Every
+    # references its input ONCE per stack (linear plan growth).  Every
     # schema judges every batch row; only its own rows' verdicts are
     # asserted.  Measured: 27 jobs, 1587 cases, ~2.5 min at local[4].
     mismatches = []
@@ -1314,12 +1293,12 @@ ROOT_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 def test_root_value_route_matches_kernel(spark, shape):
     """Round-7 root-value mode: contracts whose documents are bare
     scalars or arrays route through the {"v": <doc>} wrapper — parity
     with the kernel on hostile docs (whitespace, wrapper injections,
-    big ints, wrong types, malformed JSON) under both plan shapes."""
+    big ints, wrong types, malformed JSON)."""
     df = spark.createDataFrame([(i, d) for i, d in enumerate(ROOT_DOCS)],
                                "i long, doc string")
     for contract in ROOT_CONTRACTS:
@@ -1507,12 +1486,12 @@ NESTED_MAP_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["union", "masked"])
+@pytest.mark.parametrize("shape", ["masked"])
 def test_nested_map_route_matches_kernel(spark, shape):
     """Round-7 map nodes: dynamic-key slots nested inside struct
     layouts (and top-level dynamic contracts with object values) route
     — parity with the kernel on dup-key, null-value, wrong-type, and
-    big-int hazards under both plan shapes."""
+    big-int hazards."""
     df = spark.createDataFrame([(i, d) for i, d in
                                 enumerate(NESTED_MAP_DOCS)],
                                "i long, doc string")
@@ -1629,9 +1608,7 @@ def test_nullable_idiom_routes_on_value_type(spark):
 def test_root_and_map_fast_plans_stay_plane_a(spark):
     """The new round-7 modes must keep the routed subset UDF-free:
     compile the contract exactly as _routing_pieces does (root mode
-    targets the extracted value column) and assert pure Plane A, plus
-    a physical-plan check that the routed filter of a root contract
-    carries no Python stage."""
+    targets the extracted value column) and assert pure Plane A."""
     from jema_js_spark.compiler.compile import SchemaCompiler
 
     cases = [
@@ -1659,16 +1636,6 @@ def test_root_and_map_fast_plans_stay_plane_a(spark):
             col, dt).coverage()
         assert cov["plane_a_fraction"] == 1.0, (contract,
                                                 cov["plane_b_names"])
-
-    # zero-Python fast branch is the UNION shape's property (round 8:
-    # auto = masked, whose single pass carries one null-masked Python
-    # node by design)
-    df = spark.createDataFrame([("[1.5]",)], "doc string")
-    out = with_valid_json(df, "doc", cases[0], route_col="route",
-                          plan_shape="union")
-    fast_plan = out.filter(F.col("route") == "columnar") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in fast_plan and "BatchEvalPython" not in fast_plan
 
 
 def test_pathological_depth_never_kills_the_job(spark):
@@ -1818,16 +1785,19 @@ def test_keys_only_variant_map_differential(spark):
 
 def test_keys_only_fast_plan_stays_plane_a(spark):
     """Keys-only contracts with no value-reading keyword must keep the
-    routed branch UDF-free (pure Catalyst map predicates)."""
-    df = spark.createDataFrame([('{"a":1}',)], "doc string")
+    routed rows UDF-free (pure Catalyst map predicates): the compiled
+    plan carries no Plane-B check."""
+    from jema_js_spark.compiler.compile import SchemaCompiler
+
     contract = {"required": ["a"], "minProperties": 1,
                 "propertyNames": {"maxLength": 8},
                 "dependentRequired": {"x": ["y"]}}
-    out = with_valid_json(df, "doc", contract, route_col="route",
-                          plan_shape="union")   # zero-Python fast branch
-    fast = out.filter(F.col("route") == "columnar") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in fast and "BatchEvalPython" not in fast, fast
+    plan = analyze_json_contract(contract)
+    assert plan.routable, plan.reasons
+    st = plan.struct_type()
+    cov = SchemaCompiler(contract).compile_plan_for_column(
+        F.lit(None).cast(st), st).coverage()
+    assert cov["plane_b_checks"] == 0, cov["plane_b_names"]
 
 
 def test_keys_only_variant_net_coverage():
@@ -2158,8 +2128,8 @@ def test_variant_slot_routing_differential(spark):
 
 def test_variant_slot_fast_plan_stays_plane_a(spark):
     """A mixed-type patternProperties contract and a union-typed slot
-    contract both compile 100% Plane A (coverage honest) and keep the
-    routed branch UDF-free."""
+    contract both compile 100% Plane A (coverage honest): the routed
+    rows are judged UDF-free."""
     for contract in [VARIANT_SLOT_CONTRACTS[0], VARIANT_SLOT_CONTRACTS[3],
                      VARIANT_SLOT_CONTRACTS[6]]:
         plan = analyze_json_contract(contract)
@@ -2169,13 +2139,6 @@ def test_variant_slot_fast_plan_stays_plane_a(spark):
         cov = compiled.coverage()
         assert cov["plane_a_fraction"] == 1.0, (contract,
                                                 cov["plane_b_names"])
-        df = spark.createDataFrame([('{"x-a":"v"}',)], "doc string")
-        out = with_valid_json(df, "doc", contract, route_col="route",
-                              plan_shape="union")
-        fast = out.filter(F.col("route") == "columnar") \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in fast and "BatchEvalPython" not in fast, \
-            (contract, fast)
 
 
 def test_variant_tag_fuzz_matches_kernel(spark):
@@ -2574,36 +2537,39 @@ def test_branching_recursion_verdict_parity(spark):
 
 
 def test_auto_shape_rule(spark):
-    """Round 8: auto = masked for pure-Plane-A plans (no shuffle, one
-    scan), union for Plane-B-carrying plans — Catalyst extracts Python
-    UDFs from CaseWhen branches and runs them per row, so a masked
-    plan would pay an embedded variant-net/whole-node kernel check on
-    EVERY row where union's fast filter isolates it to routed rows."""
+    """auto routes every routable contract through the one masked
+    shape: a single pass with no shuffle — also when the compiled plan
+    carries Plane-B checks, whose embedded kernel UDF then runs per
+    row (measured cheaper than a second scan plus a residue shuffle)."""
     df = spark.createDataFrame([('{"a": 1}',)], "doc string")
 
-    # pure-A routable contract → masked: no shuffle anywhere
+    def assert_single_pass(out):
+        a = out._jdf.queryExecution().analyzed().toString()
+        assert "Repartition " not in a and "rebalance" not in a.lower(), a
+        phys = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in phys and "Union" not in phys, phys
+
+    # pure-A routable contract
     pure = {"type": "object", "required": ["a"],
             "properties": {"a": {"type": "integer", "minimum": 0}}}
-    a = with_valid_json(df, "doc", pure) \
-        ._jdf.queryExecution().analyzed().toString()
-    assert "Repartition " not in a and "rebalance" not in a.lower(), a
+    assert_single_pass(with_valid_json(df, "doc", pure))
 
     # keys-only contract whose dependentSchemas body READS values →
-    # the variant net = a Plane-B check → auto must take union (the
-    # rebalance marks it), keeping the net off non-routed rows
+    # the variant net = a Plane-B check
     netted = {"type": "object",
               "dependentSchemas": {"a": {"properties":
                                          {"b": {"minimum": 3}}}}}
     plan = analyze_json_contract(netted)
     assert plan.routable and plan.map_value == ("variant", None), plan
-    u = with_valid_json(df, "doc", netted) \
-        ._jdf.queryExecution().analyzed().toString()
-    assert "rebalance" in u.lower() or "RebalancePartitions" in u, u
-    # …and exactly ONE Python stage on the routed side of that plan
-    phys = with_valid_json(df, "doc", netted, route_col="r") \
-        .filter(F.col("r") == "columnar") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert phys.count("ArrowEvalPython") <= 1, phys
+    out = with_valid_json(df, "doc", netted, route_col="r")
+    assert_single_pass(out)
+    assert [(r["valid"], r["r"]) for r in out.collect()] == \
+        [(True, "columnar")]
+
+    # no fast ∪ slow shape: asking for one is an error, never a silent
+    # fall-back to another shape
+    with pytest.raises(ValueError, match="union"):
+        with_valid_json(df, "doc", pure, plan_shape="union")
 
 
 def test_wide_flat_contract_keeps_full_typed_layout():

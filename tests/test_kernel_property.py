@@ -15,7 +15,8 @@ import copy
 import jsonschema
 from hypothesis import assume, given, settings, strategies as st
 
-from jema_js_spark.kernel.kernel import validate
+from jema_js_spark.kernel.kernel import _VOCABULARY, Validator, validate
+from jema_js_spark.schema.frontend import Schema
 
 # Keywords whose subschemas the reference evaluates with annotation
 # suppression (``not``, schema.js:183,409-412), as abandonable probes
@@ -198,3 +199,56 @@ def test_multiple_of_float_tolerance_near_precision_limit():
     # and the sub-2^53 integral regime matches exact arithmetic
     assert validate({"multipleOf": 3}, 9.0) is True
     assert validate({"multipleOf": 3}, 10.0) is False
+
+
+# Hostile schemas: every keyword may carry any value — nested lists,
+# non-dict subschemas, wrongly typed bounds, booleans in schema
+# positions, dangling local refs.  No external oracle grades these (the
+# spec leaves them undefined), but the kernel has two evaluators of
+# its own: the boolean fast path behind ``validate`` and the error
+# generator behind ``iter_errors``.  They must agree on every input —
+# same verdict, same abandonment residue on ``schema_stack`` when the
+# document fails, and the same exception type when either raises.
+_HOSTILE_KEYS = st.sampled_from(
+    sorted(k for k in _VOCABULARY if not k.startswith("$"))
+    + ["$defs", "$ref"])
+_hostile_values = st.recursive(
+    st.none() | st.booleans() | st.integers(-3, 3)
+    | st.floats(-3, 3, allow_nan=False)
+    | st.sampled_from(["integer", "number", "string", "array", "object",
+                       "null", "boolean", "a", "", "^a", "[", "email",
+                       "date", "#", "#/$defs/a", "#/properties/a",
+                       "#/items"]),
+    lambda children: st.lists(children, max_size=3)
+    | st.dictionaries(_HOSTILE_KEYS | st.sampled_from(["a", "b"]),
+                      children, max_size=3),
+    max_leaves=10,
+)
+hostile_schemas = st.dictionaries(_HOSTILE_KEYS, _hostile_values,
+                                  min_size=1, max_size=4) | _hostile_values
+
+
+def _run_path(schema, value, path):
+    """(verdict, exception type, schema_stack) of one evaluator on a
+    fresh Validator."""
+    try:
+        v = Validator(Schema(copy.deepcopy(schema)))
+        if path == "fast":
+            ok = v.validate(copy.deepcopy(value))
+        else:
+            ok = next(iter(v.iter_errors(copy.deepcopy(value))), None) is None
+    except Exception as exc:
+        return None, type(exc), None
+    return ok, None, list(v.schema_stack)
+
+
+@settings(max_examples=2000, deadline=None, derandomize=True,
+          database=None)
+@given(schema=hostile_schemas, value=json_values)
+def test_fast_path_matches_generator_on_hostile_schemas(schema, value):
+    f_ok, f_exc, f_res = _run_path(schema, value, "fast")
+    g_ok, g_exc, g_res = _run_path(schema, value, "generator")
+    assert f_exc == g_exc, (schema, value, f_exc, g_exc)
+    assert f_ok == g_ok, (schema, value)
+    if f_ok is False:
+        assert f_res == g_res, (schema, value, f_res, g_res)

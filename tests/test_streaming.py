@@ -155,8 +155,8 @@ def test_stream_first_seen_reserved_column_is_loud(spark):
 
 
 def test_with_valid_json_streaming(spark):
-    """The round-5 JSON columnar route is stateless (two filtered
-    branches + union), so it must run unchanged under micro-batch
+    """The round-5 JSON columnar route is stateless (one masked
+    projection, no shuffle), so it must run unchanged under micro-batch
     streaming — conforming docs judged columnar, residue by the
     kernel, verdicts identical to the batch run on the same rows."""
     from jema_js_spark.validation.json_plane import with_valid_json
@@ -198,8 +198,7 @@ def test_with_valid_json_streaming(spark):
 
 def test_with_valid_json_streaming_map_contract(spark):
     """The round-6 map route under micro-batch streaming: dynamic-key
-    verdicts identical to the batch run, both planes exercised (the
-    rebalance hint is skipped for streaming plans)."""
+    verdicts identical to the batch run, both planes exercised."""
     from jema_js_spark.validation.json_plane import (analyze_json_contract,
                                                      with_valid_json)
 
@@ -239,39 +238,18 @@ def test_with_valid_json_streaming_map_contract(spark):
     assert not bad, bad[:3]
 
 
-def test_streaming_residue_partition_floor(spark):
-    """Round 7 (VERDICT r6 #6): under streaming the union shape cannot
-    rely on AQE to collapse near-empty residue partitions, so the
-    kernel branch is repartitioned to a small fixed floor — otherwise
-    every microbatch pays the per-task Arrow handshake once per SOURCE
-    partition.  Pinned in the analyzed plan: a Repartition node with
-    exactly _STREAM_RESIDUE_PARTITIONS, and none on the batch plan
-    (which uses the AQE rebalance hint instead).  Round 8: union is
-    the opt-in shape (auto = masked, a stateless single pass with NO
-    shuffle — pinned below), so the floor pins force union."""
-    from jema_js_spark.validation.json_plane import (
-        _STREAM_RESIDUE_PARTITIONS, with_valid_json)
+def test_streaming_auto_shape_is_shuffle_free(spark):
+    """The routed plan (auto = masked) is shuffle-free in BOTH stream
+    and batch mode — the property that keeps it robust per microbatch
+    and on residue-heavy corpora."""
+    from jema_js_spark.validation.json_plane import with_valid_json
 
     contract = {"type": "object", "required": ["k"],
                 "properties": {"k": {"type": "integer", "minimum": 0}}}
     stream = (spark.readStream.format("rate")
               .option("rowsPerSecond", "10").load()
               .withColumn("doc", F.lit('{"k": 1}')).select("value", "doc"))
-    out = with_valid_json(stream, "doc", contract, plan_shape="union")
-    analyzed = out._jdf.queryExecution().analyzed().toString()
-    assert f"Repartition {_STREAM_RESIDUE_PARTITIONS}, true" in analyzed, \
-        analyzed
-
     batch = spark.createDataFrame([(1, '{"k": 1}')], "value long, doc string")
-    bout = with_valid_json(batch, "doc", contract, plan_shape="union")
-    banalyzed = bout._jdf.queryExecution().analyzed().toString()
-    assert "Repartition " not in banalyzed, banalyzed
-    assert "rebalance" in banalyzed.lower() or "RebalancePartitions" \
-        in banalyzed, banalyzed
-
-    # the auto default (masked, round 8) is shuffle-free in BOTH
-    # modes — the property that makes it robust per-microbatch and on
-    # residue-heavy corpora (round-8 stream decomposition)
     for df in (with_valid_json(stream, "doc", contract),
                with_valid_json(batch, "doc", contract)):
         a = df._jdf.queryExecution().analyzed().toString()
@@ -287,9 +265,23 @@ def test_windowed_json_verdicts_route_counts(spark):
     from jema_js_spark.streaming.validate_stream import (
         windowed_json_verdicts)
 
+    from jema_js_spark.compiler.compile import SchemaCompiler
+    from jema_js_spark.validation.json_plane import analyze_json_contract
+
     contract = {"type": "object", "required": ["k"],
                 "properties": {"k": {"type": "integer", "minimum": 0,
                                      "maximum": 80}}}
+    # the same contract carrying a Plane-B check (uncovered
+    # unevaluatedProperties claims → whole-node kernel fallback inside
+    # the compiled plan): it takes the same single routed shape
+    netted = dict(contract, anyOf=[
+        {"required": ["k"]},
+        {"properties": {"alias": {"type": "string"}},
+         "required": ["alias"]}], unevaluatedProperties=False)
+    plan = analyze_json_contract(netted)
+    st = plan.struct_type()
+    assert SchemaCompiler(netted).compile_plan_for_column(
+        F.lit(None).cast(st), st).coverage()["plane_b_checks"] > 0
     # slots: %11 → malformed (kernel, invalid), %7 → wrong type
     # (kernel, invalid), rest canonical (columnar; k>80 → invalid)
     doc = (F.when(F.col("value") % 11 == 0, F.lit("not json"))
@@ -298,37 +290,40 @@ def test_windowed_json_verdicts_route_counts(spark):
            .otherwise(F.concat(F.lit('{"k": '),
                                F.pmod(F.col("value"), F.lit(100)),
                                F.lit("}"))))
-    stream = (spark.readStream.format("rate")
-              .option("rowsPerSecond", "500").load()
-              .withColumn("doc", doc).select("timestamp", "value", "doc"))
-    verd = windowed_json_verdicts(stream, "doc", contract,
-                                  ts_col="timestamp",
-                                  window="5 seconds",
-                                  watermark="30 seconds")
-    q = (verd.writeStream.format("memory").queryName("jwv_stream")
-         .outputMode("complete").start())
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        got = spark.sql(
-            "SELECT coalesce(sum(n_rows), 0) FROM jwv_stream").collect()
-        if got[0][0] >= 200:
-            break
-        time.sleep(0.5)
-    _drain(q)
-    rows = spark.sql("SELECT * FROM jwv_stream").collect()
-    assert rows and sum(r["n_rows"] for r in rows) >= 200
-    tot = sum(r["n_rows"] for r in rows)
-    routed = sum(r["n_routed"] for r in rows)
-    kernel = sum(r["n_kernel"] for r in rows)
-    assert routed + kernel == tot
-    assert routed > 0 and kernel > 0          # both planes visible
-    # the designed kernel share is 1/11 + 1/7 - overlap(1/77) ≈ 22%:
-    # route_rate must sit near it, far from the 0.0 a gate regression
-    # would print
-    assert 0.5 < routed / tot < 0.95
-    for r in rows:
-        assert r["n_rows"] == r["n_routed"] + r["n_kernel"]
-        assert abs(r["route_rate"] - r["n_routed"] / r["n_rows"]) < 1e-9
+    for name, c in (("jwv_stream", contract), ("jwv_b_stream", netted)):
+        stream = (spark.readStream.format("rate")
+                  .option("rowsPerSecond", "500").load()
+                  .withColumn("doc", doc)
+                  .select("timestamp", "value", "doc"))
+        verd = windowed_json_verdicts(stream, "doc", c,
+                                      ts_col="timestamp",
+                                      window="5 seconds",
+                                      watermark="30 seconds")
+        q = (verd.writeStream.format("memory").queryName(name)
+             .outputMode("complete").start())
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            got = spark.sql(
+                f"SELECT coalesce(sum(n_rows), 0) FROM {name}").collect()
+            if got[0][0] >= 200:
+                break
+            time.sleep(0.5)
+        _drain(q)
+        rows = spark.sql(f"SELECT * FROM {name}").collect()
+        assert rows and sum(r["n_rows"] for r in rows) >= 200, name
+        tot = sum(r["n_rows"] for r in rows)
+        routed = sum(r["n_routed"] for r in rows)
+        kernel = sum(r["n_kernel"] for r in rows)
+        assert routed + kernel == tot
+        assert routed > 0 and kernel > 0, name    # both planes visible
+        # the designed kernel share is 1/11 + 1/7 - overlap(1/77) ≈
+        # 22%: route_rate must sit near it, far from the 0.0 a gate
+        # regression would print
+        assert 0.5 < routed / tot < 0.95, (name, routed / tot)
+        for r in rows:
+            assert r["n_rows"] == r["n_routed"] + r["n_kernel"]
+            assert abs(r["route_rate"] - r["n_routed"] / r["n_rows"]) \
+                < 1e-9
 
 
 def test_windowed_json_verdicts_small_batch_hint(spark):

@@ -17,14 +17,10 @@ side, verdict parity asserted per pair:
    0.81× at 30k, par at 100k; trivial wins from <30k) → ONE calibrated
    cutoff, cost_model.SMALL_BATCH_DOCS.
 
-3. SHAPE DECOMPOSITION — kernel vs masked vs union per STREAM CLASS
-   (canonical / whitespace-gate / wrong-type residue / malformed
-   residue / the 80% mixed stream) at 1M docs.  Round-8 result: the
-   union shape's residue path costs 4-5× the pure kernel per row
-   (wasted parse + full-residue rebalance shuffle) — union 0.61× vs
-   kernel on the mixed stream while masked wins 1.47×; union ahead
-   only on all-canonical (~1.1×).  This is the evidence behind the
-   round-8 default flip (auto plan shape = masked).
+3. SHAPE DECOMPOSITION — kernel vs the routed (masked) plan per
+   STREAM CLASS (canonical / whitespace-gate / wrong-type residue /
+   malformed residue / the 80% mixed stream) at 1M docs.  Round-8
+   result: masked wins 1.47× over the kernel on the mixed stream.
 
 Writes BENCH/route_cost_calibration.json (the machine-readable
 evidence twin).  The shipped cost_model.SMALL_BATCH_DOCS constant is
@@ -217,7 +213,7 @@ def main():
             f"representative-mixed@{n}", REPRESENTATIVE_KERNEL_CONTRACT,
             mixed_json_docs(spark, n, num_partitions=CPUS * 3), n))
 
-    # shape decomposition: kernel vs masked vs union per stream class
+    # shape decomposition: kernel vs masked per stream class
     def triple(name, contract, docs, n):
         docs = docs.cache()
         docs.count()
@@ -232,22 +228,18 @@ def main():
             return out.agg(F.sum(F.col("valid").cast("long"))
                            ).collect()[0][0]
 
-        kern(); shape("masked"); shape("union")
-        ks, ms, us = [], [], []
+        kern(); shape("masked")
+        ks, ms = [], []
         for _ in range(3):
             t0 = time.perf_counter(); kv = kern()
             ks.append(time.perf_counter() - t0)
             t0 = time.perf_counter(); mv = shape("masked")
             ms.append(time.perf_counter() - t0)
-            t0 = time.perf_counter(); uv = shape("union")
-            us.append(time.perf_counter() - t0)
-            assert kv == mv == uv, (name, kv, mv, uv)
+            assert kv == mv, (name, kv, mv)
         row = {"stream": name,
                "kernel_sec": round(min(ks), 3),
                "masked_sec": round(min(ms), 3),
-               "union_sec": round(min(us), 3),
                "masked_vs_kernel": round(min(ks) / min(ms), 2),
-               "union_vs_kernel": round(min(ks) / min(us), 2),
                "n": n}
         print(json.dumps(row), flush=True)
         docs.unpersist()
