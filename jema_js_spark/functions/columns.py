@@ -47,6 +47,10 @@ def js_rlike(col: Column, ecma_pattern: str) -> Column:
     def _match(s: pd.Series) -> pd.Series:
         import re
 
+        from jema_js_spark.validation.kernel_udf import (
+            _skip_unchanged_zip_rereads)
+
+        _skip_unchanged_zip_rereads()
         rx = re.compile(py)
         return s.map(lambda x: None if x is None
                      else rx.search(x) is not None).astype("boolean")

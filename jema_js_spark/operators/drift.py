@@ -55,6 +55,10 @@ def categorical_drift(df: DataFrame, group_col: str, cat_col: str) -> DataFrame:
     counts = df.groupBy(group_col, cat_col).count()
     w_cat = Window.partitionBy(cat_col)
     w_grp = Window.partitionBy(group_col)
+    # an unpartitioned window runs in ONE task over every histogram row:
+    # cheap for thousands of (group, category) rows, but a
+    # high-cardinality category column (ids, free text) funnels
+    # millions of rows through one core here; bucket such columns first
     w_all = Window.partitionBy()
     enriched = counts.select(
         group_col, cat_col, "count",
@@ -164,6 +168,8 @@ def ks_exact(df_a: DataFrame, df_b: DataFrame, col: str,
     ub = u.crossJoin(F.broadcast(bounds)).withColumn("__bkt", bkt)
     totals = ub.groupBy("__bkt").agg(F.sum("ca").alias("__ta"),
                                      F.sum("cb").alias("__tb"))
+    # both unpartitioned windows run in one task, over at most
+    # partitions + 3 bucket rows, whatever the input's size
     w_off = Window.orderBy("__bkt").rowsBetween(
         Window.unboundedPreceding, -1)
     w_tot = Window.partitionBy()

@@ -17,16 +17,19 @@ of its key.
 ``cached_column(key, build)`` memoizes ``build()`` under ``key``
 scoped to the active application (stopped sessions' JVM handles are
 never replayed: a new application gets a new cache slot); a ``None``
-key builds without caching.  This caches expression CONSTRUCTION only
-— every query still builds a fresh DataFrame lineage and recomputes
-results from its inputs.
+key builds without caching.  The store holds ``_CAP`` entries and
+evicts the least recently used one when full, so a hot contract
+survives a stream of one-off ones.  This caches expression
+CONSTRUCTION only — every query still builds a fresh DataFrame
+lineage and recomputes results from its inputs.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Dict, Optional
+from collections import OrderedDict
+from typing import Any, Callable, Optional
 
-_CACHE: Dict[tuple, Any] = {}
+_CACHE: OrderedDict[tuple, Any] = OrderedDict()
 _CAP = 256
 
 
@@ -48,9 +51,11 @@ def cached_column(key: Optional[tuple], build: Callable[[], Any]) -> Any:
         return build()
     k = (_app_id(),) + key
     col = _CACHE.get(k)
-    if col is None:
-        col = build()
-        if len(_CACHE) >= _CAP:
-            _CACHE.clear()
-        _CACHE[k] = col
+    if col is not None:
+        _CACHE.move_to_end(k)
+        return col
+    col = build()
+    if len(_CACHE) >= _CAP:
+        _CACHE.popitem(last=False)
+    _CACHE[k] = col
     return col

@@ -18,6 +18,7 @@ shows up in keyword iteration.
 from __future__ import annotations
 
 import contextlib
+import json
 import sys
 from typing import Any, Dict, Iterator, Optional
 from urllib.parse import urljoin
@@ -50,6 +51,23 @@ __all__ = ["Schema", "SchemaRegistry", "SchemaNotFound", "RefResolutionError"]
 DEFAULT_DIALECT = "https://json-schema.org/draft/2020-12/schema"
 # ref: schema.js:6 — base URI when no $id is present
 DEFAULT_LOCATION = "http://localhost/"
+
+
+def contract_key(schema: Any) -> Optional[str]:
+    """Memo key text of a plain contract: its sorted JSON as ``Schema()``
+    sees it, with the dialect default that ``Schema()`` injects into the
+    caller's dict (schema.js:37).  A contract dict therefore keys the
+    same before and after a ``Schema()`` has run on it.  None for
+    anything else (a ``Schema`` instance may carry a registry) and for
+    values JSON cannot encode."""
+    if isinstance(schema, dict):
+        schema = {"$schema": DEFAULT_DIALECT, **schema}
+    elif not isinstance(schema, bool):
+        return None
+    try:
+        return json.dumps(schema, sort_keys=True)
+    except (TypeError, ValueError):
+        return None
 
 
 class SchemaNotFound(KeyError):

@@ -21,7 +21,6 @@ map-side-combinable aggregation keyed by ``spark_partition_id()``.
 
 from __future__ import annotations
 
-import json
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 
 from jema_js_spark.compiler.compile import CompiledPlan, SchemaCompiler
 from jema_js_spark.runtime.colcache import cached_column
-from jema_js_spark.schema.frontend import Schema
+from jema_js_spark.schema.frontend import Schema, contract_key
 
 __all__ = ["compile_for", "with_valid", "violation_rows",
            "partition_verdicts", "validation_report"]
@@ -46,15 +45,10 @@ __all__ = ["compile_for", "with_valid", "violation_rows",
 # query still builds a fresh DataFrame lineage and recomputes from its
 # inputs.
 def _compile_key(df: DataFrame, schema, format_assertion: bool):
-    if not isinstance(schema, (dict, bool)):
-        return None        # Schema instances may carry registries; skip
-    try:
-        return ("engine.compile_for",
-                json.dumps(schema, sort_keys=True),
-                format_assertion,
-                df.schema.json())
-    except (TypeError, ValueError):
+    text = contract_key(schema)
+    if text is None:
         return None
+    return ("engine.compile_for", text, format_assertion, df.schema.json())
 
 
 def compile_for(df: DataFrame, schema, format_assertion: bool = False

@@ -109,7 +109,7 @@ from jema_js_spark.compiler.compile import (CompiledPlan, SchemaCompiler,
                                             _dynamic_scope_hazard,
                                             variant_tag_affine)
 from jema_js_spark.runtime.colcache import cached_column
-from jema_js_spark.schema.frontend import Schema
+from jema_js_spark.schema.frontend import Schema, contract_key
 
 __all__ = ["analyze_json_contract", "with_valid_json",
            "json_violation_rows", "JsonColumnPlan"]
@@ -1221,7 +1221,7 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
     if plan_shape not in ("auto", "masked", "kernel"):
         raise ValueError(f"unknown plan_shape {plan_shape!r}")
     df = _maybe_consolidate(df)
-    contract_json = _contract_json(schema)
+    contract_json = contract_key(schema)
     if plan_shape == "kernel":
         # the kernel opt-out exists for hot paths: skip the routing
         # analysis too, not just the routed plan
@@ -1278,10 +1278,12 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
 
 
 # Small-partition consolidation for Python-stage plans (round 9).  An
-# ArrowEvalPython task costs ~8 ms of fixed per-task overhead
-# regardless of rows (measured on this class of box), so a plan whose
-# partitions hold only a few thousand documents pays a pure per-task
-# tax: 1M cached docs in 96 partitions ran the masked plan in 1.51 s
+# ArrowEvalPython task has a fixed cost regardless of rows: about 65 ms
+# of core time per task with the workers' zipimport hook
+# (kernel_udf._skip_unchanged_zip_rereads), about 260 ms without it (a
+# trivial pandas UDF over 64 vs 4 partitions, local[4] on a 4-vCPU
+# box), so a plan whose partitions hold only a few thousand documents
+# pays a pure per-task tax: 1M cached docs in 96 partitions ran the masked plan in 1.51 s
 # vs 0.95 s after a narrow (no-shuffle) coalesce to the core count.
 # This is the no-shuffle analog of AQE's post-shuffle small-partition
 # coalescing, decided from the optimizer's size estimate: it fires
@@ -1325,20 +1327,8 @@ def _maybe_consolidate(df: DataFrame) -> DataFrame:
 # builds a fresh DataFrame lineage and recomputes from its inputs.
 # Only plain-dict contracts are cached (a caller-supplied Schema may
 # carry a registry whose remote documents the compiled Plane-B
-# fallbacks embed).
-def _contract_json(raw_schema) -> Optional[str]:
-    """Memo key text of a plain contract.  Take it once per call, before
-    any ``Schema()`` injects ``"$schema"`` into the dict (schema.js:37),
-    so every memo sees the same key for equal contracts."""
-    if not isinstance(raw_schema, (dict, bool)):
-        return None
-    import json as _json
-    try:
-        return _json.dumps(raw_schema, sort_keys=True)
-    except (TypeError, ValueError):
-        return None
-
-
+# fallbacks embed); every memo keys on ``contract_key``'s text, taken
+# once per call.
 def _cached_analysis(raw_schema, contract_json: Optional[str],
                      format_assertion: bool):
     def build():
@@ -1663,7 +1653,7 @@ def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
 
     id_cols = list(id_cols or [])
     base = _maybe_consolidate(df.select(*id_cols, json_col))
-    contract_json = _contract_json(schema)
+    contract_json = contract_key(schema)
     if not isinstance(schema, Schema):
         schema, plan = _cached_analysis(schema, contract_json,
                                         format_assertion)

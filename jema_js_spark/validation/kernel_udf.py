@@ -15,7 +15,9 @@ process, not per batch.
 from __future__ import annotations
 
 import json
+import os
 import sys
+import zipimport
 from typing import Any, Dict, Optional
 
 import pandas as pd
@@ -29,9 +31,48 @@ __all__ = ["kernel_validate_udf", "kernel_error_count_udf", "loads_doc"]
 # per-Python-worker compiled-schema cache
 _VALIDATOR_CACHE: Dict[str, Any] = {}
 
+_ZIP_HOOK_DONE = False
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and before Python 3.13 each zipimporter then re-reads
+    its archive's directory eagerly: a worker that imported pyspark and
+    py4j from their zips holds one importer per package directory, so
+    every task re-read the 3.5 MB ``pyspark.zip`` about 16 times
+    (160-430 ms per task on a 4-vCPU box).  Once installed, an importer
+    re-reads only when the archive's ``(st_mtime_ns, st_size, st_ino)``
+    differs from the stamp taken at its own last read, so a rewritten or
+    replaced archive (a re-added ``addPyFile`` zip) is still picked up.
+    Idempotent, one flag test per call; a no-op on Python 3.13+, where
+    the re-read is lazy.  Only reused workers benefit: the task that
+    installs it has already paid its re-reads."""
+    global _ZIP_HOOK_DONE
+    if _ZIP_HOOK_DONE:
+        return
+    _ZIP_HOOK_DONE = True
+    if sys.version_info >= (3, 13):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_jema_stamp", None):
+            reread(self)
+            self._jema_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
 
 def _get_validator(schema_json: str, remotes_json: Optional[str],
                    format_assertion: bool):
+    _skip_unchanged_zip_rereads()
     key = f"{format_assertion}|{remotes_json or ''}|{schema_json}"
     v = _VALIDATOR_CACHE.get(key)
     if v is None:

@@ -1026,3 +1026,31 @@ def test_dynamic_ref_single_anchor_stays_detached(spark):
     assert cov["plane_a_checks"] > 0          # sibling n stays Plane A
     got = [r[0] for r in df.select(plan.valid_column()).collect()]
     assert [bool(g) for g in got] == [True, True]
+
+
+def test_reused_contract_dict_hits_compile_memo(spark):
+    """Schema() injects "$schema" into the contract dict it is given, so
+    a compile memo keyed on the dict's text as-is missed on the second
+    call with the SAME dict object and compiled the contract again.
+    The key text includes the injected default, so repeated calls with
+    one dict add ONE engine.compile_for entry, and an equal contract
+    that spells the default out shares it."""
+    from jema_js_spark.runtime import colcache
+
+    contract = {"$comment": "compile memo pin", "type": "object",
+                "properties": {"n": {"type": "integer", "minimum": 0}}}
+    df = spark.createDataFrame([(1,), (-1,)], "n long")
+
+    def entries():
+        # colcache keys: (applicationId, namespace, *memo key)
+        return sum(1 for k in colcache._CACHE
+                   if k[1] == "engine.compile_for"
+                   and "compile memo pin" in k[2])
+
+    for _ in range(3):
+        assert [r.valid for r in with_valid(df, contract)
+                .orderBy("n").collect()] == [False, True]
+    violation_rows(df, contract, ["n"])
+    assert "$schema" in contract          # the premise: Schema() ran
+    with_valid(df, {k: v for k, v in contract.items() if k != "$schema"})
+    assert entries() == 1

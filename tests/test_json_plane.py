@@ -889,6 +889,27 @@ def test_resubmitted_contract_copy_hits_route_bundle_memo(spark):
     assert entries() == 1
 
 
+def test_reused_contract_dict_hits_route_bundle_memo(spark):
+    """The same contract dict object passed again (after the first
+    call's Schema() injected "$schema" into it) keys like a fresh copy:
+    repeated calls through both entry points add ONE route-bundle
+    entry."""
+    from jema_js_spark.runtime import colcache
+    from jema_js_spark.validation import json_plane as jp
+
+    contract = {"$comment": "reused dict pin", "type": "object",
+                "properties": {"k": {"type": "integer", "minimum": 0}}}
+    df = spark.createDataFrame([('{"k":1}',), ('{"k":-1}',)], "doc string")
+
+    jp.with_valid_json(df, "doc", contract)
+    jp.with_valid_json(df, "doc", contract)
+    jp.json_violation_rows(df, "doc", contract)
+    assert "$schema" in contract
+    assert sum(1 for k in colcache._CACHE
+               if k[1] == "json_plane.route_bundle"
+               and "reused dict pin" in k[2]) == 1
+
+
 def test_errors_path_masked_screen_output_identical(spark):
     """The round-7 masked screen must not change a single emitted row:
     a Plane-B-carrying routable contract's violation rows are compared
