@@ -25,8 +25,20 @@ dynamic-scope resolution (outermost in-scope resource with a bookending
 ``$dynamicAnchor``), where the reference resolves against the root
 schema only and its README flags the area as buggy
 (schema.js:355-362, README.md:60-62).  The dynamic scope is threaded as
-an immutable tuple through evaluation, so abandoned generators (the
+an immutable tuple through evaluation, so abandoned evaluations (the
 first-error probes) can never corrupt it.
+
+One evaluator body (``Validator._eval`` with its object/array passes)
+serves both consumers; ``Validator._sink`` selects the mode:
+
+- ``None`` (boolean mode, ``validate`` and every probe): the first
+  failure point returns False where the reference's consumer abandons
+  its generator, leaving the frames pushed so far on the schema/data
+  stacks — the abandonment residue the quirky pops in ``not``/``if``
+  read (schema.js:411,420);
+- a list (collect mode, ``iter_errors``): each failure point appends
+  the formatted error and evaluation carries on, popping frames as an
+  exhausted generator would — the reference's full error sequence.
 
 This kernel is used two ways (SURVEY.md §7.0): batch-wise inside
 Arrow-batched pandas UDFs for keyword subtrees the columnar compiler
@@ -84,12 +96,6 @@ class ValidationError:
     data_stack: List[Any] = field(default_factory=list)
 
 
-# pre-built error for boolean-mode probes: validate() yields errors
-# only to discard them, so one shared empty instance stands in for the
-# fully-formatted reference error object (see Validator._boolean_mode)
-_SENTINEL_ERROR = ValidationError(message="", value=None, schema_value=None)
-
-
 def _safe_pop(stack: list) -> None:
     # JS Array.pop on empty returns undefined; mirror (the reference's
     # ``not``/``if`` handlers pop frames they did not push —
@@ -115,12 +121,9 @@ class Validator:
         # are part of the root document), so id() keys are stable.
         self.evaluated: Dict[int, set] = {}
         self.stop_collecting = False  # schema.js:183
-        # boolean mode: validate() only ever asks "is there an error",
-        # so _error skips message formatting / stack copying (~25% of
-        # wall time on failing docs, measured); iter_errors() builds
-        # the full reference error objects.  Verdicts are identical —
-        # the sentinel is yielded and discarded by the same probes.
-        self._boolean_mode = False
+        # error sink: None = boolean mode (first failure returns False),
+        # a list = collect mode (iter_errors); see the module docstring
+        self._sink: List[ValidationError] | None = None
         # id(schema node) → precomputed keyword plan.  The reference's
         # compiled form is its deref'd tree (schema.js:109-126); this is
         # the same idea one step further: the vocabulary dispatch for a
@@ -129,82 +132,65 @@ class Validator:
         # pinned by the registry).
         self._node_plans: Dict[int, tuple] = {}
 
-    def _reset(self) -> None:
-        # Fresh per-call state.  Unlike the JS WeakMap (whose keys die
-        # with the objects), id()-keyed entries could collide once a
-        # prior document's dicts are freed and their addresses reused —
-        # a real hazard when one Validator streams a whole Arrow batch.
+    def _run(self, value: Any) -> bool:
+        """One evaluation of ``value`` from the root in the current sink
+        mode, on fresh per-call state.  Unlike the JS WeakMap (whose
+        keys die with the objects), id()-keyed evaluated sets could
+        collide once a prior document's dicts are freed and their
+        addresses reused — a real hazard when one Validator streams a
+        whole Arrow batch.  The stacks start empty too: a failing call
+        leaves its abandonment residue behind, and a Validator cached
+        for a worker's lifetime would otherwise grow them without
+        bound."""
         self.evaluated = {}
         self.stop_collecting = False
-
-    # -- public API (schema.js:59-73) ------------------------------------
-    def validate(self, value: Any) -> bool:
-        self._reset()
-        self._boolean_mode = True
+        if self.schema_stack:
+            self.schema_stack.clear()
+        if self.data_stack:
+            self.data_stack.clear()
         old = sys.getrecursionlimit()
         raised = old < _RECURSION_LIMIT
         if raised:
             sys.setrecursionlimit(_RECURSION_LIMIT)
         try:
-            return self._fast(value, self.root.schema, (self.root,))
+            return self._eval(value, self.root.schema, (self.root,))
         except RecursionError:
             raise DepthLimitExceeded(
                 "document/schema nesting exceeds kernel depth limit") from None
         finally:
             if raised:  # batch loops pre-raise the limit (kernel_udf)
                 sys.setrecursionlimit(old)
-            # restore: a still-pending iter_errors() generator resumed
-            # after this call must keep formatting full errors (review
-            # finding: a sticky flag blanked its remaining messages)
-            self._boolean_mode = False
+
+    # -- public API (schema.js:59-73) ------------------------------------
+    def validate(self, value: Any) -> bool:
+        return self._run(value)
 
     def iter_errors(self, value: Any) -> Iterator[ValidationError]:
-        self._reset()
-        self._boolean_mode = False
-        self.schema_stack = []
-        self.data_stack = []
-        gen = self._errors(value, self.root.schema, (self.root,))
-
+        """The reference's full error sequence, in order.  The run
+        happens at the first ``next()``, in collect mode; if it raised,
+        the errors found before the raise are yielded first and the
+        exception is re-raised after them."""
         def drive():
-            while True:
-                old = sys.getrecursionlimit()
-                try:
-                    if old < _RECURSION_LIMIT:
-                        sys.setrecursionlimit(_RECURSION_LIMIT)
-                    try:
-                        err = next(gen)
-                    except StopIteration:
-                        return
-                except RecursionError:
-                    raise DepthLimitExceeded(
-                        "document/schema nesting exceeds kernel depth limit"
-                    ) from None
-                finally:
-                    sys.setrecursionlimit(old)
-                yield err
+            errors: List[ValidationError] = []
+            failure = None
+            self._sink = errors
+            try:
+                self._run(value)
+            except Exception as exc:
+                failure = exc
+            finally:
+                self._sink = None
+            yield from errors
+            if failure is not None:
+                raise failure
 
         return drive()
 
     # -- helpers ----------------------------------------------------------
-    def _probe(self, value: Any, schema: Any, scope: _Scope) -> bool:
-        """First-error probe: True iff no errors — the
-        ``errors(...).next().done`` idiom (schema.js:60,386,400,410,419).
-
-        Probe errors are discarded by construction, so probes run the
-        generator-free boolean evaluator ``_fast`` (round 9): identical
-        side effects (evaluated sets, stop_collecting, the quirky
-        abandonment residue on the schema/data stacks), no generator
-        machinery — the surfaced (non-probe) errors of a surrounding
-        ``iter_errors`` still format fully, over the same stack state
-        the generator probes left behind."""
-        return self._fast(value, schema, scope)
-
     def _error(self, value: Any, schema_value: Any,
                message: str = "does not match") -> ValidationError:
         # mirror of schemaError (schema.js:665-674); JS typeof null is
         # 'object', so null prints as 'object' too
-        if self._boolean_mode:
-            return _SENTINEL_ERROR   # content never observed (validate())
         if isinstance(value, list):
             print_value = "array"
         elif isinstance(value, dict) or value is None:
@@ -224,24 +210,22 @@ class Validator:
         return self.root.registry.ref_targets.get(id(node))
 
     def _node_plan(self, schema: dict) -> tuple:
-        """Per-node keyword plan (round 4), shared by the generator and
-        fast paths: keyword dispatch (with the fast twin resolved per
-        entry — round 9) PLUS the node's resource (the _enter_scope
-        lookup) and the presence of unevaluated* keywords — all constant
-        per schema node, so the per-visit cost drops to one dict lookup
-        (profiled: 19 _enter_scope + 2 `in schema` probes per doc became
-        plan reads)."""
+        """Per-node plan (round 4): ``(resource, by_type)`` — the node's
+        resource (the _enter_scope lookup) and, per value type, the
+        keyword entries, the unevaluated* keyword name and the
+        object/array pass flags.  All are constant per schema node, so
+        a visit costs one dict lookup instead of a vocabulary dispatch
+        and a branch ladder."""
         plan = self._node_plans.get(id(schema))
         if plan is None:
             entries = tuple(
-                (prop, vocal[0], vocal[1], vocal[2], schema[prop],
-                 _FAST_TWINS[vocal[1]] if vocal[2] else vocal[1])
+                (prop, vocal[0], vocal[1], schema[prop])
                 for prop in schema.keys()
                 if (vocal := _VOCABULARY.get(prop)) is not None
                 and vocal[1] is not None)
             # pass-skip flags (round 9): an object/array pass over a node
             # with no matching sub-schemas only pushes and pops the data
-            # stack (balanced, yields nothing) — skip it outright
+            # stack (balanced, records nothing) — skip it outright
             obj_pass = ("properties" in schema
                         or "patternProperties" in schema
                         or "additionalProperties" in schema)
@@ -250,11 +234,8 @@ class Validator:
                             and schema.get("items") is not None)
                         or ("contains" in schema
                             and schema.get("contains") is not None))
-            # per-vtype pre-split for the fast path: the affects gate
-            # (schema.js:199), the unevaluated* keyword name and the
-            # object/array pass applicability are all constant per
-            # (node, value-type) — resolve them once per node so a
-            # visit costs ONE dict lookup instead of a branch ladder
+            # per-vtype pre-split: the affects gate (schema.js:199) drops
+            # the entries whose keyword does not apply to the value type
             by_type = {}
             for vt in ("object", "array", "string", "number",
                        "boolean", "null", "not supported"):
@@ -262,7 +243,7 @@ class Validator:
                     folded
                     for e in entries
                     if e[1] is None or e[1] == vt
-                    if (folded := self._fold_fast_entry(e, vt)) is not None)
+                    if (folded := self._fold_entry(e, vt)) is not None)
                 if vt == "object":
                     uneval = "unevaluatedProperties" \
                         if "unevaluatedProperties" in schema else None
@@ -275,240 +256,59 @@ class Validator:
                     uneval = None
                     passes = (False, False)
                 by_type[vt] = (vt_entries, uneval) + passes
-            plan = (entries,
-                    self.root.registry.node_resource.get(id(schema)),
-                    "unevaluatedProperties" in schema,
-                    "unevaluatedItems" in schema,
-                    obj_pass, arr_pass, by_type)
+            plan = (self.root.registry.node_resource.get(id(schema)), by_type)
             self._node_plans[id(schema)] = plan
         return plan
 
-    def _fold_fast_entry(self, e: tuple, vt: str):
-        """Constant-fold one fast-path plan entry for value type ``vt``
-        (round 9).  ``e`` = (prop, affects, validator, is_gen,
-        keyword_value, fast_twin); returns the (prop, keyword_value,
-        fast, oblivious) tuple the fast loop consumes, or ``None`` to
-        drop the entry.  Only verdicts that are CONSTANT per (node,
-        value-type) fold, and only for keywords in _STACK_OBLIVIOUS
-        (success there has zero observable side effects — the push is
-        deferred to the failure branch, so dropping an always-true
-        entry changes nothing):
+    def _fold_entry(self, e: tuple, vt: str):
+        """Constant-fold one plan entry for value type ``vt`` (round 9).
+        ``e`` = (prop, affects, validator, keyword_value); returns the
+        (prop, keyword_value, validator, oblivious) tuple the evaluation
+        loop consumes, or ``None`` to drop the entry.  Only verdicts
+        that are CONSTANT per (node, value-type) fold, and only for
+        keywords in _STACK_OBLIVIOUS (success there has zero observable
+        side effects — the push is deferred to the failure branch, so
+        dropping an always-true entry changes nothing, and a folded
+        failure records the same error at the same stack position):
 
         - ``type``: the verdict depends only on the value's type,
           except the integer/number case which reduces to a bare
           ``is_js_integer`` probe (mirror of _v_type, schema.js:424-435)
         - ``format`` with assertion off: the reference's shipped build
-          hard-returns true (schema.js:499) — the entry is a no-op
-
-        The generator path (_errors) keeps the unfolded entries, so
-        surfaced errors and their stack residue are untouched; parity
-        is pinned by test_fast_path_matches_generator_path."""
-        prop, _affects, _validator, _is_gen, keyword_value, fast = e
+          hard-returns true (schema.js:499) — the entry is a no-op"""
+        prop, _affects, validator, keyword_value = e
         if prop == "type":
             members = keyword_value if isinstance(keyword_value, list) \
                 else [keyword_value]
             if any(isinstance(m, list) for m in members):
                 # _v_type recurses into nested member lists: no fold
-                return (prop, keyword_value, fast, True)
+                return (prop, keyword_value, validator, True)
             if any(m == vt for m in members):
                 return None                      # constant true → drop
             if "integer" in members and vt == "number":
-                return (prop, keyword_value, _fv_type_integer, True)
+                return (prop, keyword_value, _type_integer, True)
             return (prop, keyword_value, _always_false, True)
         if prop == "format" and not self.format_assertion:
             return None                          # hard true (schema.js:499)
-        return (prop, keyword_value, fast, prop in _STACK_OBLIVIOUS)
+        return (prop, keyword_value, validator, prop in _STACK_OBLIVIOUS)
 
     # -- the evaluation loop (schema.js:185-228) --------------------------
-    def _errors(self, value: Any, schema: Any,
-                scope: _Scope) -> Iterator[ValidationError]:
+    # Every failure point tests ``self._sink`` on its failure branch
+    # only, so the boolean hot loop does no extra work.  In collect mode
+    # the return values of _eval, the passes and the self-recording
+    # validators carry no meaning: the errors are in the sink.
+    #
+    # A probe — the ``errors(...).next().done`` idiom of anyOf, oneOf,
+    # not, the if test and contains (schema.js:60,316,386,400,410,419) —
+    # runs in boolean mode whatever the caller's mode: it sets the sink
+    # to None around its sub-evaluation and restores it afterwards.  Its
+    # errors are discarded by construction, and the abandonment residue
+    # a failed probe leaves is what the reference's quirky pops read.
+    def _eval(self, value: Any, schema: Any, scope: _Scope) -> bool:
         if schema is False:
-            yield self._error(value, False, "fails, false-schema at:")
-            return
-        if schema is True or not isinstance(schema, dict):
-            # boolean true schema (schema.js:187); a non-dict schema node
-            # has no keywords → vacuously valid
-            return
-
-        entries, resource, has_uneval_props, has_uneval_items, \
-            obj_pass, arr_pass, _by_type = self._node_plan(schema)
-
-        if resource is not None and (not scope or scope[-1] is not resource):
-            scope = scope + (resource,)
-        vtype = get_type(value)
-        if vtype == "object":
-            unevaluated_name = "unevaluatedProperties" if has_uneval_props \
-                else None
-        elif vtype == "array":
-            unevaluated_name = "unevaluatedItems" if has_uneval_items else None
-        else:
-            unevaluated_name = None
-
-        if unevaluated_name is not None:
-            if id(value) not in self.evaluated:
-                self.evaluated[id(value)] = set()
-
-        # NOTE: self.schema_stack must be read per operation, not bound
-        # to a local — iter_errors() rebinds the stack list, and a
-        # paused generator resumed afterwards must see the new list
-        # (the interleaving pin in test_kernel_pins.py)
-        for prop, affects, validator, is_gen, keyword_value, _fv in entries:
-            if affects is not None and affects != vtype:
-                continue  # type-gated: vacuously valid (schema.js:199)
-            self.schema_stack.append(prop)
-            if is_gen:
-                yield from validator(self, keyword_value, value, schema, scope)
-            else:
-                if not validator(self, keyword_value, value, schema, scope):
-                    yield self._error(value, keyword_value)
-            if self.schema_stack:  # inlined _safe_pop (hot path)
-                self.schema_stack.pop()
-
-        if vtype == "object":
-            if obj_pass:
-                yield from self._object_pass(schema, value, scope)
-        elif vtype == "array":
-            if arr_pass:
-                yield from self._array_pass(schema, value, scope)
-
-        if unevaluated_name is not None and unevaluated_name in schema:
-            evaluated = self.evaluated.get(id(value))
-            if evaluated is not None:
-                keys = list(value.keys()) if vtype == "object" else range(len(value))
-                for key in keys:
-                    if key in evaluated:
-                        continue
-                    yield from self._errors(value[key], schema[unevaluated_name], scope)
-                self.evaluated.pop(id(value), None)
-
-    # -- fused object pass (schema.js:231-288) ----------------------------
-    def _object_pass(self, schema: dict, value: dict,
-                     scope: _Scope) -> Iterator[ValidationError]:
-        cached = self._node_plans.get(("obj", id(schema)))
-        if cached is None:
-            cached = (
-                schema.get("properties"),
-                (list(schema["patternProperties"].items())
-                 if isinstance(schema.get("patternProperties"), dict) else None),
-                (schema.get("additionalProperties")
-                 if "additionalProperties" in schema else None),
-            )
-            self._node_plans[("obj", id(schema))] = cached
-        properties, pattern_properties, additional_properties = cached
-
-        for prop, item in list(value.items()):
-            self.data_stack.append(prop)
-            additional = True
-
-            prop_schema = properties.get(prop) if isinstance(properties, dict) else None
-            if prop_schema is not None:
-                self.schema_stack.append("properties")
-                self.schema_stack.append(prop)
-                yield from self._errors(item, prop_schema, scope)
-                _safe_pop(self.schema_stack)
-                _safe_pop(self.schema_stack)
-                additional = False
-
-            if pattern_properties:
-                self.schema_stack.append("patternProperties")
-                self.schema_stack.append(prop)
-                for pattern, sub in pattern_properties:
-                    if js_regex_search(pattern, prop):
-                        yield from self._errors(item, sub, scope)
-                        additional = False
-                _safe_pop(self.schema_stack)
-                _safe_pop(self.schema_stack)
-
-            if additional_properties is not None and additional:
-                self.schema_stack.append("additionalProperties")
-                yield from self._errors(item, additional_properties, scope)
-                _safe_pop(self.schema_stack)
-                additional = False
-
-            if not additional and not self.stop_collecting:
-                ev = self.evaluated.get(id(value))
-                if ev is not None:
-                    ev.add(prop)
-
-            if self.data_stack:  # inlined _safe_pop (hot path)
-                self.data_stack.pop()
-
-    # -- fused array pass (schema.js:289-338) -----------------------------
-    def _array_pass(self, schema: dict, value: list,
-                    scope: _Scope) -> Iterator[ValidationError]:
-        num_contains = 0
-        prefix_items = schema.get("prefixItems")
-        has_items = "items" in schema and schema.get("items") is not None
-        items = schema.get("items")
-        has_contains = "contains" in schema and schema.get("contains") is not None
-        contains = schema.get("contains")
-
-        for i, item in enumerate(value):
-            self.data_stack.append(i)
-            additional = True
-
-            prefix = (
-                prefix_items[i]
-                if isinstance(prefix_items, list) and i < len(prefix_items)
-                and prefix_items[i] is not None
-                else None
-            )
-            if prefix is not None:
-                yield from self._errors(item, prefix, scope)
-                additional = False
-            elif has_items:
-                for error in self._errors(item, items, scope):
-                    # "if items fail, all items are unevaluated" quirk
-                    # (schema.js:306)
-                    ev = self.evaluated.get(id(value))
-                    if ev is not None:
-                        ev.clear()
-                    yield error
-                additional = False
-
-            if has_contains:
-                if self._probe(item, contains, scope):
-                    num_contains += 1
-                    additional = False
-
-            if not additional and not self.stop_collecting:
-                ev = self.evaluated.get(id(value))
-                if ev is not None:
-                    ev.add(i)
-
-            if self.data_stack:  # inlined _safe_pop (hot path)
-                self.data_stack.pop()
-
-        if has_contains:
-            min_contains = schema.get("minContains", 1)
-            max_contains = schema.get("maxContains")
-            if num_contains < min_contains:
-                yield self._error(
-                    value, min_contains,
-                    'Array contains too few items that match "contains"')
-            if max_contains is not None and num_contains > max_contains:
-                yield self._error(
-                    value, max_contains,
-                    'Array contains too many items that match "contains"')
-
-    # -- generator-free boolean evaluation (round 9) ----------------------
-    # ``validate()`` and every probe only ever ask "is there an error":
-    # the generator machinery (one generator object per schema node
-    # visited, created and torn down ~20× per typical document) was
-    # ~35% of kernel wall time under cProfile.  ``_fast`` is a 1:1
-    # control-flow mirror of ``_errors`` where the FIRST error point
-    # returns False — exactly where a boolean consumer abandons the
-    # generator chain — with IDENTICAL side effects along the way:
-    # evaluated-set updates, stop_collecting, scope threading, and the
-    # schema/data stack pushes/pops *including the abandonment residue*
-    # (a failed generator probe leaves its path-to-first-error frames
-    # un-popped, which the reference's quirky pops in not/if depend on —
-    # schema.js:411,420 — and which surfaced iter_errors() messages
-    # observe).  Verdict parity with the generator path is pinned by
-    # the conformance suite, the differential batteries, and
-    # tests/test_kernel_pins.py::test_fast_path_matches_generator_path.
-    def _fast(self, value: Any, schema: Any, scope: _Scope) -> bool:
-        if schema is False:
+            if self._sink is not None:
+                self._sink.append(
+                    self._error(value, False, "fails, false-schema at:"))
             return False
         if not isinstance(schema, dict):
             # boolean true schema (schema.js:187) or a non-dict node with
@@ -518,12 +318,12 @@ class Validator:
         plan = self._node_plans.get(id(schema))
         if plan is None:
             plan = self._node_plan(schema)
-        resource = plan[1]
+        resource, by_type = plan
 
         if resource is not None and (not scope or scope[-1] is not resource):
             scope = scope + (resource,)
         vtype = _TYPE_DISPATCH.get(value.__class__) or get_type(value)
-        entries_t, unevaluated_name, obj_pass, arr_pass = plan[6][vtype]
+        entries, unevaluated_name, obj_pass, arr_pass = by_type[vtype]
 
         if unevaluated_name is not None:
             vid = id(value)
@@ -531,26 +331,34 @@ class Validator:
                 self.evaluated[vid] = set()
 
         stack = self.schema_stack
-        for prop, keyword_value, fast, oblivious in entries_t:
+        for prop, keyword_value, validator, oblivious in entries:
             if oblivious:
                 # the validator neither reads the stacks nor recurses,
-                # so the push/pop pair is observable only through the
-                # abandonment residue — push lazily, on failure only
-                if not fast(self, keyword_value, value, schema, scope):
+                # so the push/pop pair is observable only on failure —
+                # push lazily, on the failure branch only
+                if not validator(self, keyword_value, value, schema, scope):
                     stack.append(prop)
-                    return False
+                    if self._sink is None:
+                        return False  # abandonment: frame stays pushed
+                    self._sink.append(self._error(value, keyword_value))
+                    stack.pop()
                 continue
             stack.append(prop)
-            if not fast(self, keyword_value, value, schema, scope):
-                return False  # first error: frame stays pushed (abandonment)
+            if not validator(self, keyword_value, value, schema, scope):
+                if self._sink is None:
+                    return False  # abandonment: frame stays pushed
+                if validator not in _SELF_RECORDING:
+                    self._sink.append(self._error(value, keyword_value))
             if stack:  # inlined _safe_pop (hot path)
                 stack.pop()
 
         if obj_pass:
-            if not self._object_fast(schema, value, scope):
+            if not self._object_pass(schema, value, scope) \
+                    and self._sink is None:
                 return False
         elif arr_pass:
-            if not self._array_fast(schema, value, scope):
+            if not self._array_pass(schema, value, scope) \
+                    and self._sink is None:
                 return False
 
         if unevaluated_name is not None:
@@ -561,14 +369,14 @@ class Validator:
                 for key in keys:
                     if key in evaluated:
                         continue
-                    if not self._fast(value[key], sub, scope):
+                    if not self._eval(value[key], sub, scope) \
+                            and self._sink is None:
                         return False
                 self.evaluated.pop(vid, None)
         return True
 
-    def _object_fast(self, schema: dict, value: dict, scope: _Scope) -> bool:
-        """Boolean mirror of :meth:`_object_pass` (first error → False,
-        identical stack/evaluated-set side effects)."""
+    # -- fused object pass (schema.js:231-288) ----------------------------
+    def _object_pass(self, schema: dict, value: dict, scope: _Scope) -> bool:
         cached = self._node_plans.get(("obj", id(schema)))
         if cached is None:
             cached = (
@@ -596,7 +404,8 @@ class Validator:
             if prop_schema is not None:
                 sstack.append("properties")
                 sstack.append(prop)
-                if not self._fast(item, prop_schema, scope):
+                if not self._eval(item, prop_schema, scope) \
+                        and self._sink is None:
                     return False
                 if sstack:  # inlined _safe_pop (hot path)
                     sstack.pop()
@@ -609,7 +418,8 @@ class Validator:
                 sstack.append(prop)
                 for pattern, sub in pattern_properties:
                     if js_regex_search(pattern, prop):
-                        if not self._fast(item, sub, scope):
+                        if not self._eval(item, sub, scope) \
+                                and self._sink is None:
                             return False
                         additional = False
                 if sstack:  # inlined _safe_pop (hot path)
@@ -619,7 +429,8 @@ class Validator:
 
             if additional_properties is not None and additional:
                 sstack.append("additionalProperties")
-                if not self._fast(item, additional_properties, scope):
+                if not self._eval(item, additional_properties, scope) \
+                        and self._sink is None:
                     return False
                 if sstack:  # inlined _safe_pop (hot path)
                     sstack.pop()
@@ -633,10 +444,8 @@ class Validator:
                 dstack.pop()
         return True
 
-    def _array_fast(self, schema: dict, value: list, scope: _Scope) -> bool:
-        """Boolean mirror of :meth:`_array_pass` (first error → False,
-        incl. the items-failure evaluated-set clear quirk, which in the
-        generator runs *before* the error is yielded — schema.js:306)."""
+    # -- fused array pass (schema.js:289-338) -----------------------------
+    def _array_pass(self, schema: dict, value: list, scope: _Scope) -> bool:
         cached = self._node_plans.get(("arr", id(schema)))
         if cached is None:
             cached = (
@@ -653,8 +462,9 @@ class Validator:
          min_contains, max_contains) = cached
         num_contains = 0
         dstack = self.data_stack
+        sink = self._sink
         n_prefix = len(prefix_items) if isinstance(prefix_items, list) else 0
-        # stable for the whole pass — same argument as _object_fast
+        # stable for the whole pass — same argument as _object_pass
         ev = self.evaluated.get(id(value))
 
         for i, item in enumerate(value):
@@ -667,22 +477,27 @@ class Validator:
                 else None
             )
             if prefix is not None:
-                if not self._fast(item, prefix, scope):
+                if not self._eval(item, prefix, scope) and sink is None:
                     return False
                 additional = False
             elif has_items:
-                if not self._fast(item, items, scope):
+                recorded = 0 if sink is None else len(sink)
+                if not self._eval(item, items, scope) \
+                        or (sink is not None and len(sink) > recorded):
                     # "if items fail, all items are unevaluated" quirk
-                    # (schema.js:306) — the clear precedes the error
+                    # (schema.js:306)
                     if ev is not None:
                         ev.clear()
-                    return False
+                    if sink is None:
+                        return False
                 additional = False
 
             if has_contains:
-                if self._fast(item, contains, scope):
+                self._sink = None   # probe
+                if self._eval(item, contains, scope):
                     num_contains += 1
                     additional = False
+                self._sink = sink
 
             if not additional and ev is not None \
                     and not self.stop_collecting:
@@ -693,27 +508,39 @@ class Validator:
 
         if has_contains:
             if num_contains < min_contains:
-                return False
+                if sink is None:
+                    return False
+                sink.append(self._error(
+                    value, min_contains,
+                    'Array contains too few items that match "contains"'))
             if max_contains is not None and num_contains > max_contains:
-                return False
+                if sink is None:
+                    return False
+                sink.append(self._error(
+                    value, max_contains,
+                    'Array contains too many items that match "contains"'))
         return True
 
 
 # ---------------------------------------------------------------------------
-# Vocabulary (schema.js:342-663).  Each entry: (affects, validator, is_gen).
-# Boolean validators return truthy/falsy; generator validators yield errors.
+# Vocabulary (schema.js:342-663).  Each entry: (affects, validator).
+# A validator returns truthy/falsy; the evaluation loop records one error
+# for a falsy result, except for the _SELF_RECORDING validators, which
+# evaluate sub-schemas or report per-item errors themselves.
 # ---------------------------------------------------------------------------
 
-def _v_ref(v: Validator, url: str, value: Any, schema: dict, scope: _Scope):
+def _v_ref(v: Validator, url: str, value: Any, schema: dict,
+           scope: _Scope) -> bool:
     target = v._ref_target(schema)
     if target is None:
         # mirror of the reference's missing-ref failure: console.error then
         # a crash on the undefined schema (pinned by tests.html:583-595)
         raise RefResolutionError(f"$ref-schema not found: {url}")
-    yield from v._errors(value, target, scope)
+    return v._eval(value, target, scope)
 
 
-def _v_dynamic_ref(v: Validator, url: str, value: Any, schema: dict, scope: _Scope):
+def _v_dynamic_ref(v: Validator, url: str, value: Any, schema: dict,
+                   scope: _Scope) -> bool:
     target = v._ref_target(schema)
     frag = url.split("#", 1)[1] if "#" in url else ""
     name = frag if frag and "/" not in frag else None
@@ -731,14 +558,19 @@ def _v_dynamic_ref(v: Validator, url: str, value: Any, schema: dict, scope: _Sco
                 break
     if target is None:
         raise RefResolutionError(f"$dynamicRef-schema not found: {url}")
-    yield from v._errors(value, target, scope)
+    return v._eval(value, target, scope)
 
 
-def _v_all_of(v: Validator, all_of: list, value: Any, schema: dict, scope: _Scope):
+def _v_all_of(v: Validator, all_of: list, value: Any, schema: dict,
+              scope: _Scope) -> bool:
+    stack = v.schema_stack
     for i, sub in enumerate(all_of):
-        v.schema_stack.append(i)
-        yield from v._errors(value, sub, scope)
-        _safe_pop(v.schema_stack)
+        stack.append(i)
+        if not v._eval(value, sub, scope) and v._sink is None:
+            return False  # abandonment: frame stays pushed
+        if stack:  # inlined _safe_pop (hot path)
+            stack.pop()
+    return True
 
 
 def _v_any_of(v: Validator, any_of: list, value: Any, schema: dict,
@@ -746,28 +578,35 @@ def _v_any_of(v: Validator, any_of: list, value: Any, schema: dict,
     # short-circuits on first pass unless collecting annotations for
     # unevaluated* (schema.js:381-395)
     collecting = id(value) in v.evaluated
+    sink, v._sink = v._sink, None   # probes
     any_ok = False
     for sub in any_of:
-        if v._fast(value, sub, scope):
-            if not collecting:
-                return True
+        if v._eval(value, sub, scope):
             any_ok = True
+            if not collecting:
+                break
+    v._sink = sink
     return any_ok
 
 
 def _v_one_of(v: Validator, one_of: list, value: Any, schema: dict,
               scope: _Scope) -> bool:
+    sink, v._sink = v._sink, None   # probes
     passed = 0
     for sub in one_of:
-        passed += 1 if v._fast(value, sub, scope) else 0
-        if passed > 1:
-            return False
+        if v._eval(value, sub, scope):
+            passed += 1
+            if passed > 1:
+                break
+    v._sink = sink
     return passed == 1
 
 
 def _v_not(v: Validator, sub: Any, value: Any, schema: dict, scope: _Scope) -> bool:
     v.stop_collecting = True
-    ok = v._fast(value, sub, scope)
+    sink, v._sink = v._sink, None   # probe
+    ok = v._eval(value, sub, scope)
+    v._sink = sink
     stack = v.schema_stack
     if stack:  # quirky extra pop, mirror of schema.js:411 (inlined _safe_pop)
         stack.pop()
@@ -775,18 +614,22 @@ def _v_not(v: Validator, sub: Any, value: Any, schema: dict, scope: _Scope) -> b
     return not ok
 
 
-def _v_if(v: Validator, if_schema: Any, value: Any, schema: dict, scope: _Scope):
-    ok = v._probe(value, if_schema, scope)
-    _safe_pop(v.schema_stack)  # mirror of schema.js:420
-    if ok:
-        v.schema_stack.append("then")
-        if "then" in schema and schema["then"] is not None:
-            yield from v._errors(value, schema["then"], scope)
-    else:
-        v.schema_stack.append("else")
-        if "else" in schema and schema["else"] is not None:
-            yield from v._errors(value, schema["else"], scope)
-    _safe_pop(v.schema_stack)
+def _v_if(v: Validator, if_schema: Any, value: Any, schema: dict,
+          scope: _Scope) -> bool:
+    sink, v._sink = v._sink, None   # probe
+    ok = v._eval(value, if_schema, scope)
+    v._sink = sink
+    stack = v.schema_stack
+    if stack:  # mirror of schema.js:420 (inlined _safe_pop)
+        stack.pop()
+    branch = "then" if ok else "else"
+    stack.append(branch)
+    if branch in schema and schema[branch] is not None:
+        if not v._eval(value, schema[branch], scope) and sink is None:
+            return False
+    if stack:  # inlined _safe_pop (hot path)
+        stack.pop()
+    return True
 
 
 def _v_type(v: Validator, type_: Any, value: Any, schema: dict, scope: _Scope) -> bool:
@@ -797,6 +640,21 @@ def _v_type(v: Validator, type_: Any, value: Any, schema: dict, scope: _Scope) -
         return True
     if type_ == "integer" and vtype == "number" and is_js_integer(value):
         return True
+    return False
+
+
+def _type_integer(v: Validator, t: Any, value: Any, schema: dict,
+                  scope: _Scope) -> bool:
+    # plan-time residue of a ``type`` check containing "integer" visited
+    # with a number: the only data-dependent branch of _v_type
+    return is_js_integer(value)
+
+
+def _always_false(v: Validator, t: Any, value: Any, schema: dict,
+                  scope: _Scope) -> bool:
+    # plan-time constant-false ``type`` check (wrong value type): the
+    # entry stays in the plan so the failure push lands at the same
+    # position as the unfolded validator's
     return False
 
 
@@ -833,12 +691,15 @@ def _v_unique_items(v: Validator, unique: Any, value: list, schema: dict,
 
 
 def _v_required(v: Validator, required: list, value: dict, schema: dict,
-                scope: _Scope):
+                scope: _Scope) -> bool:
     for i, prop in enumerate(required):
         if prop not in value:
             v.schema_stack.append(i)
-            yield v._error(value, prop, "missing required property")
+            if v._sink is None:
+                return False  # abandonment: frame stays pushed
+            v._sink.append(v._error(value, prop, "missing required property"))
             _safe_pop(v.schema_stack)
+    return True
 
 
 def _v_dependent_required(v: Validator, deps: dict, value: dict, schema: dict,
@@ -852,139 +713,18 @@ def _v_dependent_required(v: Validator, deps: dict, value: dict, schema: dict,
 
 
 def _v_dependent_schemas(v: Validator, deps: dict, value: dict, schema: dict,
-                         scope: _Scope):
+                         scope: _Scope) -> bool:
     for prop, sub in deps.items():
         if prop in value:
-            yield from v._errors(value, sub, scope)
+            if not v._eval(value, sub, scope) and v._sink is None:
+                return False
+    return True
 
 
 def _v_dependencies(v: Validator, deps: dict, value: Any, schema: dict,
-                    scope: _Scope):
+                    scope: _Scope) -> bool:
     # draft-4 legacy shim (schema.js:626-642) — no affects gate in the
     # reference either, but Object.hasOwn on non-objects is false
-    if not isinstance(value, dict):
-        return
-    for prop, dep in deps.items():
-        if prop in value:
-            if isinstance(dep, list):
-                for req in dep:
-                    if req not in value:
-                        yield v._error(value, req, "missing required property")
-            else:
-                yield from v._errors(value, dep, scope)
-
-
-def _v_property_names(v: Validator, sub: Any, value: dict, schema: dict,
-                      scope: _Scope):
-    for prop in list(value.keys()):
-        yield from v._errors(prop, sub, scope)
-
-
-# ---------------------------------------------------------------------------
-# Fast (generator-free) twins of the generator validators — used by the
-# boolean evaluator ``Validator._fast`` (round 9).  Each is the 1:1
-# first-error-returns-False mirror of its generator twin above, with
-# identical stack side effects including abandonment residue.
-# ---------------------------------------------------------------------------
-
-def _fv_type_integer(v: Validator, t: Any, value: Any, schema: dict,
-                     scope: _Scope) -> bool:
-    # plan-time residue of a ``type`` check containing "integer" visited
-    # with a number: the only data-dependent branch of _v_type
-    return is_js_integer(value)
-
-
-def _always_false(v: Validator, t: Any, value: Any, schema: dict,
-                  scope: _Scope) -> bool:
-    # plan-time constant-false ``type`` check (wrong value type): the
-    # entry stays in the plan so the failure push/abandonment residue
-    # lands at the same position as the unfolded validator's
-    return False
-
-
-def _fv_ref(v: Validator, url: str, value: Any, schema: dict,
-            scope: _Scope) -> bool:
-    target = v._ref_target(schema)
-    if target is None:
-        raise RefResolutionError(f"$ref-schema not found: {url}")
-    return v._fast(value, target, scope)
-
-
-def _fv_dynamic_ref(v: Validator, url: str, value: Any, schema: dict,
-                    scope: _Scope) -> bool:
-    target = v._ref_target(schema)
-    frag = url.split("#", 1)[1] if "#" in url else ""
-    name = frag if frag and "/" not in frag else None
-    if (
-        name is not None
-        and isinstance(target, dict)
-        and target.get("$dynamicAnchor") == name
-    ):
-        for res in scope:
-            cand = res.dyn_anchors.get(name)
-            if cand is not None:
-                target = cand
-                break
-    if target is None:
-        raise RefResolutionError(f"$dynamicRef-schema not found: {url}")
-    return v._fast(value, target, scope)
-
-
-def _fv_all_of(v: Validator, all_of: list, value: Any, schema: dict,
-               scope: _Scope) -> bool:
-    stack = v.schema_stack
-    for i, sub in enumerate(all_of):
-        stack.append(i)
-        if not v._fast(value, sub, scope):
-            return False  # abandonment: frame stays pushed
-        if stack:  # inlined _safe_pop (hot path)
-            stack.pop()
-    return True
-
-
-def _fv_if(v: Validator, if_schema: Any, value: Any, schema: dict,
-           scope: _Scope) -> bool:
-    ok = v._fast(value, if_schema, scope)
-    stack = v.schema_stack
-    if stack:  # mirror of schema.js:420 (inlined _safe_pop)
-        stack.pop()
-    if ok:
-        stack.append("then")
-        if "then" in schema and schema["then"] is not None:
-            if not v._fast(value, schema["then"], scope):
-                return False
-    else:
-        stack.append("else")
-        if "else" in schema and schema["else"] is not None:
-            if not v._fast(value, schema["else"], scope):
-                return False
-    if stack:  # inlined _safe_pop (hot path)
-        stack.pop()
-    return True
-
-
-def _fv_required(v: Validator, required: list, value: dict, schema: dict,
-                 scope: _Scope) -> bool:
-    for i, prop in enumerate(required):
-        if prop not in value:
-            # generator: push i, yield, pop — a boolean consumer stops
-            # at the yield, so the frame stays pushed
-            v.schema_stack.append(i)
-            return False
-    return True
-
-
-def _fv_dependent_schemas(v: Validator, deps: dict, value: dict, schema: dict,
-                          scope: _Scope) -> bool:
-    for prop, sub in deps.items():
-        if prop in value:
-            if not v._fast(value, sub, scope):
-                return False
-    return True
-
-
-def _fv_dependencies(v: Validator, deps: dict, value: Any, schema: dict,
-                     scope: _Scope) -> bool:
     if not isinstance(value, dict):
         return True
     for prop, dep in deps.items():
@@ -992,80 +732,88 @@ def _fv_dependencies(v: Validator, deps: dict, value: Any, schema: dict,
             if isinstance(dep, list):
                 for req in dep:
                     if req not in value:
-                        return False
-            else:
-                if not v._fast(value, dep, scope):
-                    return False
+                        if v._sink is None:
+                            return False
+                        v._sink.append(v._error(
+                            value, req, "missing required property"))
+            elif not v._eval(value, dep, scope) and v._sink is None:
+                return False
     return True
 
 
-def _fv_property_names(v: Validator, sub: Any, value: dict, schema: dict,
-                       scope: _Scope) -> bool:
+def _v_property_names(v: Validator, sub: Any, value: dict, schema: dict,
+                      scope: _Scope) -> bool:
     for prop in value.keys():
-        if not v._fast(prop, sub, scope):
+        if not v._eval(prop, sub, scope) and v._sink is None:
             return False
     return True
 
 
-# (affects, validator, is_generator) — registration mirror of the
-# vocabulary table (schema.js:342-663).  Keywords with no validator are
-# traversal-only (subSchema markers live in schema/frontend.py).
+# (affects, validator) — registration mirror of the vocabulary table
+# (schema.js:342-663).  Keywords with no validator are traversal-only
+# (subSchema markers live in schema/frontend.py).
 _VOCABULARY: Dict[str, tuple] = {
-    "$schema": (None, None, False),
-    "$vocabulary": (None, None, False),
-    "$id": (None, None, False),
-    "$anchor": (None, None, False),
-    "$dynamicAnchor": (None, None, False),
-    "$defs": (None, None, False),
-    "$ref": (None, _v_ref, True),
-    "$dynamicRef": (None, _v_dynamic_ref, True),
-    "allOf": (None, _v_all_of, True),
-    "anyOf": (None, _v_any_of, False),
-    "oneOf": (None, _v_one_of, False),
-    "not": (None, _v_not, False),
-    "if": (None, _v_if, True),
-    "then": (None, None, False),
-    "else": (None, None, False),
-    "type": (None, _v_type, False),
-    "enum": (None, _v_enum, False),
-    "const": (None, _v_const, False),
-    "multipleOf": ("number", lambda v, m, val, s, sc: js_multiple_of(val, m), False),
-    "maximum": ("number", lambda v, m, val, s, sc: val <= m, False),
-    "exclusiveMaximum": ("number", lambda v, m, val, s, sc: val < m, False),
-    "minimum": ("number", lambda v, m, val, s, sc: val >= m, False),
-    "exclusiveMinimum": ("number", lambda v, m, val, s, sc: val > m, False),
-    "maxLength": ("string", lambda v, m, val, s, sc: len(val) <= m, False),
-    "minLength": ("string", lambda v, m, val, s, sc: len(val) >= m, False),
-    "pattern": ("string", lambda v, p, val, s, sc: js_regex_search(p, val), False),
-    "format": ("string", _v_format, False),
-    "maxItems": ("array", lambda v, m, val, s, sc: len(val) <= m, False),
-    "minItems": ("array", lambda v, m, val, s, sc: len(val) >= m, False),
-    "uniqueItems": ("array", _v_unique_items, False),
-    "items": (None, None, False),
-    "additionalItems": (None, None, False),
-    "contains": (None, None, False),
-    "prefixItems": (None, None, False),
-    "unevaluatedItems": (None, None, False),
-    "properties": (None, None, False),
-    "additionalProperties": (None, None, False),
-    "unevaluatedProperties": (None, None, False),
-    "patternProperties": (None, None, False),
-    "maxProperties": ("object", lambda v, m, val, s, sc: len(val) <= m, False),
-    "minProperties": ("object", lambda v, m, val, s, sc: len(val) >= m, False),
-    "required": ("object", _v_required, True),
-    "dependentRequired": ("object", _v_dependent_required, False),
-    "dependentSchemas": ("object", _v_dependent_schemas, True),
-    "dependencies": (None, _v_dependencies, True),
-    "propertyNames": ("object", _v_property_names, True),
+    "$schema": (None, None),
+    "$vocabulary": (None, None),
+    "$id": (None, None),
+    "$anchor": (None, None),
+    "$dynamicAnchor": (None, None),
+    "$defs": (None, None),
+    "$ref": (None, _v_ref),
+    "$dynamicRef": (None, _v_dynamic_ref),
+    "allOf": (None, _v_all_of),
+    "anyOf": (None, _v_any_of),
+    "oneOf": (None, _v_one_of),
+    "not": (None, _v_not),
+    "if": (None, _v_if),
+    "then": (None, None),
+    "else": (None, None),
+    "type": (None, _v_type),
+    "enum": (None, _v_enum),
+    "const": (None, _v_const),
+    "multipleOf": ("number", lambda v, m, val, s, sc: js_multiple_of(val, m)),
+    "maximum": ("number", lambda v, m, val, s, sc: val <= m),
+    "exclusiveMaximum": ("number", lambda v, m, val, s, sc: val < m),
+    "minimum": ("number", lambda v, m, val, s, sc: val >= m),
+    "exclusiveMinimum": ("number", lambda v, m, val, s, sc: val > m),
+    "maxLength": ("string", lambda v, m, val, s, sc: len(val) <= m),
+    "minLength": ("string", lambda v, m, val, s, sc: len(val) >= m),
+    "pattern": ("string", lambda v, p, val, s, sc: js_regex_search(p, val)),
+    "format": ("string", _v_format),
+    "maxItems": ("array", lambda v, m, val, s, sc: len(val) <= m),
+    "minItems": ("array", lambda v, m, val, s, sc: len(val) >= m),
+    "uniqueItems": ("array", _v_unique_items),
+    "items": (None, None),
+    "additionalItems": (None, None),
+    "contains": (None, None),
+    "prefixItems": (None, None),
+    "unevaluatedItems": (None, None),
+    "properties": (None, None),
+    "additionalProperties": (None, None),
+    "unevaluatedProperties": (None, None),
+    "patternProperties": (None, None),
+    "maxProperties": ("object", lambda v, m, val, s, sc: len(val) <= m),
+    "minProperties": ("object", lambda v, m, val, s, sc: len(val) >= m),
+    "required": ("object", _v_required),
+    "dependentRequired": ("object", _v_dependent_required),
+    "dependentSchemas": ("object", _v_dependent_schemas),
+    "dependencies": (None, _v_dependencies),
+    "propertyNames": ("object", _v_property_names),
 }
 
-# Boolean keywords whose validators neither read the schema/data
-# stacks nor recurse into sub-schemas (no probes, no _fast/_errors
-# calls): for these the fast path defers the schema-stack push to the
-# failure branch — the push/pop pair is observable only through the
-# abandonment residue, which is preserved exactly.  anyOf/oneOf/not
-# are NOT here (their probes run nested evaluations that mutate and
-# observe the stacks).
+# Validators that record their own errors in collect mode (the
+# reference's generator validators): the evaluation loop adds no error
+# of its own when one of these reports failure.
+_SELF_RECORDING = frozenset({
+    _v_ref, _v_dynamic_ref, _v_all_of, _v_if, _v_required,
+    _v_dependent_schemas, _v_dependencies, _v_property_names,
+})
+
+# Keywords whose validators neither read the schema/data stacks nor
+# recurse into sub-schemas (no probes, no _eval calls): for these the
+# evaluation loop defers the schema-stack push to the failure branch.
+# anyOf/oneOf/not are NOT here (their probes run nested evaluations
+# that mutate and observe the stacks).
 _STACK_OBLIVIOUS = frozenset({
     "type", "enum", "const", "multipleOf",
     "maximum", "exclusiveMaximum", "minimum", "exclusiveMinimum",
@@ -1073,19 +821,6 @@ _STACK_OBLIVIOUS = frozenset({
     "maxItems", "minItems", "uniqueItems",
     "maxProperties", "minProperties", "dependentRequired",
 })
-
-# generator validator → its boolean fast twin (round 9); resolved once
-# per node into the node plan by Validator._node_plan
-_FAST_TWINS: Dict[Any, Any] = {
-    _v_ref: _fv_ref,
-    _v_dynamic_ref: _fv_dynamic_ref,
-    _v_all_of: _fv_all_of,
-    _v_if: _fv_if,
-    _v_required: _fv_required,
-    _v_dependent_schemas: _fv_dependent_schemas,
-    _v_dependencies: _fv_dependencies,
-    _v_property_names: _fv_property_names,
-}
 
 
 # -- module-level conveniences ------------------------------------------------

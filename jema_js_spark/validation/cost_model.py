@@ -5,9 +5,9 @@ The routed JSON plane is PARSE-bound: one ``from_json`` + a
 ``to_json`` round-trip proof per document, at roughly constant docs/s
 regardless of the contract.  The kernel plane is CONTRACT-bound: its
 per-document cost is ``json.loads`` (C scanner) plus a Python keyword
-walk whose size tracks the schema, under ``_boolean_mode``
-short-circuiting (the reference's own perf stance — lazy first-error,
-``schema.js:59-61``).
+walk whose size tracks the schema, in the evaluator's boolean mode,
+which stops at the first failure (the reference's own perf stance —
+lazy first-error, ``schema.js:59-61``).
 
 The round-8 calibration (tools/calibrate_route_cost.py — graded
 contracts over 1M canonical docs, interleaved kernel/route pairs,

@@ -1685,8 +1685,8 @@ def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
             # screening entirely for these contracts, leaving the
             # errors pass kernel-bound for exactly the contracts that
             # are already slowest.  Instead: screen with the whole-doc
-            # VERDICT UDF (boolean _boolean_mode walk, ~3.8× cheaper
-            # than iter_errors' message formatting), its input masked
+            # VERDICT UDF (the kernel's boolean mode: it stops at the
+            # first failure and formats no messages), its input masked
             # to NULL on rows that are in the residue regardless —
             # unrouted rows (iter_errors self-screens them) and routed
             # rows failing a Plane-A check (invalid without consulting

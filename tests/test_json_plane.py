@@ -369,6 +369,22 @@ def test_json_violation_rows_matches_kernel_errors(spark):
     assert valid_ids.isdisjoint(got), valid_ids & set(got)
 
 
+def test_json_violation_rows_reports_errors_then_the_raise(spark):
+    """A contract whose evaluation records an error and THEN raises (a
+    failing ``type`` before a dangling ``$ref``): the kernel yields the
+    ``type`` error and then raises RefResolutionError, so the errors
+    pass emits the ``type`` row followed by one ``__error__`` row."""
+    from jema_js_spark.validation.json_plane import json_violation_rows
+
+    contract = {"type": "string", "$ref": "#/$defs/nope"}
+    df = spark.createDataFrame([(0, "5")], "i long, doc string")
+    rows = json_violation_rows(df, "doc", contract, id_cols=["i"]).collect()
+    got = [(r["i"], r["keyword"], r["message"]) for r in rows]
+    assert got[:1] == [(0, "type", '"5" does not match type:string')], got
+    assert [(i, k) for i, k, _ in got[1:]] == [(0, "__error__")], got
+    assert "$ref-schema not found" in got[1][2], got
+
+
 def _try_valid(v, d):
     try:
         return v.validate(json.loads(d))

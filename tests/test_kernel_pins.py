@@ -164,9 +164,43 @@ def test_pending_iter_errors_survives_interleaved_validate():
 
     v = Validator(Schema({"minimum": 10}))
     pending = v.iter_errors(3)            # lazy — not consumed yet
-    assert v.validate(99) is True         # flips boolean mode internally
+    assert v.validate(99) is True         # a boolean-mode run in between
     msgs = [e.message for e in pending]
     assert msgs == ['"3" does not match minimum:10'], msgs
+
+
+def test_pending_iter_errors_ignores_interleaved_failing_residue():
+    """A pending iter_errors() starts its run on empty stacks at its
+    first next(), so a FAILING validate() in between no longer leaks its
+    abandonment residue (here ``["required", 0]``) into the pending
+    run's error stacks.  Disclosed behaviour shift: the two-evaluator
+    kernel reset the stacks when iter_errors() was called and read the
+    residue back as ``["required", 0, "required", 0]`` and
+    ``["required", 0, "properties", "a", "minimum"]``."""
+    v = Validator(Schema({"properties": {"a": {"minimum": 10}},
+                          "required": ["b"]}))
+    pending = v.iter_errors({"a": 3})     # lazy — not consumed yet
+    assert v.validate({"a": 3}) is False  # leaves ["required", 0] behind
+    assert v.schema_stack == ["required", 0]
+    errs = [(e.message, e.schema_stack, e.data_stack) for e in pending]
+    assert errs == [
+        ("object missing required property 0:b", ["required", 0], []),
+        ('"3" does not match minimum:10',
+         ["properties", "a", "minimum"], ["a"]),
+    ], errs
+
+
+def test_validate_does_not_accumulate_stack_residue():
+    """A failing validate() leaves its abandonment residue on the
+    stacks; the next call must start from empty stacks, or a Validator
+    cached for a worker's lifetime grows them without bound."""
+    v = Validator(Schema({"properties": {"a": {"type": "integer"}},
+                          "required": ["b"]}))
+    assert v.validate({"a": "x"}) is False
+    one = len(v.schema_stack) + len(v.data_stack)
+    for _ in range(10_000):
+        assert v.validate({"a": "x"}) is False
+    assert len(v.schema_stack) + len(v.data_stack) <= one
 
 
 def test_depth_limits_are_clean_on_both_axes():
@@ -227,12 +261,12 @@ def test_depth_limits_are_clean_on_both_axes():
 ])
 @pytest.mark.parametrize("path", ["validate", "iter_errors"])
 def test_depth_limit_thresholds_are_pinned(shape, lo, hi, path):
-    """Where DepthLimitExceeded first fires, per evaluator, in a bracket
+    """Where DepthLimitExceeded first fires, per consumer, in a bracket
     (measured under the 20,000-frame budget: 4,998 levels against a
     recursive $ref schema and 9,995 against a literally nested one, the
-    same on the fast boolean path and the generator path — a $ref hop
-    costs extra frames per level).  A rewrite of either evaluator that
-    moves the threshold out of its bracket must do so on purpose."""
+    same in validate's boolean mode and iter_errors' collect mode — a
+    $ref hop costs extra frames per level).  A rewrite of the evaluator
+    that moves the threshold out of its bracket must do so on purpose."""
     import sys
 
     from jema_js_spark.kernel.kernel import DepthLimitExceeded
@@ -268,49 +302,47 @@ def test_depth_limit_thresholds_are_pinned(shape, lo, hi, path):
 
 
 class TestFastPlanConstantFolds:
-    """Round 9: the fast-path per-vtype plans constant-fold ``type``
-    checks (and ``format`` with assertion off) at plan time
-    (Validator._fold_fast_entry).  These pins walk the fold's decision
+    """Round 9: the per-vtype plans constant-fold ``type`` checks (and
+    ``format`` with assertion off) at plan time
+    (Validator._fold_entry).  These pins walk the fold's decision
     boundaries — especially the one data-dependent branch
-    (integer-member type vs a number value) — and assert the
-    abandonment residue a folded failure leaves is identical to the
-    generator path's, so surfaced iter_errors() messages can never
-    observe the fold."""
+    (integer-member type vs a number value) — and assert that the
+    ``validate`` verdict agrees with the full ``iter_errors`` sequence
+    and that the abandonment residue a folded failure leaves is the
+    unfolded validator's (pinned as literals)."""
 
     def _both(self, schema, doc):
-        """(fast verdict, generator verdict, fast residue, gen residue)."""
+        """(validate verdict, iter_errors verdict, validate residue)."""
         vf = Validator(Schema(schema))
         fast = vf.validate(doc)
-        f_res = list(vf.schema_stack)
-        vg = Validator(Schema(schema))
-        first = next(iter(vg.iter_errors(doc)), None)
-        gen = first is None
-        g_res = list(vg.schema_stack)
-        return fast, gen, f_res, g_res
+        errors = list(Validator(Schema(schema)).iter_errors(doc))
+        return fast, errors == [], list(vf.schema_stack)
 
-    @pytest.mark.parametrize("schema,doc", [
-        ({"type": "integer"}, 3),
-        ({"type": "integer"}, 3.0),          # runtime is_js_integer branch
-        ({"type": "integer"}, 3.5),
-        ({"type": "integer"}, float(2**53)),
-        ({"type": "integer"}, "3"),          # constant-false fold
-        ({"type": "number"}, 3),
-        ({"type": ["string", "integer"]}, "x"),   # direct-member fold
-        ({"type": ["string", "integer"]}, 4.0),   # integer member, number value
-        ({"type": ["string", "integer"]}, 4.5),
-        ({"type": ["number"]}, True),        # bool is not number
-        ({"type": 5}, 5),                    # hostile non-string type value
-        ({"type": {"a": 1}}, {"a": 1}),
-        ({"properties": {"a": {"type": "string"}}}, {"a": 1}),
-        ({"items": {"type": "integer"}}, [1, "x", 3]),
-        ({"format": "email"}, "not an email"),   # annotation-only: folded true
-        ({"type": [["string"]]}, "x"),      # nested member list: no fold
-        ({"type": [["integer"], "null"]}, 5.0),
+    @pytest.mark.parametrize("schema,doc,residue", [
+        ({"type": "integer"}, 3, []),
+        ({"type": "integer"}, 3.0, []),      # runtime is_js_integer branch
+        ({"type": "integer"}, 3.5, ["type"]),
+        ({"type": "integer"}, float(2**53), []),
+        ({"type": "integer"}, "3", ["type"]),   # constant-false fold
+        ({"type": "number"}, 3, []),
+        ({"type": ["string", "integer"]}, "x", []),   # direct-member fold
+        ({"type": ["string", "integer"]}, 4.0, []),   # integer member, number value
+        ({"type": ["string", "integer"]}, 4.5, ["type"]),
+        ({"type": ["number"]}, True, ["type"]),   # bool is not number
+        ({"type": 5}, 5, ["type"]),          # hostile non-string type value
+        ({"type": {"a": 1}}, {"a": 1}, ["type"]),
+        ({"properties": {"a": {"type": "string"}}}, {"a": 1},
+         ["properties", "a", "type"]),
+        ({"items": {"type": "integer"}}, [1, "x", 3], ["type"]),
+        ({"format": "email"}, "not an email", []),   # annotation-only: folded true
+        ({"type": [["string"]]}, "x", []),  # nested member list: no fold
+        ({"type": [["integer"], "null"]}, 5.0, []),
     ])
-    def test_fold_verdict_and_residue_match_generator(self, schema, doc):
-        fast, gen, f_res, g_res = self._both(schema, doc)
+    def test_fold_verdict_and_residue_match_generator(self, schema, doc,
+                                                      residue):
+        fast, gen, f_res = self._both(schema, doc)
         assert fast == gen
-        assert f_res == g_res   # abandonment residue byte-identical
+        assert f_res == residue   # abandonment residue of the unfolded run
 
     def test_format_assertion_mode_is_not_folded(self):
         # the fold drops format entries ONLY when assertion is off; an

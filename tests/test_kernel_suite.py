@@ -33,14 +33,13 @@ def test_suite_case(i: int) -> None:
     )
 
 
-def test_fast_path_matches_generator_path():
-    """Round 9: ``validate()`` runs the generator-free boolean evaluator
-    (``Validator._fast``); ``iter_errors()`` keeps the reference's lazy
-    generator.  The two must agree on EVERY corpus case — verdict ==
-    (iter_errors emitted nothing) — so a divergence in the fast mirror
-    (side-effect ordering, evaluated-set handling, abandonment residue)
-    fails here before it can split a Spark verdict from the error
-    surface."""
+def test_boolean_mode_matches_collect_mode():
+    """``validate()`` runs the kernel's evaluator in boolean mode and
+    ``iter_errors()`` runs it in collect mode.  The two must agree on
+    EVERY corpus case — verdict == (iter_errors emits nothing first) — so
+    a failure point that one mode handles differently (side-effect
+    ordering, evaluated-set handling, abandonment residue) fails here
+    before it can split a Spark verdict from the error surface."""
     reg = load_remote_registry()
 
     def outcome(fn):
