@@ -283,29 +283,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                 F.col("event_id").cast("string"),
                                 F.lit("}")))
                  .otherwise(F.lit('{"myid":"s"}'))))
-        # plan_shape="masked" FORCES the route (round 8): these columns
-        # are the routed plane's oracle surface, so no present or
-        # future auto cost-model policy (expected_docs hints,
-        # recalibrated cutoffs) may ever divert them to the kernel.
-        # masked stacks linearly: each shape references its input plan
+        # These columns are the routed plane's oracle surface: every
+        # contract here is routable, so auto routes it.  The routed
+        # shape stacks linearly: each call references its input plan
         # once.  Verdicts are plane-independent (differentially
         # pinned), so the oracle twins are unchanged.
         routed = with_valid_json(ev, "props", schema,
-                                 col_name="valid_columnar",
-                                 plan_shape="masked")
+                                 col_name="valid_columnar")
         routed = with_valid_json(routed, "props", map_schema,
-                                 col_name="valid_map", plan_shape="masked")
+                                 col_name="valid_map")
         routed = with_valid_json(routed, "nested_doc", nested_schema,
-                                 col_name="valid_nested",
-                                 plan_shape="masked")
+                                 col_name="valid_nested")
         routed = with_valid_json(routed, "root_doc", root_schema,
-                                 col_name="valid_root", plan_shape="masked")
+                                 col_name="valid_root")
         routed = with_valid_json(routed, "keys_doc", keys_schema,
-                                 col_name="valid_keys", plan_shape="masked")
+                                 col_name="valid_keys")
         routed = with_valid_json(routed, "union_doc", union_schema,
-                                 col_name="valid_union", plan_shape="masked")
+                                 col_name="valid_union")
         routed = with_valid_json(routed, "mixed_doc", mixed_schema,
-                                 col_name="valid_mixed", plan_shape="masked")
+                                 col_name="valid_mixed")
         return routed.select("event_id", udf(F.col("props")).alias("valid"),
                              "valid_columnar", "valid_map", "valid_nested",
                              "valid_root", "valid_keys", "valid_union",

@@ -272,14 +272,12 @@ def main() -> None:
 
     # 12d. route_auto_trivial (round 8, VERDICT r7 #1): the
     # auto-vs-kernel pair on the LIGHTEST contract class — the round-7
-    # suspected loss case.  Auto (which routes it — no expected_docs
-    # hint) must hold ≥ parity with the forced kernel plane, else the
-    # default plan choice is the measured-slower one.  Same interleaved
-    # MIN-of-3 protocol and 4× scale as 12c: the default masked shape's
-    # fixed floor (the all-rows Python handshake) amortizes past
-    # ~5×10^5 docs (cost_model.SMALL_BATCH_DOCS), and the pair must
-    # measure the large-batch regime auto is designed for — hinted
-    # small batches take the kernel by construction.
+    # suspected loss case.  Auto (which routes it) must hold ≥ parity
+    # with the forced kernel plane, else the default plan choice is the
+    # measured-slower one.  Same interleaved MIN-of-3 protocol and 4×
+    # scale as 12c: the routed plan's fixed floor (the all-rows Python
+    # handshake) amortizes only over large batches, and the pair must
+    # measure the large-batch regime auto is designed for.
     from jema_js_spark.bench_contracts import (TRIVIAL_CONTRACT,
                                                trivial_json_docs)
     tdocs = trivial_json_docs(

@@ -231,16 +231,16 @@ def main() -> None:
     def thr(n, sec):
         return n / sec
 
-    # round 8: render the auto-plan-choice calibration evidence from
+    # round 8: render the route-vs-kernel calibration evidence from
     # the artifact tools/calibrate_route_cost.py writes — ONE source
-    # for the numbers (tests/test_bench_evidence.py pins the shipped
-    # cost_model knob to the same artifact)
+    # for the numbers (tests/test_bench_evidence.py checks the md
+    # against the same artifact)
     cal_md = ""
     try:
         with open("BENCH/route_cost_calibration.json") as f:
             cal = json.load(f)
         rows = "\n".join(
-            f"| {r['case']} | {r['score']} | {r['kernel_sec']} | "
+            f"| {r['case']} | {r['kernel_sec']} | "
             f"{r['route_sec']} | {r['route_vs_kernel']}× |"
             for r in cal["contracts"])
         brows = "\n".join(
@@ -255,8 +255,8 @@ interleaved kernel/route pairs, MIN-of-3 per side, verdict parity
 asserted (tools/calibrate_route_cost.py; loadavg_after
 {cal['loadavg_after']}):
 
-| contract | cost score | kernel sec | route sec | route-over-kernel |
-|---|---|---|---|---|
+| contract | kernel sec | route sec | route-over-kernel |
+|---|---|---|---|
 {rows}
 
 At production batch sizes the route (the SHIPPED auto default) holds
@@ -267,8 +267,7 @@ slot fed integer-form tokens re-renders `5` as `5.0`, so every doc
 pays the gate path — the pattern3 row, the one sub-parity grade;
 `plan_choice` flags such layouts `shortcut_sensitive`).
 `with_valid_json`'s auto default therefore ROUTES every routable
-contract; the cost score is published as the win-size predictor, not
-a gate.
+contract.
 
 Batch-size sweep (same protocol; trivial = all-conforming corpus,
 representative-mixed = the 80%-routable mixed stream with a real
@@ -278,14 +277,10 @@ kernel residue):
 |---|---|---|---|---|
 {brows}
 
-Under the shipped masked default the small-batch floor is the
-all-rows Python-wave handshake — flat in batch size and contract
-weight (both streams lose below ~300k docs and cross over by 1M) —
-hence ONE calibrated cutoff (`cost_model.SMALL_BATCH_DOCS`; the
-data-driven bracket is pinned in tests/test_bench_evidence.py).
-Callers with genuinely small jobs (streaming microbatches, lookups)
-pass `expected_docs` and auto picks the kernel below the cutoff;
-without a hint auto assumes the 100-TB large-batch regime.
+The routed plan's small-batch floor is the all-rows Python-wave
+handshake, flat in contract weight: below the crossover the kernel's
+single stage wins.  auto does not act on it; a caller who measured
+the kernel winning on its small batches passes `plan_shape="kernel"`.
 """
         if cal.get("shape_decomposition"):
             srows = "\n".join(

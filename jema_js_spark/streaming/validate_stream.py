@@ -57,8 +57,7 @@ def windowed_json_verdicts(stream_df: DataFrame, json_col: str, schema,
                            window: str = "1 hour",
                            watermark: str = "2 hours",
                            format_assertion: bool = False,
-                           remotes: Optional[dict] = None,
-                           expected_docs: Optional[int] = None) -> DataFrame:
+                           remotes: Optional[dict] = None) -> DataFrame:
     """Windowed verdicts over a dynamic-JSON column WITH route-rate
     observability (round 8, VERDICT r7 #5): each window row carries
     ``n_routed``/``n_kernel`` alongside the verdict counts — the
@@ -69,13 +68,9 @@ def windowed_json_verdicts(stream_df: DataFrame, json_col: str, schema,
     jobs surface that in the checkpoint ledger, and before this
     function a streaming deploy had no equivalent signal.
 
-    ``expected_docs`` is the typical MICROBATCH size, passed through
-    to the auto plan choice (``cost_model.SMALL_BATCH_DOCS``):
-    microbatches are exactly the small-batch regime where the routed
-    plan's fixed floors (paid once per microbatch) can beat its
-    per-doc win, so small-trigger streams should hint it.  When auto
-    picks the kernel plane, ``n_routed`` is honestly 0 — the plan
-    choice itself is the visible signal."""
+    The plane follows ``with_valid_json``'s ``auto`` rule: a routable
+    contract routes, any other runs on the kernel with ``n_routed``
+    honestly 0 (``plan_choice`` shows which, and why)."""
     from jema_js_spark.validation.json_plane import with_valid_json
 
     # this wrapper picks the verdict/route column names on the
@@ -88,8 +83,7 @@ def windowed_json_verdicts(stream_df: DataFrame, json_col: str, schema,
             "rename or drop them on the input stream")
     out = with_valid_json(stream_df, json_col, schema,
                           format_assertion=format_assertion,
-                          remotes=remotes, route_col="__route",
-                          expected_docs=expected_docs)
+                          remotes=remotes, route_col="__route")
     return (out.withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window).alias("window"))
             .agg(F.count(F.lit(1)).alias("n_rows"),

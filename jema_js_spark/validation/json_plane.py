@@ -55,7 +55,7 @@ This module routes each row at runtime, entirely JVM-side:
 4. Every other row (malformed JSON, duplicate keys — ``try_parse_json``
    nulls both — non-objects, extra keys, JSON-null-valued fields,
    wrong-typed fields, numeric-exactness hazards) takes the kernel UDF,
-   which is always right.  ONE plan shape (``masked``) delivers this
+   which is always right.  ONE plan shape (the masked one) delivers this
    split in a single pass over the source: the kernel UDF is projected
    for every row (an ArrowEvalPython node cannot be skipped per-row)
    but its input is masked to SQL NULL for routed rows, and the UDF's
@@ -111,7 +111,7 @@ from jema_js_spark.compiler.compile import (CompiledPlan, SchemaCompiler,
 from jema_js_spark.runtime.colcache import cached_column
 from jema_js_spark.schema.frontend import Schema, contract_key
 
-__all__ = ["analyze_json_contract", "with_valid_json",
+__all__ = ["analyze_json_contract", "plan_choice", "with_valid_json",
            "json_violation_rows", "JsonColumnPlan"]
 
 # struct field names addressable UNQUOTED in a $.name variant path
@@ -964,6 +964,67 @@ def analyze_json_contract(schema: Any,
     return plan
 
 
+def plan_choice(schema: Any, format_assertion: bool = False) -> Dict[str, Any]:
+    """The plane ``with_valid_json(plan_shape="auto")`` runs a contract
+    on, with the evidence.  Returns::
+
+        {"shape": "route" | "kernel",
+         "routable": bool,
+         "why": str,                  # human-readable decision reason
+         "shortcut_sensitive": bool,  # number slots in the layout —
+                                      # integer-form tokens in the data
+                                      # would miss the round-trip proof
+         "unroutable_reasons": [...]} # analysis reasons when unroutable
+
+    One rule: a routable contract routes, anything else runs on the
+    kernel.  Calling it ahead of a deploy shows which plane a contract
+    will run on and why."""
+    if not isinstance(schema, Schema):
+        schema = Schema(schema)
+    plan = analyze_json_contract(schema, format_assertion=format_assertion)
+    sensitive = _has_number_slot(plan)
+    if not plan.routable:
+        return {"shape": "kernel", "routable": False,
+                "why": "contract not routable: " + "; ".join(plan.reasons),
+                "shortcut_sensitive": sensitive,
+                "unroutable_reasons": list(plan.reasons)}
+    return {"shape": "route", "routable": True,
+            "why": "routable contract: canonical documents are judged "
+                   "columnar, the rest by the kernel"
+                   + (" — NOTE: number-typed slots make the round-trip "
+                      "shortcut sensitive to integer-form tokens in "
+                      "the data (measured 0.68-0.84× when every doc "
+                      "misses); watch route_col/ledger metrics"
+                      if sensitive else ""),
+            "shortcut_sensitive": sensitive,
+            "unroutable_reasons": []}
+
+
+def _has_number_slot(plan: JsonColumnPlan) -> bool:
+    """Static shortcut-sensitivity marker: a ``number``-typed slot
+    anywhere in the layout re-renders integer-form tokens as ``x.0``,
+    so such documents always miss the round-trip proof and take the
+    (correct but slow) gate path."""
+    def node_has(n) -> bool:
+        decl, extra = n
+        if decl == "number":
+            return True
+        if decl == "array":
+            return extra == "number" if isinstance(extra, str) \
+                else node_has(extra)
+        if decl == "object":
+            return any(node_has(c) for c in extra.values())
+        if decl == "map":
+            return node_has(extra)
+        return False
+
+    if plan.map_value is not None:
+        return node_has(plan.map_value)
+    if plan.root is not None:
+        return node_has(plan.root)
+    return any(node_has(n) for n in plan.fields.values())
+
+
 def _decimal_gate(tag: Column, max_int_digits: int = 15) -> Column:
     p = F.regexp_extract(tag, _DECIMAL_RE, 1)
     s = F.regexp_extract(tag, _DECIMAL_RE, 2)
@@ -1176,49 +1237,36 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
                     format_assertion: bool = False,
                     remotes: Optional[dict] = None,
                     route_col: Optional[str] = None,
-                    plan_shape: str = "auto",
-                    expected_docs: Optional[int] = None) -> DataFrame:
+                    plan_shape: str = "auto") -> DataFrame:
     """``validate()`` over a JSON string column: adds a boolean column,
     computed JVM-side for every row whose document fits the contract's
     typed shape, by the row kernel for the rest.  ``route_col`` (when
     set) additionally records which plane judged each row — the
     observability knob for route-rate monitoring at scale.
 
-    ``plan_shape``: ``"auto"`` (default; round 8 COST-MODELS the
-    choice, ``cost_model.plan_choice`` previews it).  The round-8
-    calibration (module docstring of ``cost_model``, evidence in
-    BENCH/BASELINE.md): at production batch sizes the routed plane
-    wins on EVERY graded contract class — 1.13-2.2× on light
-    contracts, 2.7-4.3× on kernel-heavy ones — so auto routes every
-    routable contract by default.  The kernel's winning regime is
-    SMALL BATCHES: the routed plan pays the all-rows Python-wave
-    handshake whatever the data, so below
-    ``cost_model.SMALL_BATCH_DOCS`` (calibrated ~5×10^5 on local[32])
-    the kernel's single stage wins — pass ``expected_docs`` (e.g. a
-    streaming microbatch's typical size) and auto picks it.  A second,
-    data-dependent slow case the static model only flags
-    (``plan_choice(...)["shortcut_sensitive"]``): documents that
-    systematically miss the ``to_json`` round-trip proof (integer-form
-    tokens in a ``number``-typed slot) pay the gate path per row —
-    correct verdicts, measured 0.68× when every doc misses; watch
-    ``route_col``/ledger metrics and opt out with
-    ``plan_shape="kernel"`` if the live data hits it.
-
-    The routed plan has one shape, ``"masked"`` (see the module
-    docstring): one pass, kernel UDF input masked to NULL on routed
-    rows, no shuffle, single scan.  Catalyst extracts Python UDFs out
-    of CaseWhen branches, so a compiled plan carrying Plane-B checks
+    ``plan_shape``: ``"auto"`` (default) routes every routable
+    contract and runs the rest on the kernel — :func:`plan_choice`
+    previews the decision.  The routed plan is one pass (see the module
+    docstring): kernel UDF input masked to NULL on routed rows, no
+    shuffle, single scan.  Catalyst extracts Python UDFs out of
+    CaseWhen branches, so a compiled plan carrying Plane-B checks
     (variant nets, whole-node unevaluated gates, recursive-tail nets)
     runs them on every row; measured, that still beats splitting the
-    rows into a fast and a slow branch.  ``"masked"`` forces the route
-    even under a small ``expected_docs`` hint; ``"kernel"`` forces the
-    kernel UDF on every row (skips the routing analysis entirely).
+    rows into a fast and a slow branch.  ``"kernel"`` forces the kernel
+    UDF on every row (skips the routing analysis entirely): the opt-out
+    for data that systematically misses the ``to_json`` round-trip
+    proof (integer-form tokens in a ``number``-typed slot —
+    ``plan_choice(...)["shortcut_sensitive"]`` flags the layout;
+    measured 0.68× when every doc misses; watch ``route_col``/ledger
+    metrics), and for small batches where the kernel's single stage
+    was measured faster (30k docs, local[4]: the route ran 0.74-0.83×
+    the kernel).
 
     Verdict-equivalent to ``kernel_validate_udf(schema)(json_col)`` on
     every row (differentially pinned in tests/test_json_plane.py)."""
     from jema_js_spark.validation.kernel_udf import kernel_validate_udf
 
-    if plan_shape not in ("auto", "masked", "kernel"):
+    if plan_shape not in ("auto", "kernel"):
         raise ValueError(f"unknown plan_shape {plan_shape!r}")
     df = _maybe_consolidate(df)
     contract_json = contract_key(schema)
@@ -1237,18 +1285,6 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
 
     kernel_pred = kernel_validate_udf(
         schema.schema, remotes=remotes, format_assertion=format_assertion)
-
-    if plan is not None and plan.routable and plan_shape == "auto" \
-            and expected_docs is not None:
-        # round 8 (VERDICT r7 #1): the small-batch regime is the one
-        # place the kernel's single-stage plan beats the route (fixed
-        # floors unamortized — and the floor tracks the RESIDUE rate,
-        # not the contract weight, so the cutoff is a single
-        # calibrated constant).  Without a hint auto assumes the
-        # large-batch production regime and routes.
-        from jema_js_spark.validation import cost_model
-        if expected_docs < cost_model.SMALL_BATCH_DOCS:
-            plan = None
 
     if plan is None or not plan.routable:
         out = df.withColumn(col_name, F.coalesce(
@@ -1290,8 +1326,8 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
 # ONLY when the whole input is small (< _CONSOLIDATE_MAX_INPUT), so
 # production-scale scans — guide §6 partitions of 128 MB-1 GB, inputs
 # of TBs — are never touched and keep their retry/straggler
-# granularity.  Streaming plans are left alone (microbatch sizing is
-# the expected_docs hint's job).
+# granularity.  Streaming plans are left alone: the trigger, not the
+# plan, sets a microbatch's size.
 _CONSOLIDATE_MAX_INPUT = 8 << 30
 _CONSOLIDATE_TARGET_BYTES = 64 << 20
 
@@ -1612,8 +1648,7 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
 def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
                         id_cols: Optional[List[str]] = None,
                         format_assertion: bool = False,
-                        remotes: Optional[dict] = None,
-                        expected_docs: Optional[int] = None) -> DataFrame:
+                        remotes: Optional[dict] = None) -> DataFrame:
     """``errors()`` over a JSON string column — the errors-path twin of
     :func:`with_valid_json`, completing the reference API triple
     (validate / errors) for dynamic JSON.  One output row per kernel
@@ -1660,14 +1695,6 @@ def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
     else:
         plan = analyze_json_contract(schema,
                                      format_assertion=format_assertion)
-    if expected_docs is not None:
-        # small-batch regime (round 8, same rule as with_valid_json):
-        # the routed screen's fixed floors aren't amortized — skip
-        # screening and let iter_errors self-screen, exactly the
-        # unroutable-contract path
-        from jema_js_spark.validation import cost_model
-        if expected_docs < cost_model.SMALL_BATCH_DOCS:
-            plan = JsonColumnPlan(schema=schema)    # not routable
     screened = False
     if plan.routable:
         b3, route, compiled, work = _routing_pieces(

@@ -50,12 +50,6 @@ def main() -> None:
                     help="skip partition-days the ledger marks done")
     ap.add_argument("--id-col", default="url")
     ap.add_argument("--ts-col", default="warc_ts")
-    ap.add_argument("--expected-docs", type=int, default=None,
-                    help="typical rows per PARTITION slice — threads to "
-                         "the auto route/kernel choice (below "
-                         "cost_model.SMALL_BATCH_DOCS the kernel's "
-                         "single-stage plan wins; per-slice jobs on "
-                         "small partitions are that regime)")
     ap.add_argument("--json-col",
                     help="validate this JSON string column (routed "
                          "columnar/kernel planes) instead of the typed row")
@@ -120,11 +114,9 @@ def main() -> None:
             # collapses throughput, and without these counts it is
             # invisible until someone reads a Spark UI
             valid = with_valid_json(part_df, args.json_col, schema,
-                                    route_col="route",
-                                    expected_docs=args.expected_docs)
+                                    route_col="route")
             viol = json_violation_rows(part_df, args.json_col, schema,
-                                       id_cols=[args.id_col],
-                                       expected_docs=args.expected_docs)
+                                       id_cols=[args.id_col])
             aggs.append(F.coalesce(
                 F.sum((F.col("route") == "columnar").cast("long")),
                 F.lit(0)).alias("n_routed"))

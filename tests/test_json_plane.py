@@ -16,6 +16,7 @@ from jema_js_spark.kernel.kernel import Validator
 from jema_js_spark.schema.frontend import Schema
 from jema_js_spark.validation.json_plane import (
     analyze_json_contract,
+    plan_choice,
     with_valid_json,
 )
 
@@ -137,21 +138,19 @@ def _kernel_verdicts(contract, docs):
     return out
 
 
-@pytest.mark.parametrize("shape", ["masked"])
 @pytest.mark.parametrize("contract,docs", [
     (CONTRACT, HOSTILE_DOCS),
     (NUM_CONTRACT, NUM_DOCS),
 ])
-def test_route_matches_kernel_on_hostile_docs(spark, contract, docs, shape):
+def test_route_matches_kernel_on_hostile_docs(spark, contract, docs):
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                "i long, doc string")
-    out = with_valid_json(df, "doc", contract, route_col="route",
-                          plan_shape=shape).collect()
+    out = with_valid_json(df, "doc", contract, route_col="route").collect()
     expected = _kernel_verdicts(contract, docs)
     bad = [(r["doc"], r["route"], r["valid"], expected[r["doc"]])
            for r in out if r["valid"] != expected[r["doc"]]]
     assert not bad, bad
-    assert len(out) == len(docs)          # neither shape loses rows
+    assert len(out) == len(docs)          # no row is lost
 
 
 ROUNDTRIP_HAZARDS = [
@@ -182,12 +181,10 @@ ROUNDTRIP_HAZARDS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["masked"])
-def test_roundtrip_shortcut_hazards(spark, shape):
+def test_roundtrip_shortcut_hazards(spark):
     df = spark.createDataFrame([(d,) for d in ROUNDTRIP_HAZARDS],
                                "doc string")
-    out = with_valid_json(df, "doc", CONTRACT, route_col="route",
-                          plan_shape=shape).collect()
+    out = with_valid_json(df, "doc", CONTRACT, route_col="route").collect()
     expected = _kernel_verdicts(CONTRACT, ROUNDTRIP_HAZARDS)
     bad = [(r["doc"], r["route"], r["valid"], expected[r["doc"]])
            for r in out if r["valid"] != expected[r["doc"]]]
@@ -529,10 +526,9 @@ MAP_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["masked"])
 @pytest.mark.parametrize("contract", MAP_CONTRACTS,
                          ids=[str(i) for i in range(len(MAP_CONTRACTS))])
-def test_map_route_matches_kernel(spark, contract, shape):
+def test_map_route_matches_kernel(spark, contract):
     """Round 6 (VERDICT r5 #6): dynamic-key contracts
     (patternProperties / propertyNames / additionalProperties with one
     value type) route via map<string,T> extraction — every verdict
@@ -543,8 +539,7 @@ def test_map_route_matches_kernel(spark, contract, shape):
     assert plan.map_value is not None, plan.reasons
     df = spark.createDataFrame([(i, d) for i, d in enumerate(MAP_DOCS)],
                                "i long, doc string")
-    out = with_valid_json(df, "doc", contract, route_col="route",
-                          plan_shape=shape).collect()
+    out = with_valid_json(df, "doc", contract, route_col="route").collect()
     expected = _kernel_verdicts(contract, MAP_DOCS)
     bad = [(r["doc"], r["route"], r["valid"], expected[r["doc"]])
            for r in out if r["valid"] != expected[r["doc"]]]
@@ -724,11 +719,10 @@ def test_mixed_value_types_fall_through_to_struct_mode(spark):
     assert routes['{"id":"ab","z":3}'] == "kernel"    # extra key
 
 
-@pytest.mark.parametrize("shape", ["masked"])
-def test_plane_b_compiled_contract_both_shapes(spark, shape):
+def test_plane_b_compiled_contract_matches_kernel(spark):
     """A routable contract whose COMPILED plan still carries Plane-B
     checks (uncovered unevaluatedProperties claims → whole-node kernel
-    fallback): verdicts stay kernel-exact — the masked shape runs the
+    fallback): verdicts stay kernel-exact — the routed shape runs the
     embedded kernel check per row (documented cost), never a different
     answer."""
     from jema_js_spark.compiler.compile import SchemaCompiler
@@ -752,8 +746,7 @@ def test_plane_b_compiled_contract_both_shapes(spark, shape):
             '{"k":"s"}', '{"k":1,"z":2}', 'junk', '{"alias":"b"}',
             '{"k":null}', '{"alias":"b","name":"c"}']
     df = spark.createDataFrame([(d,) for d in docs], "doc string")
-    out = with_valid_json(df, "doc", contract, route_col="route",
-                          plan_shape=shape).collect()
+    out = with_valid_json(df, "doc", contract, route_col="route").collect()
     expected = _kernel_verdicts(contract, docs)
     bad = [(r["doc"], r["route"], r["valid"], expected[r["doc"]])
            for r in out if r["valid"] != expected[r["doc"]]]
@@ -1067,7 +1060,7 @@ def test_conformance_corpus_through_route(spark):
     # case — the fixed 60-schema sample left ~363 schemas' routed
     # verdicts to the targeted batteries, and the last two verdict
     # bugs lived exactly in routing-mode interactions.  Batched 16
-    # schemas per job as stacked plan_shape="masked" columns: masked
+    # schemas per job as stacked auto columns: the routed shape
     # references its input ONCE per stack (linear plan growth).  Every
     # schema judges every batch row; only its own rows' verdicts are
     # asserted.  Measured: 27 jobs, 1587 cases, ~2.5 min at local[4].
@@ -1089,7 +1082,7 @@ def test_conformance_corpus_through_route(spark):
         df = spark.createDataFrame(rows, "sid int, i int, doc string")
         for si, (contract, cs) in enumerate(batch):
             df = with_valid_json(df, "doc", contract, col_name=f"v{si}",
-                                 remotes=REMOTES, plan_shape="masked")
+                                 remotes=REMOTES)
         for r in df.collect():
             if r[f"v{r['sid']}"] != want[(r["sid"], r["i"])]:
                 contract, cs = batch[r["sid"]]
@@ -1330,8 +1323,7 @@ ROOT_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["masked"])
-def test_root_value_route_matches_kernel(spark, shape):
+def test_root_value_route_matches_kernel(spark):
     """Round-7 root-value mode: contracts whose documents are bare
     scalars or arrays route through the {"v": <doc>} wrapper — parity
     with the kernel on hostile docs (whitespace, wrapper injections,
@@ -1342,8 +1334,7 @@ def test_root_value_route_matches_kernel(spark, shape):
         plan = analyze_json_contract(contract)
         assert plan.routable and plan.root is not None, (contract,
                                                          plan.reasons)
-        out = with_valid_json(df, "doc", contract, route_col="route",
-                              plan_shape=shape).collect()
+        out = with_valid_json(df, "doc", contract, route_col="route").collect()
         expected = _kernel_verdicts(contract, ROOT_DOCS)
         bad = [(ROOT_DOCS[r["i"]], r["valid"], expected[ROOT_DOCS[r["i"]]])
                for r in out if r["valid"] != expected[ROOT_DOCS[r["i"]]]]
@@ -1523,8 +1514,7 @@ NESTED_MAP_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("shape", ["masked"])
-def test_nested_map_route_matches_kernel(spark, shape):
+def test_nested_map_route_matches_kernel(spark):
     """Round-7 map nodes: dynamic-key slots nested inside struct
     layouts (and top-level dynamic contracts with object values) route
     — parity with the kernel on dup-key, null-value, wrong-type, and
@@ -1535,8 +1525,7 @@ def test_nested_map_route_matches_kernel(spark, shape):
     for contract in NESTED_MAP_CONTRACTS:
         plan = analyze_json_contract(contract)
         assert plan.routable, (contract, plan.reasons)
-        out = with_valid_json(df, "doc", contract, route_col="route",
-                              plan_shape=shape).collect()
+        out = with_valid_json(df, "doc", contract, route_col="route").collect()
         expected = _kernel_verdicts(contract, NESTED_MAP_DOCS)
         bad = [(NESTED_MAP_DOCS[r["i"]], r["valid"],
                 expected[NESTED_MAP_DOCS[r["i"]]])
@@ -2125,14 +2114,6 @@ def test_variant_slot_routing_differential(spark):
                 (contract, r["doc"], r["valid"], r["route"])
         routed = {r["doc"] for r in out if r["route"] == "columnar"}
         assert '{}' not in routed or plan.map_value or plan.fields
-    # the masked shape must agree row-for-row too (tag checks are the
-    # fast plan on BOTH shapes; the kernel sees only masked residue)
-    for contract in (VARIANT_SLOT_CONTRACTS[0], VARIANT_SLOT_CONTRACTS[3]):
-        want = _kernel_verdicts(contract, VARIANT_SLOT_DOCS)
-        for r in with_valid_json(df, "doc", contract,
-                                 plan_shape="masked").collect():
-            assert r["valid"] == want[r["doc"]], ("masked", contract,
-                                                  r["doc"])
     # analysis shapes: mixed dynamic values land on the variant map,
     # union slots on variant fields
     assert analyze_json_contract(
@@ -2603,10 +2584,89 @@ def test_auto_shape_rule(spark):
     assert [(r["valid"], r["r"]) for r in out.collect()] == \
         [(True, "columnar")]
 
-    # no fast ∪ slow shape: asking for one is an error, never a silent
-    # fall-back to another shape
-    with pytest.raises(ValueError, match="union"):
-        with_valid_json(df, "doc", pure, plan_shape="union")
+    # auto and kernel are the only shapes: asking for a retired one
+    # (the fast ∪ slow split, or "masked", which is what auto routes
+    # through) is an error, never a silent fall-back to another shape
+    for retired in ("union", "masked"):
+        with pytest.raises(ValueError, match=retired):
+            with_valid_json(df, "doc", pure, plan_shape=retired)
+
+
+# two properties, a couple of type/bound checks: the lightest routable
+# contract class
+TRIVIAL = {"type": "object", "required": ["k"],
+           "properties": {"k": {"type": "integer", "minimum": 0},
+                          "name": {"type": "string", "maxLength": 64}}}
+
+
+def test_plan_choice_shapes():
+    from jema_js_spark.bench_contracts import REPRESENTATIVE_KERNEL_CONTRACT
+
+    # routable contracts route, whatever their kernel weight
+    for contract in (TRIVIAL, REPRESENTATIVE_KERNEL_CONTRACT):
+        c = plan_choice(contract)
+        assert c["shape"] == "route" and c["routable"], c
+    # unroutable: boolean root schema
+    unroutable = plan_choice(True)
+    assert unroutable["shape"] == "kernel" and not unroutable["routable"]
+    assert unroutable["unroutable_reasons"]
+
+
+def test_plan_choice_flags_shortcut_sensitive_layouts():
+    """number-typed slots re-render integer-form tokens (5 → 5.0), so
+    such data always misses the round-trip proof — the measured 0.68×
+    case.  plan_choice must surface the static marker."""
+    c = plan_choice({"type": "object",
+                     "properties": {"m": {"type": "number"}}})
+    assert c["shape"] == "route" and c["shortcut_sensitive"]
+    assert "shortcut" in c["why"]
+    assert not plan_choice(TRIVIAL)["shortcut_sensitive"]
+
+
+def test_auto_routes_trivial_without_hint(spark):
+    """The lightest contract class routes under auto, with verdicts
+    unchanged."""
+    docs = ['{"k":1,"name":"a"}', '{"k":-1,"name":"a"}', '{"k":1}',
+            '{"name":"a"}', 'junk', None]
+    df = spark.createDataFrame([(d,) for d in docs], "doc string")
+    out = with_valid_json(df, "doc", TRIVIAL, route_col="route").collect()
+    v = Validator(TRIVIAL)
+    for r in out:
+        if r["doc"] is None or r["doc"] == "junk":
+            want, plane = False, "kernel"
+        else:
+            want, plane = v.validate(json.loads(r["doc"])), "columnar"
+        assert r["route"] == plane, r
+        assert r["valid"] == want, r
+
+
+def test_plan_choice_is_the_applied_choice(spark):
+    """plan_choice publishes the plane auto applies: over every dict
+    schema of the conformance corpus it names the route exactly when
+    the analysis finds the contract routable, and with_valid_json puts
+    a canonical document on the plane plan_choice names."""
+    from tests.suite_cases import CASES
+
+    schemas = {json.dumps(c.schema, sort_keys=True): c.schema
+               for c in CASES if isinstance(c.schema, dict)}
+    shapes = []
+    for contract in schemas.values():
+        routable = analyze_json_contract(contract).routable
+        shapes.append(plan_choice(contract)["shape"])
+        assert shapes[-1] == ("route" if routable else "kernel"), contract
+    # both planes are exercised (429 routable, see the corpus test)
+    assert shapes.count("route") >= 429 and "kernel" in shapes
+
+    # layoutless root carrying unevaluated*: a whole-plan kernel check
+    unroutable = {"minProperties": 1,
+                  "unevaluatedProperties": {"type": ["integer", "string"]}}
+    df = spark.createDataFrame([('{"k":1,"name":"a"}',)], "doc string")
+    plane = {"route": "columnar", "kernel": "kernel"}
+    for contract, shape in ((TRIVIAL, "route"), (unroutable, "kernel")):
+        assert plan_choice(contract)["shape"] == shape, contract
+        [row] = with_valid_json(df, "doc", contract,
+                                route_col="plane").collect()
+        assert row["plane"] == plane[shape] and row["valid"], (contract, row)
 
 
 def test_wide_flat_contract_keeps_full_typed_layout():
@@ -2622,32 +2682,6 @@ def test_wide_flat_contract_keeps_full_typed_layout():
     assert plan.routable, plan.reasons
     assert len(plan.fields) == 300
     assert all(node == ("integer", None) for node in plan.fields.values())
-
-
-def test_violation_rows_small_batch_hint_output_identical(spark):
-    """json_violation_rows under a small-batch hint skips the routed
-    screen (iter_errors self-screens — the unroutable-contract path)
-    with byte-identical output rows."""
-    from jema_js_spark.validation.json_plane import json_violation_rows
-
-    contract = {"type": "object", "required": ["k"],
-                "properties": {"k": {"type": "integer", "minimum": 0},
-                               "name": {"type": "string"}}}
-    docs = ['{"k": 1}', '{"k": -2}', '{"name": 7}', '{}', 'junk',
-            '{"k": 1, "name": "x"}']
-    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
-                               "i long, doc string")
-
-    def rows(**kw):
-        out = json_violation_rows(df, "doc", contract, id_cols=["i"], **kw)
-        return sorted(tuple(r) for r in out.collect())
-
-    assert rows(expected_docs=10) == rows()
-    # and the hinted plan carries NO routing stages (no from_json)
-    phys = json_violation_rows(df, "doc", contract, id_cols=["i"],
-                               expected_docs=10) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FromJson" not in phys and "from_json" not in phys, phys
 
 
 def test_recursive_contract_fuzz_matches_kernel(spark):

@@ -324,34 +324,3 @@ def test_windowed_json_verdicts_route_counts(spark):
             assert r["n_rows"] == r["n_routed"] + r["n_kernel"]
             assert abs(r["route_rate"] - r["n_routed"] / r["n_rows"]) \
                 < 1e-9
-
-
-def test_windowed_json_verdicts_small_batch_hint(spark):
-    """An expected_docs hint below the small-batch cutoff puts the
-    whole stream on the kernel plane (microbatches ARE the small-batch
-    regime) — n_routed is honestly 0 and verdicts are unchanged."""
-    from jema_js_spark.streaming.validate_stream import (
-        windowed_json_verdicts)
-
-    contract = {"type": "object", "required": ["k"],
-                "properties": {"k": {"type": "integer", "minimum": 0}}}
-    stream = (spark.readStream.format("rate")
-              .option("rowsPerSecond", "200").load()
-              .withColumn("doc", F.concat(F.lit('{"k": '),
-                                          F.pmod(F.col("value"), F.lit(5)),
-                                          F.lit("}")))
-              .select("timestamp", "doc"))
-    verd = windowed_json_verdicts(stream, "doc", contract,
-                                  ts_col="timestamp",
-                                  window="5 seconds",
-                                  watermark="30 seconds",
-                                  expected_docs=1_000)
-    q = (verd.writeStream.format("memory").queryName("jwv_k_stream")
-         .outputMode("complete").start())
-    time.sleep(4)
-    _drain(q)
-    rows = spark.sql("SELECT * FROM jwv_k_stream").collect()
-    assert rows and sum(r["n_rows"] for r in rows) > 0
-    assert all(r["n_routed"] == 0 for r in rows)
-    assert all(r["n_kernel"] == r["n_rows"] for r in rows)
-    assert all(r["n_invalid"] == 0 for r in rows)

@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Calibrate the cost_model knobs (round 8, VERDICT r7 #1).
+"""Measure the routed JSON plane against the kernel plane.
 
-Two sweeps, both interleaved kernel/route pairs (the box is shared;
-pairing keeps both sides under equal ambient pressure), MIN-of-3 per
-side, verdict parity asserted per pair:
+Evidence for the size-aware plane choice on ROADMAP item 2: where the
+route (``with_valid_json``'s ``auto`` plan) and the kernel UDF cross
+over, by contract weight, batch size and stream class.  Three sweeps,
+all interleaved kernel/route pairs (the box is shared; pairing keeps
+both sides under equal ambient pressure), MIN-of-3 per side, verdict
+parity asserted per pair:
 
 1. CONTRACT sweep at 1M canonical docs — graded contracts from
    trivial type/bound up to the representative Plane-B contract.
@@ -12,28 +15,21 @@ side, verdict parity asserted per pair:
    hazard, not contract weight.
 2. BATCH-SIZE sweep — the trivial contract (all-conforming corpus)
    and the representative contract (mixed corpus, real residue) at
-   30k..3M docs.  Round-8 result: the small-batch kernel-wins regime
-   tracks the RESIDUE rate, not the contract weight (representative
-   0.81× at 30k, par at 100k; trivial wins from <30k) → ONE calibrated
-   cutoff, cost_model.SMALL_BATCH_DOCS.
-
-3. SHAPE DECOMPOSITION — kernel vs the routed (masked) plan per
-   STREAM CLASS (canonical / whitespace-gate / wrong-type residue /
-   malformed residue / the 80% mixed stream) at 1M docs.  Round-8
-   result: masked wins 1.47× over the kernel on the mixed stream.
+   10k..1M docs.  The kernel wins small batches (the route's fixed
+   floors are not amortized); the crossover moves with the machine,
+   so it is measured, not assumed.
+3. SHAPE DECOMPOSITION — kernel vs the routed plan per STREAM CLASS
+   (canonical / whitespace-gate / wrong-type residue / malformed
+   residue / the 80% mixed stream) at 1M docs.  Round-8 result: the
+   route wins 1.47× over the kernel on the mixed stream.
 
 Writes BENCH/route_cost_calibration.json (the machine-readable
-evidence twin).  The shipped cost_model.SMALL_BATCH_DOCS constant is
-DERIVED from this artifact's batch sweep; tests/test_bench_evidence.py
-pins the constant inside the sweep's measured bracket (above every
-level where both calibrated streams lost to the kernel, at or below
-the smallest level where both won), so editing the knob without
-re-measuring — or re-measuring into a different bracket without
-moving the knob — fails CI loudly.  ``small_batch_docs_knob_at_run``
-records the constant as it stood when the artifact was written
-(provenance only).
+evidence twin that bench_scaling.py renders into BENCH/BASELINE.md;
+the routed side keeps the ``masked_*`` keys of earlier artifacts).
 
-Usage: PYTHONPATH=/root/repo python tools/calibrate_route_cost.py
+Usage, from the repository root::
+
+    PYTHONPATH=. python tools/calibrate_route_cost.py
 """
 
 from __future__ import annotations
@@ -59,7 +55,6 @@ def main():
     from jema_js_spark.bench_contracts import (
         REPRESENTATIVE_KERNEL_CONTRACT, representative_json_docs)
     from jema_js_spark.runtime.session import build_session
-    from jema_js_spark.validation.cost_model import kernel_cost_score
     from jema_js_spark.validation.json_plane import with_valid_json
     from jema_js_spark.validation.kernel_udf import kernel_validate_udf
 
@@ -164,9 +159,8 @@ def main():
                 F.sum(F.col("v").cast("long"))).collect()[0][0]
 
         def route():
-            # the AUTO DEFAULT (no expected_docs hint → routes, shape
-            # masked since round 8) — the calibration must measure the
-            # plan users actually get, not an opt-in
+            # the AUTO DEFAULT — the calibration must measure the plan
+            # users actually get, not an opt-in
             out = with_valid_json(docs, "doc", contract)
             return out.agg(F.sum(F.col("valid").cast("long"))
                            ).collect()[0][0]
@@ -179,7 +173,7 @@ def main():
             t0 = time.perf_counter(); rv = route()
             rs.append(time.perf_counter() - t0)
             assert kv == rv, (name, kv, rv)
-        row = {"case": name, "score": kernel_cost_score(contract),
+        row = {"case": name,
                "kernel_sec": round(min(ks), 3),
                "route_sec": round(min(rs), 3),
                "route_vs_kernel": round(min(ks) / min(rs), 2),
@@ -213,7 +207,7 @@ def main():
             f"representative-mixed@{n}", REPRESENTATIVE_KERNEL_CONTRACT,
             mixed_json_docs(spark, n, num_partitions=CPUS * 3), n))
 
-    # shape decomposition: kernel vs masked per stream class
+    # shape decomposition: kernel vs the routed plan per stream class
     def triple(name, contract, docs, n):
         docs = docs.cache()
         docs.count()
@@ -223,17 +217,17 @@ def main():
             return docs.select(udf(F.col("doc")).alias("v")).agg(
                 F.sum(F.col("v").cast("long"))).collect()[0][0]
 
-        def shape(s):
-            out = with_valid_json(docs, "doc", contract, plan_shape=s)
+        def route():
+            out = with_valid_json(docs, "doc", contract)
             return out.agg(F.sum(F.col("valid").cast("long"))
                            ).collect()[0][0]
 
-        kern(); shape("masked")
+        kern(); route()
         ks, ms = [], []
         for _ in range(3):
             t0 = time.perf_counter(); kv = kern()
             ks.append(time.perf_counter() - t0)
-            t0 = time.perf_counter(); mv = shape("masked")
+            t0 = time.perf_counter(); mv = route()
             ms.append(time.perf_counter() - t0)
             assert kv == mv, (name, kv, mv)
         row = {"stream": name,
@@ -272,14 +266,12 @@ def main():
                _mx(spark, N, num_partitions=CPUS * 3), N),
     ]
 
-    from jema_js_spark.validation.cost_model import SMALL_BATCH_DOCS
     out = {"protocol": "interleaved kernel/route pairs, MIN-of-3 per "
                        "side, warm pass first, verdict parity asserted",
            "contract_sweep_docs": N,
            "contracts": contracts,
            "batch_sweep": batches,
            "shape_decomposition": shapes,
-           "small_batch_docs_knob_at_run": SMALL_BATCH_DOCS,
            "loadavg_after": [round(x, 2) for x in os.getloadavg()],
            "cpus": CPUS}
     os.makedirs("BENCH", exist_ok=True)
