@@ -17,18 +17,9 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-import time
 
-from pyspark.sql import functions as F
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# flagship scale: enough rows that per-task constant overheads amortize
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "8000000"))
-# kernel-plane scale: ≥1M docs so the representative Plane-B contract
-# dominates job dispatch (~276k docs/s at 32 threads → seconds, not ms)
-N_KERNEL_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_KERNEL_DOCS", "1000000"))
+from bench_entries import (CPUS, N_KERNEL_DOCS, N_PAGES, SF_DIR, Inputs,
+                           kernel_vs_route, run_leaves)
 
 
 def _sf_label(path: str) -> float:
@@ -38,288 +29,78 @@ def _sf_label(path: str) -> float:
         return -1.0
 
 
+def _pair(docs, contract, side: str, n_docs: int):
+    """The kernel-vs-route ratio and its record for one interleaved
+    pair; ``side`` names the routed side's key."""
+    load_before = os.getloadavg()
+    k, r, _ = kernel_vs_route(docs, contract)
+    return round(k / r, 2), {
+        "n_docs": n_docs,
+        "kernel_sec": round(k, 3),
+        f"{side}_sec": round(r, 3),
+        "timing": "interleaved_min_of_3",
+        "loadavg_before": [round(x, 2) for x in load_before],
+        "loadavg_after": [round(x, 2) for x in os.getloadavg()],
+    }
+
+
 def main() -> None:
+    from jema_js_spark.bench_contracts import (
+        REPRESENTATIVE_KERNEL_CONTRACT, TRIVIAL_CONTRACT,
+        representative_json_docs, trivial_json_docs)
     from jema_js_spark.runtime.session import build_session
+    from jema_js_spark.validation.engine import compile_for
+    from __spark_entry__ import PAGE_CONTRACT
 
     spark = build_session(app_name="jema-bench", master=f"local[{CPUS}]",
                           shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from jema_js_spark.operators.dedup import exact_dedup, minhash_candidates
-    from jema_js_spark.operators.drift import categorical_drift
-    from jema_js_spark.operators.referential import ts_window_violations
-    from jema_js_spark.operators.similarity import (
-        brute_force_topk, fit_centroids, ivf_assign, ivf_topk)
-    from jema_js_spark.operators.stats import column_stats
-    from jema_js_spark.operators.text import with_text_features
-    from jema_js_spark.operators.uniqueness import duplicate_keys
-    from jema_js_spark.sources.pages import crawl_manifest, synthetic_pages
-    from jema_js_spark.validation.engine import violation_rows, with_valid
-    from __spark_entry__ import PAGE_CONTRACT
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-    docs.count()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-    emb.count()
-    # materialize the synthetic pages to parquet OUTSIDE the timed
-    # region: otherwise every page-table bench re-pays row generation
-    # inside its timing and the numbers measure the generator, not the
-    # plan (round-1 verdict: flagship was understated ~43×)
-    import shutil
-    import tempfile
-    pages_dir = tempfile.mkdtemp(prefix="jema_bench_pages_")
-    synthetic_pages(spark, N_PAGES, num_partitions=CPUS * 4) \
-        .write.mode("overwrite").parquet(pages_dir)
-    pages = spark.read.parquet(pages_dir)
-
-    timings: dict[str, float] = {}
-    extras: dict[str, float] = {}
+    # the 14 leaves (bench_entries.LEAVES): flagship contract validation
+    # over N_PAGES synthetic pages, violation rows, the operators, then
+    # the representative contract on the kernel, the JSON route and the
+    # mixed stream; each a warm pass then MIN of 3 timed passes
+    inputs = Inputs(spark)
     loadavg_before = os.getloadavg()
+    timings, results = run_leaves(inputs)
+    # the fraction of the mixed conforming/hostile stream the router
+    # sends columnar.  A routing-gate regression (always-kernel) keeps
+    # verdicts correct but collapses throughput — this number makes it
+    # visible in BENCH diffs; tests/test_bench_contract.py pins it at
+    # the stream's designed share.
+    route_rate = round(
+        results["json_mixed"].get("columnar", 0) / N_KERNEL_DOCS, 4)
 
-    def bench(name, fn):
-        # uniform warm pass for EVERY entry (round 4): on this shared
-        # box, neighbor page-cache pressure makes cold parquet scans
-        # swing 4-7× run-to-run (ts_window measured 1.3 s warm vs
-        # 8-15 s cold-cache), so the timed number is the steady-state
-        # plan cost — the same protocol the flagship always used.
-        # Safe against the stage-reuse artifact because fn() builds a
-        # NEW DataFrame each call (fresh RDD lineage, nothing skipped).
-        # MIN of 3 timed passes (round 6, VERDICT r5 #4): r5's medians
-        # still leaked sustained neighbor load (stats +25%, drift_lang
-        # +93% with zero code change; quiet-box reruns at/below r4).
-        # Interference only ever ADDS time, so the minimum is the
-        # engine's own cost — the same rationale bench_scaling.py
-        # adopted in round 5 (BENCH/BASELINE.md).  loadavg before/after
-        # is recorded in the JSON so a judge can see the ambient
-        # pressure each run endured.
-        fn()
-        samples = []
-        result = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            result = fn()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(min(samples), 3)
-        return result
-
-    # 1. flagship: contract validation over N_PAGES synthetic pages
-    # (bench() warms every entry — JIT + OS page cache — so the timed
-    # number is steady-state scan-bound throughput, same protocol as
-    # bench_scaling.py)
-    def flagship():
-        v = with_valid(pages, PAGE_CONTRACT)
-        return v.agg(F.count(F.lit(1)), F.sum(F.col("valid").cast("long"))).collect()
-    res = bench("flagship_validate", flagship)
-    extras["pages_per_sec"] = round(N_PAGES / timings["flagship_validate"], 1)
-    extras["flagship_invalid"] = int(res[0][0] - res[0][1])
-
-    # 2. violation-row emission (errors path)
-    bench("violations", lambda: violation_rows(
-        pages, PAGE_CONTRACT, id_cols=["url"]).count())
-
-    # 3. salted uniqueness over the skewed url column
-    bench("unique_url", lambda: duplicate_keys(pages, "url").count())
-
-    # 4. referential: warc_ts → crawl manifest (broadcast anti-join)
-    manifest = crawl_manifest(spark)
-    bench("ts_window", lambda: ts_window_violations(
-        pages, "warc_ts", manifest, "window").count())
-
-    # 5. per-column stats (single agg pass, HLL sketches)
-    bench("stats", lambda: column_stats(
-        pages, ["url", "lang", "text"]).collect())
-
-    # 6. categorical drift by domain-ish partition
-    drift_in = pages.withColumn(
-        "grp", F.pmod(F.xxhash64("url"), F.lit(16)))
-    bench("drift_lang", lambda: categorical_drift(
-        drift_in, "grp", "lang").collect())
-
-    # 7. text features over the sf documents table
-    bench("text_features", lambda: with_text_features(docs).agg(
-        F.sum("n_tokens"), F.avg("quality")).collect())
-
-    # 8. exact dedup over documents (doubled)
-    doubled = docs.union(docs.limit(2000))
-    bench("exact_dedup", lambda: exact_dedup(doubled, "doc_id").count())
-
-    # 9. MinHash LSH candidates over a 2k-doc slice
-    slice_ = docs.filter(F.col("doc_id") < 2000)
-    bench("minhash_lsh", lambda: minhash_candidates(
-        slice_, "doc_id", "text", jaccard_threshold=0.8).count())
-
-    # 10. ANN: brute-force + IVF top-k over embeddings
-    queries_df = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    bench("cosine_topk", lambda: brute_force_topk(
-        emb, queries_df, k=10).count())
-    cents = fit_centroids(emb, nlist=16)
-    assigned = ivf_assign(emb, cents)
-    bench("ivf_topk", lambda: ivf_topk(
-        assigned, queries_df, cents, k=10, nprobe=4).count())
-
-    # 11. kernel plane: the representative Plane-B contract
-    # (combinators + if/then/else + $ref + unevaluatedProperties, shared
-    # with bench_scaling.py) over N_KERNEL_DOCS generated docs.  This
-    # number is COMPUTE-ONLY: the input is cached and a warm pass runs
-    # first, so parquet-scan cost is excluded — unlike the flagship,
-    # which reads parquet inside its timed region.  (The round-3
-    # one-key/100k-row workload was job-dispatch-bound at 0.02 s and
-    # could not detect kernel-plane regressions — VERDICT r3 #3.)
-    from jema_js_spark.bench_contracts import (
-        REPRESENTATIVE_KERNEL_CONTRACT, representative_json_docs)
-    from jema_js_spark.validation.kernel_udf import kernel_validate_udf
-    kdocs = representative_json_docs(
-        spark, N_KERNEL_DOCS, num_partitions=CPUS * 3).cache()
-    kdocs.count()
-    udf = kernel_validate_udf(REPRESENTATIVE_KERNEL_CONTRACT)
-
-    # the plan must be REBUILT inside the timed call: re-collecting the
-    # same DataFrame object skips its already-materialized shuffle map
-    # stage (measured 0.06 s vs 2.4 s for the identical fresh plan) —
-    # the artifact that made r3's kernel entry read 0.02 s
-    def kernel_run():
-        return kdocs.select(udf(F.col("doc")).alias("v")).agg(
-            F.sum(F.col("v").cast("long"))).collect()
-    bench("kernel_json", kernel_run)   # bench() warms python workers + JIT
-    extras["kernel_docs_per_sec"] = round(
-        N_KERNEL_DOCS / timings["kernel_json"], 1)
-
-    # 12. the SAME representative contract over the SAME docs through
-    # the round-5 JSON columnar route (validation/json_plane.py):
-    # variant tag gates + typed struct + Plane-A plan, zero Python for
-    # conforming rows.  kernel_json above is the Plane-B cost of this
-    # workload; the ratio is the measured plane gap the route closes.
-    from jema_js_spark.validation.json_plane import with_valid_json
-
-    def json_columnar_run():
-        out = with_valid_json(kdocs, "doc", REPRESENTATIVE_KERNEL_CONTRACT)
-        return out.agg(F.sum(F.col("valid").cast("long"))).collect()
-    bench("json_columnar", json_columnar_run)
-    extras["json_columnar_docs_per_sec"] = round(
-        N_KERNEL_DOCS / timings["json_columnar"], 1)
-
-    # 12b. route-rate observability (VERDICT r5 #3): the fraction of a
-    # mixed conforming/hostile stream the router sends columnar.  A
-    # routing-gate regression (always-kernel) keeps verdicts correct
-    # but collapses throughput — this number makes it visible in BENCH
-    # diffs; tests/test_bench_contract.py pins it at the stream's
-    # designed share.
-    from jema_js_spark.bench_contracts import mixed_json_docs
-    mdocs = mixed_json_docs(
-        spark, N_KERNEL_DOCS, num_partitions=CPUS * 3).cache()
-    mdocs.count()
-
-    def json_mixed_run():
-        out = with_valid_json(mdocs, "doc", REPRESENTATIVE_KERNEL_CONTRACT,
-                              route_col="route")
-        return {r["route"]: r["count"]
-                for r in out.groupBy("route").count().collect()}
-    routes = bench("json_mixed", json_mixed_run)
-    extras["json_route_rate"] = round(
-        routes.get("columnar", 0) / N_KERNEL_DOCS, 4)
-    mdocs.unpersist()
-
-    # 12c. route_vs_kernel (round 7, VERDICT r6 #3): the headline
+    # route_vs_kernel (round 7, VERDICT r6 #3): the headline
     # route-over-kernel ratio, measured HERE so the driver-diffable
     # BENCH artifact carries it instead of only the scaling harness's
-    # BASELINE.md.  Protocol differs from the entries above in two
-    # deliberate ways: the kernel/route passes are INTERLEAVED (ambient
-    # load drifts on this shared box — r6's sequential entries printed
-    # 1.66× under load while the same-harness quiet number was
-    # 3.05–4.32×; pairing keeps both sides under the same pressure),
-    # and the workload is 4× larger so the route's fixed floors
-    # (job dispatch, Python worker handshake) amortize the way they do
-    # at real scale (margin grows with size — BENCH/BASELINE.md r6
-    # bullet).  MIN per side over the pairs, ratio of the mins; the
-    # loadavg fields bound the pressure this specific block endured.
+    # BASELINE.md.  Protocol: bench_entries.interleaved_pair, on a
+    # workload 4× larger so the route's fixed floors (job dispatch,
+    # Python worker handshake) amortize the way they do at real scale
+    # (margin grows with size — BENCH/BASELINE.md r6 bullet).  MIN per
+    # side over the pairs, ratio of the mins; the loadavg fields bound
+    # the pressure this specific block endured.
     n_pair = int(os.environ.get("SPARK_GRAFT_BENCH_PAIR_DOCS",
                                 str(4 * N_KERNEL_DOCS)))
-    pdocs = representative_json_docs(
-        spark, n_pair, num_partitions=CPUS * 3).cache()
-    pdocs.count()
-    pair_udf = kernel_validate_udf(REPRESENTATIVE_KERNEL_CONTRACT)
-    pair_load_before = os.getloadavg()
+    route_vs_kernel, route_pair = _pair(
+        representative_json_docs(spark, n_pair, num_partitions=CPUS * 3),
+        REPRESENTATIVE_KERNEL_CONTRACT, "route", n_pair)
 
-    def pair_kernel():
-        return pdocs.select(pair_udf(F.col("doc")).alias("v")).agg(
-            F.sum(F.col("v").cast("long"))).collect()[0][0]
-
-    def pair_route():
-        out = with_valid_json(pdocs, "doc", REPRESENTATIVE_KERNEL_CONTRACT)
-        return out.agg(F.sum(F.col("valid").cast("long"))).collect()[0][0]
-
-    k_samples, r_samples = [], []
-    pair_kernel(); pair_route()            # warm both sides once
-    for _ in range(3):
-        t0 = time.perf_counter()
-        kv = pair_kernel()
-        k_samples.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        rv = pair_route()
-        r_samples.append(time.perf_counter() - t0)
-        assert kv == rv                    # cross-plane verdict parity
-    extras["route_vs_kernel"] = round(min(k_samples) / min(r_samples), 2)
-    extras["route_pair"] = {
-        "n_docs": n_pair,
-        "kernel_sec": round(min(k_samples), 3),
-        "route_sec": round(min(r_samples), 3),
-        "timing": "interleaved_min_of_3",
-        "loadavg_before": [round(x, 2) for x in pair_load_before],
-        "loadavg_after": [round(x, 2) for x in os.getloadavg()],
-    }
-    pdocs.unpersist()
-
-    # 12d. route_auto_trivial (round 8, VERDICT r7 #1): the
-    # auto-vs-kernel pair on the LIGHTEST contract class — the round-7
-    # suspected loss case.  Auto (which routes it) must hold ≥ parity
-    # with the forced kernel plane, else the default plan choice is the
-    # measured-slower one.  Same interleaved MIN-of-3 protocol and 4×
-    # scale as 12c: the routed plan's fixed floor (the all-rows Python
-    # handshake) amortizes only over large batches, and the pair must
-    # measure the large-batch regime auto is designed for.
-    from jema_js_spark.bench_contracts import (TRIVIAL_CONTRACT,
-                                               trivial_json_docs)
-    tdocs = trivial_json_docs(
-        spark, n_pair, num_partitions=CPUS * 3).cache()
-    tdocs.count()
-    triv_udf = kernel_validate_udf(TRIVIAL_CONTRACT)
-    triv_load_before = os.getloadavg()
-
-    def triv_kernel():
-        return tdocs.select(triv_udf(F.col("doc")).alias("v")).agg(
-            F.sum(F.col("v").cast("long"))).collect()[0][0]
-
-    def triv_auto():
-        out = with_valid_json(tdocs, "doc", TRIVIAL_CONTRACT)
-        return out.agg(F.sum(F.col("valid").cast("long"))).collect()[0][0]
-
-    tk, ta = [], []
-    triv_kernel(); triv_auto()             # warm both sides once
-    for _ in range(3):
-        t0 = time.perf_counter()
-        kv = triv_kernel()
-        tk.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        av = triv_auto()
-        ta.append(time.perf_counter() - t0)
-        assert kv == av                    # cross-plane verdict parity
-    extras["route_auto_trivial"] = round(min(tk) / min(ta), 2)
-    extras["route_auto_trivial_pair"] = {
-        "n_docs": n_pair,
-        "kernel_sec": round(min(tk), 3),
-        "auto_sec": round(min(ta), 3),
-        "timing": "interleaved_min_of_3",
-        "loadavg_before": [round(x, 2) for x in triv_load_before],
-        "loadavg_after": [round(x, 2) for x in os.getloadavg()],
-    }
-    tdocs.unpersist()
+    # route_auto_trivial (round 8, VERDICT r7 #1): the auto-vs-kernel
+    # pair on the LIGHTEST contract class — the round-7 suspected loss
+    # case.  Auto (which routes it) must hold ≥ parity with the forced
+    # kernel plane, else the default plan choice is the measured-slower
+    # one.  Same protocol and 4× scale as route_vs_kernel: the routed
+    # plan's fixed floor amortizes only over large batches, and the pair
+    # must measure the large-batch regime auto is designed for.
+    auto_trivial, auto_trivial_pair = _pair(
+        trivial_json_docs(spark, n_pair, num_partitions=CPUS * 3),
+        TRIVIAL_CONTRACT, "auto", n_pair)
 
     # plane-coverage pin (VERDICT r3 #6): a silent regression of
     # flagship-contract keywords from Plane A (Catalyst) to Plane B
     # (kernel UDF) must show up in BENCH_r*.json diffs
-    from jema_js_spark.validation.engine import compile_for
-    cov = compile_for(pages, PAGE_CONTRACT).coverage()
+    cov = compile_for(inputs.get("pages"), PAGE_CONTRACT).coverage()
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -328,16 +109,18 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": _sf_label(SF_DIR),
-        "pages_per_sec": extras["pages_per_sec"],
+        "pages_per_sec": round(N_PAGES / timings["flagship_validate"], 1),
         "n_pages": N_PAGES,
         "cpus": CPUS,
-        "kernel_docs_per_sec": extras["kernel_docs_per_sec"],
-        "json_columnar_docs_per_sec": extras["json_columnar_docs_per_sec"],
-        "json_route_rate": extras["json_route_rate"],
-        "route_vs_kernel": extras["route_vs_kernel"],
-        "route_pair": extras["route_pair"],
-        "route_auto_trivial": extras["route_auto_trivial"],
-        "route_auto_trivial_pair": extras["route_auto_trivial_pair"],
+        "kernel_docs_per_sec": round(
+            N_KERNEL_DOCS / timings["kernel_json"], 1),
+        "json_columnar_docs_per_sec": round(
+            N_KERNEL_DOCS / timings["json_columnar"], 1),
+        "json_route_rate": route_rate,
+        "route_vs_kernel": route_vs_kernel,
+        "route_pair": route_pair,
+        "route_auto_trivial": auto_trivial,
+        "route_auto_trivial_pair": auto_trivial_pair,
         "n_kernel_docs": N_KERNEL_DOCS,
         "plane_a_pct": round(cov["plane_a_fraction"] * 100, 1),
         # protocol (round 6): each entry is MIN of 3 timed fresh-plan
@@ -347,8 +130,8 @@ def main() -> None:
         "loadavg_after": [round(x, 2) for x in os.getloadavg()],
     }
     print(json.dumps(out))
+    inputs.close()
     spark.stop()
-    shutil.rmtree(pages_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":

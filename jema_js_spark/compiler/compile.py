@@ -1231,12 +1231,6 @@ def _h_multiple_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
     add(kw, sval, gate | ok)
 
 
-def _string_gate(texpr, jt, is_null):
-    if jt != "string":
-        return None
-    return is_null
-
-
 def _h_strlen(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
@@ -1787,12 +1781,6 @@ def _h_dependencies(c, kw, sval, node, texpr, jt, is_null, add, descend,
 
 # -- arrays ------------------------------------------------------------------
 
-def _array_gate(texpr, jt, is_null):
-    if jt != "array":
-        return None
-    return is_null
-
-
 def _h_arrlen(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
@@ -1978,12 +1966,6 @@ def _h_ref(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 def _h_dynamic_ref(c, kw, sval, node, texpr, jt, is_null, add, descend,
                    checks, spath, dpath, refs):
     raise ColumnarUnsupported("$dynamicRef is inherently runtime-scoped")
-
-
-def _h_unsupported(reason):
-    def h(*a, **k):
-        raise ColumnarUnsupported(reason)
-    return h
 
 
 # -- static evaluated-set analysis for unevaluated* --------------------------

@@ -23,7 +23,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jema_js_spark.compiler.compile import SchemaCompiler
+from jema_js_spark.validation.engine import violation_rows, with_valid
 
 __all__ = ["validated_stream", "windowed_verdicts",
            "windowed_json_verdicts", "stream_to_violations",
@@ -32,8 +32,7 @@ __all__ = ["validated_stream", "windowed_verdicts",
 
 def validated_stream(stream_df: DataFrame, schema,
                      format_assertion: bool = False) -> DataFrame:
-    plan = SchemaCompiler(schema, format_assertion).compile_plan(stream_df)
-    return stream_df.withColumn("valid", plan.valid_column())
+    return with_valid(stream_df, schema, format_assertion=format_assertion)
 
 
 def windowed_verdicts(stream_df: DataFrame, schema, ts_col: str,
@@ -102,11 +101,7 @@ def stream_to_violations(stream_df: DataFrame, schema,
                          format_assertion: bool = False) -> DataFrame:
     """Stateless violation-row stream (append mode — safe for any
     sink): one output row per failed check, reference error fields."""
-    plan = SchemaCompiler(schema, format_assertion).compile_plan(stream_df)
-    out = stream_df.select(*[F.col(c) for c in id_cols],
-                           F.explode(plan.violations_struct()).alias("v"))
-    return out.select(*id_cols, "v.check", "v.keyword", "v.schema_path",
-                      "v.data_path", "v.schema_value", "v.message")
+    return violation_rows(stream_df, schema, id_cols, format_assertion)
 
 
 def stream_dedup(stream_df: DataFrame, key_cols: Sequence[str],

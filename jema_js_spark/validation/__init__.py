@@ -1,7 +1,6 @@
 from jema_js_spark.validation.engine import (
     compile_for,
     partition_verdicts,
-    validation_report,
     violation_rows,
     with_valid,
 )
@@ -17,7 +16,7 @@ from jema_js_spark.validation.kernel_udf import (
 )
 
 __all__ = ["compile_for", "with_valid", "violation_rows",
-           "partition_verdicts", "validation_report",
+           "partition_verdicts",
            "kernel_validate_udf", "kernel_validate_pair_udf",
            "kernel_error_count_udf", "with_valid_json",
            "analyze_json_contract", "json_violation_rows"]

@@ -21,17 +21,17 @@ map-side-combinable aggregation keyed by ``spark_partition_id()``.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jema_js_spark.compiler.compile import CompiledPlan, SchemaCompiler
 from jema_js_spark.runtime.colcache import cached_column
-from jema_js_spark.schema.frontend import Schema, contract_key
+from jema_js_spark.schema.frontend import contract_key
 
 __all__ = ["compile_for", "with_valid", "violation_rows",
-           "partition_verdicts", "validation_report"]
+           "partition_verdicts"]
 
 # Round 9: session-scoped compiled-plan memo (runtime/colcache.py).
 # Compiling a contract is driver-side py4j expression construction —
@@ -125,19 +125,3 @@ def partition_verdicts(df: DataFrame, schema=None, valid_col: str = "valid",
         .withColumn("passed", F.col("n_invalid") == 0)
     )
 
-
-def validation_report(df: DataFrame, schema, id_cols: Sequence[str],
-                      format_assertion: bool = False) -> dict:
-    """Driver-side summary: totals + plane coverage (the compiler must
-    publish its Plane-A share, SURVEY.md §7.0)."""
-    plan = compile_for(df, schema, format_assertion)
-    with_v = plan.with_valid(df)
-    agg = with_v.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("valid").cast("long")).alias("n_valid")).collect()[0]
-    return {
-        "n_rows": agg["n"],
-        "n_valid": agg["n_valid"],
-        "n_invalid": agg["n"] - agg["n_valid"],
-        "coverage": plan.coverage(),
-    }

@@ -1283,12 +1283,15 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
         plan = analyze_json_contract(schema,
                                      format_assertion=format_assertion)
 
-    kernel_pred = kernel_validate_udf(
-        schema.schema, remotes=remotes, format_assertion=format_assertion)
+    # built only where a plan needs it: constructing the UDF parses its
+    # return type over py4j, wasted on a masked-memo hit
+    def kernel_verdict(doc_col: Column) -> Column:
+        udf = kernel_validate_udf(schema.schema, remotes=remotes,
+                                  format_assertion=format_assertion)
+        return F.coalesce(udf(doc_col), F.lit(False))
 
     if plan is None or not plan.routable:
-        out = df.withColumn(col_name, F.coalesce(
-            kernel_pred(F.col(json_col)), F.lit(False)))
+        out = df.withColumn(col_name, kernel_verdict(F.col(json_col)))
         if route_col:
             out = out.withColumn(route_col, F.lit("kernel"))
         return out
@@ -1305,7 +1308,7 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
         _json.dumps(remotes, sort_keys=True) if remotes else None)
     masked = cached_column(mkey, lambda: F.when(
         route, compiled.valid_column()).otherwise(
-        F.coalesce(kernel_pred(F.when(~route, doc)), F.lit(False))))
+        kernel_verdict(F.when(~route, doc))))
     out = b3.withColumn(col_name, masked)
     if route_col:
         out = out.withColumn(route_col, F.when(

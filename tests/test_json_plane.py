@@ -919,6 +919,33 @@ def test_reused_contract_dict_hits_route_bundle_memo(spark):
                and "reused dict pin" in k[2]) == 1
 
 
+def test_masked_memo_hit_builds_no_kernel_udf(spark, monkeypatch):
+    """The routed plan's kernel UDF lives inside the masked-verdict
+    memo: a second routed call with a fresh copy of the same contract
+    constructs no kernel UDF (each construction is a py4j return-type
+    parse on the driver)."""
+    import copy
+
+    from jema_js_spark.validation import kernel_udf
+
+    built = []
+    real = kernel_udf.kernel_validate_udf
+
+    def counting(*a, **k):
+        built.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(kernel_udf, "kernel_validate_udf", counting)
+    contract = {"$comment": "kernel udf build pin", "type": "object",
+                "properties": {"k": {"type": "integer", "minimum": 0}}}
+    df = spark.createDataFrame([('{"k":1}',), ('{"k":-1}',)], "doc string")
+    assert plan_choice(copy.deepcopy(contract))["shape"] == "route"
+    for _ in range(2):
+        out = with_valid_json(df, "doc", copy.deepcopy(contract))
+    assert len(built) == 1
+    assert [r["valid"] for r in out.collect()] == [True, False]
+
+
 def test_errors_path_masked_screen_output_identical(spark):
     """The round-7 masked screen must not change a single emitted row:
     a Plane-B-carrying routable contract's violation rows are compared

@@ -82,6 +82,44 @@ def test_stream_violations(spark):
     assert all(r["value"] % 2 == 0 for r in rows)
 
 
+def test_streams_share_the_engine_compile_memo(spark, tmp_path):
+    """validated_stream and stream_to_violations are the engine's
+    with_valid and violation_rows over the stream: both streams share
+    ONE engine.compile_for memo entry, and each emits what its batch
+    twin emits on the same rows."""
+    from jema_js_spark.runtime import colcache
+    from jema_js_spark.schema.frontend import contract_key
+    from jema_js_spark.validation.engine import violation_rows, with_valid
+
+    contract = {"$comment": "stream compile memo pin",
+                "required": ["url"],
+                "properties": {"url": {"pattern": "^https://"},
+                               "text": {"maxLength": 3}}}
+    ddl = "value long, url string, text string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, "https://ok" if i % 3 else "ftp://bad",
+          "body" if i % 2 else "ok") for i in range(30)], ddl) \
+        .write.parquet(src)
+    stream = spark.readStream.schema(ddl).parquet(src)
+    for name, out in [
+            ("memo_valid", validated_stream(stream, contract)),
+            ("memo_viol", stream_to_violations(stream, contract,
+                                               id_cols=["value"]))]:
+        _drain(out.writeStream.format("memory").queryName(name)
+               .outputMode("append").start())
+    key = contract_key(contract)
+    assert sum(1 for k in colcache._CACHE
+               if k[1] == "engine.compile_for" and k[2] == key) == 1
+
+    batch = spark.read.parquet(src)
+    assert sorted(spark.table("memo_valid").collect()) == sorted(
+        with_valid(batch, contract).collect())
+    viol = spark.table("memo_viol").collect()
+    assert viol and sorted(viol) == sorted(
+        violation_rows(batch, contract, ["value"]).collect())
+
+
 def test_stream_dedup_builtin(spark):
     from jema_js_spark.streaming.validate_stream import stream_dedup
 

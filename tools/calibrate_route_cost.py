@@ -3,10 +3,9 @@
 
 Evidence for the size-aware plane choice on ROADMAP item 2: where the
 route (``with_valid_json``'s ``auto`` plan) and the kernel UDF cross
-over, by contract weight, batch size and stream class.  Three sweeps,
-all interleaved kernel/route pairs (the box is shared; pairing keeps
-both sides under equal ambient pressure), MIN-of-3 per side, verdict
-parity asserted per pair:
+over, by contract weight, batch size and stream class.  Three sweeps
+of the bench's kernel/route pair (``bench_entries.kernel_vs_route``:
+interleaved, MIN-of-3 per side, verdict parity asserted per pass):
 
 1. CONTRACT sweep at 1M canonical docs — graded contracts from
    trivial type/bound up to the representative Plane-B contract.
@@ -36,12 +35,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import functions as F
 
+from bench_entries import CPUS, kernel_vs_route
+
 N = int(os.environ.get("CAL_DOCS", "1000000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def canonical_docs(spark, fields):
@@ -55,8 +54,6 @@ def main():
     from jema_js_spark.bench_contracts import (
         REPRESENTATIVE_KERNEL_CONTRACT, representative_json_docs)
     from jema_js_spark.runtime.session import build_session
-    from jema_js_spark.validation.json_plane import with_valid_json
-    from jema_js_spark.validation.kernel_udf import kernel_validate_udf
 
     spark = build_session(app_name="jema-cal", master=f"local[{CPUS}]",
                           shuffle_partitions=CPUS)
@@ -149,38 +146,17 @@ def main():
                        "c": {"$ref": "#/$defs/n"}}},
         [("a", int_f), ("b", int_f), ("c", int_f)]))
 
-    def pair(name, contract, docs, n):
-        docs = docs.cache()
-        docs.count()
-        udf = kernel_validate_udf(contract)
-
-        def kern():
-            return docs.select(udf(F.col("doc")).alias("v")).agg(
-                F.sum(F.col("v").cast("long"))).collect()[0][0]
-
-        def route():
-            # the AUTO DEFAULT — the calibration must measure the plan
-            # users actually get, not an opt-in
-            out = with_valid_json(docs, "doc", contract)
-            return out.agg(F.sum(F.col("valid").cast("long"))
-                           ).collect()[0][0]
-
-        kern(); route()                       # warm both sides
-        ks, rs = [], []
-        for _ in range(3):
-            t0 = time.perf_counter(); kv = kern()
-            ks.append(time.perf_counter() - t0)
-            t0 = time.perf_counter(); rv = route()
-            rs.append(time.perf_counter() - t0)
-            assert kv == rv, (name, kv, rv)
-        row = {"case": name,
-               "kernel_sec": round(min(ks), 3),
-               "route_sec": round(min(rs), 3),
-               "route_vs_kernel": round(min(ks) / min(rs), 2),
-               "n_valid": int(kv), "n": n}
+    def emit(row):
         print(json.dumps(row), flush=True)
-        docs.unpersist()
         return row
+
+    def pair(name, contract, docs, n):
+        k, r, n_valid = kernel_vs_route(docs, contract)
+        return emit({"case": name,
+                     "kernel_sec": round(k, 3),
+                     "route_sec": round(r, 3),
+                     "route_vs_kernel": round(k / r, 2),
+                     "n_valid": int(n_valid), "n": n})
 
     contracts = []
     for name, contract, fields in cases + [("representative", None, None)]:
@@ -208,36 +184,13 @@ def main():
             mixed_json_docs(spark, n, num_partitions=CPUS * 3), n))
 
     # shape decomposition: kernel vs the routed plan per stream class
-    def triple(name, contract, docs, n):
-        docs = docs.cache()
-        docs.count()
-        udf = kernel_validate_udf(contract)
-
-        def kern():
-            return docs.select(udf(F.col("doc")).alias("v")).agg(
-                F.sum(F.col("v").cast("long"))).collect()[0][0]
-
-        def route():
-            out = with_valid_json(docs, "doc", contract)
-            return out.agg(F.sum(F.col("valid").cast("long"))
-                           ).collect()[0][0]
-
-        kern(); route()
-        ks, ms = [], []
-        for _ in range(3):
-            t0 = time.perf_counter(); kv = kern()
-            ks.append(time.perf_counter() - t0)
-            t0 = time.perf_counter(); mv = route()
-            ms.append(time.perf_counter() - t0)
-            assert kv == mv, (name, kv, mv)
-        row = {"stream": name,
-               "kernel_sec": round(min(ks), 3),
-               "masked_sec": round(min(ms), 3),
-               "masked_vs_kernel": round(min(ks) / min(ms), 2),
-               "n": n}
-        print(json.dumps(row), flush=True)
-        docs.unpersist()
-        return row
+    def shape_pair(name, contract, docs, n):
+        k, r, _ = kernel_vs_route(docs, contract)
+        return emit({"stream": name,
+                     "kernel_sec": round(k, 3),
+                     "masked_sec": round(r, 3),
+                     "masked_vs_kernel": round(k / r, 2),
+                     "n": n})
 
     from jema_js_spark.bench_contracts import mixed_json_docs as _mx
     base = spark.range(N, numPartitions=CPUS * 3)
@@ -254,16 +207,16 @@ def main():
                      F.lit('","name":"user","xs":[1,2,3]}'))
     malformed = F.concat(F.lit('{"k": '), F.col("id").cast("string"))
     shapes = [
-        triple("canonical", REPRESENTATIVE_KERNEL_CONTRACT,
-               base.select(canonical.alias("doc")), N),
-        triple("whitespace-gate", REPRESENTATIVE_KERNEL_CONTRACT,
-               base.select(spaced.alias("doc")), N),
-        triple("wrongtype-residue", REPRESENTATIVE_KERNEL_CONTRACT,
-               base.select(wrong.alias("doc")), N),
-        triple("malformed-residue", REPRESENTATIVE_KERNEL_CONTRACT,
-               base.select(malformed.alias("doc")), N),
-        triple("mixed-80pct", REPRESENTATIVE_KERNEL_CONTRACT,
-               _mx(spark, N, num_partitions=CPUS * 3), N),
+        shape_pair("canonical", REPRESENTATIVE_KERNEL_CONTRACT,
+                   base.select(canonical.alias("doc")), N),
+        shape_pair("whitespace-gate", REPRESENTATIVE_KERNEL_CONTRACT,
+                   base.select(spaced.alias("doc")), N),
+        shape_pair("wrongtype-residue", REPRESENTATIVE_KERNEL_CONTRACT,
+                   base.select(wrong.alias("doc")), N),
+        shape_pair("malformed-residue", REPRESENTATIVE_KERNEL_CONTRACT,
+                   base.select(malformed.alias("doc")), N),
+        shape_pair("mixed-80pct", REPRESENTATIVE_KERNEL_CONTRACT,
+                   _mx(spark, N, num_partitions=CPUS * 3), N),
     ]
 
     out = {"protocol": "interleaved kernel/route pairs, MIN-of-3 per "
