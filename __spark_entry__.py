@@ -179,8 +179,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                       "propertyNames": {"pattern": "^[a-z]$"},
                       "additionalProperties": {"type": "integer",
                                                "minimum": 0, "maximum": 80}}
-        assert analyze_json_contract(map_schema).map_value == \
-            ("integer", None)
+        assert analyze_json_contract(map_schema).root == \
+            ("map", ("integer", None))
         # round 7: a NESTED document (object-in-object) synthesized from
         # the event columns, validated through the recursive struct
         # route — `meta` must analyze as a nested object node and the
@@ -198,12 +198,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         "v": {"type": "number", "minimum": 0.5,
                               "maximum": 150}}}}}
         nplan = analyze_json_contract(nested_schema)
-        assert nplan.routable and nplan.fields["meta"][0] == "object", \
+        assert nplan.routable and nplan.root[1]["meta"][0] == "object", \
             nplan.reasons
         # round 7: a ROOT-VALUE document — the JSON column holds a bare
         # array, not an object ("[12.5]"); from_json cannot parse a
         # non-object root, so the route wraps it as {"v": <doc>} and
-        # validates the single extracted slot (json_plane.py root mode).
+        # validates the single extracted slot (json_plane.py root values).
         # The DuckDB twin restates the verdict over the raw column.
         root_schema = {"type": "array", "minItems": 1, "maxItems": 4,
                        "items": {"type": "number", "minimum": 0.5,
@@ -221,7 +221,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        "propertyNames": {"pattern": "^[a-z]+$"},
                        "dependentRequired": {"error": ["recovery"]}}
         kplan = analyze_json_contract(keys_schema)
-        assert kplan.routable and kplan.map_value == ("variant", None), \
+        assert kplan.routable and kplan.root == ("map", ("variant", None)), \
             kplan.reasons
         # round 7 session 5: a UNION-TYPED slot ({"type": ["integer",
         # "string"]}) stores the value as an opaque VARIANT and the
@@ -234,8 +234,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         "properties": {"uid": {"type": ["integer",
                                                "string"]}}}
         uplan = analyze_json_contract(union_schema)
-        assert uplan.routable and uplan.fields == \
-            {"uid": ("variant", None)}, uplan.reasons
+        assert uplan.routable and uplan.root == \
+            ("object", {"uid": ("variant", None)}), uplan.reasons
         # ... and MIXED-TYPE patternProperties — dynamic-key value
         # schemas that disagree on a routing node but are all
         # tag-affine — route as map<string, variant> with per-entry
@@ -244,7 +244,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         "patternProperties": {"^x-": {"type": "string"},
                                               "id$": {"type": "integer"}}}
         mplan = analyze_json_contract(mixed_schema)
-        assert mplan.routable and mplan.map_value == ("variant", None), \
+        assert mplan.routable and mplan.root == ("map", ("variant", None)), \
             mplan.reasons
         udf = kernel_validate_udf(schema)
         ev = _events(spark, sf_dir).withColumn(

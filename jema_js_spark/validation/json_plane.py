@@ -37,14 +37,16 @@ This module routes each row at runtime, entirely JVM-side:
    satisfy (see the stage-3 comment in ``_routing_pieces``).
 3. Routable rows are validated by the columnar compiler
    (``SchemaCompiler.compile_plan_for_column``) over the ``from_json``
-   struct — whole-stage-codegen, zero Python compute.  Three routing
-   modes share the machinery: fixed-key STRUCT layouts (round 7:
-   recursive — nested objects and arrays of objects), dynamic-key MAP
-   contracts (``map<string, T>``), and ROOT-VALUE contracts (round 7:
-   the document is a bare scalar or array — ``from_json`` cannot parse
-   a non-object root, so the route parses ``{"v": <doc>}`` and
-   validates the single extracted slot; the round-trip proof compares
-   against the same wrapped string, so no document text can spoof it).
+   struct — whole-stage-codegen, zero Python compute.  One routing
+   layout serves every contract: a single root slot node
+   (``JsonColumnPlan.root``) in a recursive grammar — fixed-key
+   ``object`` nodes (round 7: nested objects and arrays of objects),
+   dynamic-key ``map`` nodes (``map<string, T>``), and ROOT VALUES
+   (round 7: the document is a bare scalar or array — ``from_json``
+   cannot parse a non-object root, so the route parses ``{"v": <doc>}``
+   and validates the single extracted slot; the round-trip proof
+   compares against the same wrapped string, so no document text can
+   spoof it).  Every stage of the routed plan is one call on that node.
    Slots with no single storable type — union-typed properties
    (``{"type": ["integer", "string"]}``), mixed-type
    patternProperties, keys-only layoutless roots — store the value as
@@ -262,53 +264,33 @@ def _node_dtype(node: Tuple[str, Any]) -> T.DataType:
     return _SCALAR_SPARK[decl]
 
 
-def _node_has_integer(node: Tuple[str, Any]) -> bool:
+def _node_has(node: Tuple[str, Any], kind: str) -> bool:
+    """True when a ``kind`` slot ("integer", "number", "variant",
+    "map", …) sits anywhere in ``node``."""
     decl, extra = node
-    if decl == "integer":
+    if decl == kind:
         return True
     if decl == "array":
-        return extra == "integer" if isinstance(extra, str) \
-            else _node_has_integer(extra)
+        return extra == kind if isinstance(extra, str) \
+            else _node_has(extra, kind)
     if decl == "object":
-        return any(_node_has_integer(c) for c in extra.values())
+        return any(_node_has(c, kind) for c in extra.values())
     if decl == "map":
-        return _node_has_integer(extra)
-    return False
-
-
-def _node_has_map(node: Tuple[str, Any]) -> bool:
-    decl, extra = node
-    if decl == "map":
-        return True
-    if decl == "array":
-        return not isinstance(extra, str) and _node_has_map(extra)
-    if decl == "object":
-        return any(_node_has_map(c) for c in extra.values())
-    return False
-
-
-def _node_has_variant(node: Tuple[str, Any]) -> bool:
-    decl, extra = node
-    if decl == "variant":
-        return True
-    if decl == "array":
-        return not isinstance(extra, str) and _node_has_variant(extra)
-    if decl == "object":
-        return any(_node_has_variant(c) for c in extra.values())
-    if decl == "map":
-        return _node_has_variant(extra)
+        return _node_has(extra, kind)
     return False
 
 
 def _node_needs_doc_screen(node: Tuple[str, Any],
-                           under_elem: bool = False) -> bool:
-    """True when a ``number`` slot sits below an array-of-node element
-    or a map value — there is no per-value raw JSON path there, so the
-    ≥16-digit integer-token screen must run doc-wide (computed once per
-    row in the barrier)."""
+                           no_path: bool = False) -> bool:
+    """True when a ``number`` slot has no per-value raw JSON path — it
+    sits below an array-of-node element, a map value, a bracket-quoted
+    field name or a wrapped root (``no_path`` marks ``node`` itself as
+    such a position) — so the ≥16-digit integer-token screen must run
+    doc-wide (computed once per row in the barrier).  Mirrors which
+    positions :func:`_reprable` reaches with ``doc=None``."""
     decl, extra = node
     if decl == "number":
-        return under_elem
+        return no_path
     if decl == "variant":
         # opaque slots need the doc-wide screen in EVERY position: big
         # integer tokens melt through the variant parse and big
@@ -317,14 +299,14 @@ def _node_needs_doc_screen(node: Tuple[str, Any],
         return True
     if decl == "array":
         if isinstance(extra, str):
-            return under_elem and extra == "number"
+            return no_path and extra == "number"
         return _node_needs_doc_screen(extra, True)
     if decl == "object":
         # a bracket-quoted field name has no reliable raw path either
         # (get_json_object can't address the empty name) — its subtree
         # uses the doc-wide screen, mirroring _reprable's descent
         return any(_node_needs_doc_screen(
-                       c, under_elem or not _NAME_RE.match(n))
+                       c, no_path or not _NAME_RE.match(n))
                    for n, c in extra.items())
     if decl == "map":
         return _node_needs_doc_screen(extra, True)
@@ -333,39 +315,46 @@ def _node_needs_doc_screen(node: Tuple[str, Any],
 
 @dataclass
 class JsonColumnPlan:
-    """Static routing analysis of one contract: a typed field layout
-    (struct mode — round 7: recursive, nested objects and arrays of
-    objects included), a uniform dynamic-key value type (map mode,
-    round 6 — contracts built from patternProperties / propertyNames /
-    additionalProperties with one scalar/array value type), a ROOT
-    VALUE slot (round 7: contracts whose documents are scalars or
-    arrays, not objects — ``from_json`` cannot parse a bare scalar, so
-    the route parses the doc wrapped as ``{"v": <doc>}`` and validates
-    the single field), or the reasons the contract stays whole on the
-    kernel plane."""
+    """Static routing analysis of one contract: ONE root slot node in
+    the routing grammar above, or the reasons the contract stays whole
+    on the kernel plane.  The node's kind is the layout:
+
+    - ``("object", {name: node, ...})`` — fixed-key documents (round 7:
+      recursive, nested objects and arrays of objects included);
+    - ``("map", node)`` — dynamic-key documents (round 6: contracts
+      built from patternProperties / additionalProperties whose value
+      sources agree on one node; ``("map", ("variant", None))`` is the
+      keys-only layout);
+    - any other node — a ROOT VALUE (round 7: documents that are
+      scalars or arrays, not objects).
+
+    ``from_json`` parses object and map roots directly; it cannot parse
+    a bare scalar, so any other root parses the doc wrapped as
+    ``{"v": <doc>}`` and validates the single field (:attr:`wrapped`,
+    :meth:`slot`)."""
 
     schema: Any
-    fields: Dict[str, Tuple[str, Any]] = field(default_factory=dict)
-    map_value: Optional[Tuple[str, Optional[str]]] = None
     root: Optional[Tuple[str, Any]] = None
     reasons: List[str] = field(default_factory=list)
 
     @property
     def routable(self) -> bool:
-        return not self.reasons and (bool(self.fields)
-                                     or self.map_value is not None
-                                     or self.root is not None)
+        return not self.reasons and self.root is not None
+
+    @property
+    def wrapped(self) -> bool:
+        return self.root[0] not in ("object", "map")
+
+    def slot(self, parsed: Column) -> Tuple[Column, T.DataType]:
+        """The column the contract compiles against inside the parsed
+        ``struct_type()`` value, and that column's type."""
+        return (parsed["v"] if self.wrapped else parsed,
+                _node_dtype(self.root))
 
     def struct_type(self) -> T.DataType:
-        if self.map_value is not None:
-            decl, elem = self.map_value
-            vt: T.DataType = (T.ArrayType(_SCALAR_SPARK[elem])
-                              if decl == "array" else _SCALAR_SPARK[decl])
-            return T.MapType(T.StringType(), vt)
-        if self.root is not None:
-            return T.StructType(
-                [T.StructField("v", _node_dtype(self.root), True)])
-        return _node_dtype(("object", self.fields))
+        dt = _node_dtype(self.root)
+        return T.StructType([T.StructField("v", dt, True)]) \
+            if self.wrapped else dt
 
 
 def _declared_type(schema: Schema, node: Any,
@@ -717,7 +706,7 @@ def _build_node(schema: Schema, sub: Any, label: str,
         # horizon the slot stores the remaining subtree as an OPAQUE
         # variant — exactly the keys-only slot type, so every existing
         # hazard guard applies as-is (doc-wide big-int/big-exp screens
-        # via _node_has_variant/_node_needs_doc_screen, dup-key docs
+        # via _node_has/_node_needs_doc_screen, dup-key docs
         # null the gate parse, the round-trip equality proves the
         # shortcut rendering byte-exact).  The compiler's variant net
         # turns the (recursive) subschema at this point into ONE
@@ -835,16 +824,16 @@ def _build_node(schema: Schema, sub: Any, label: str,
 def analyze_json_contract(schema: Any,
                           format_assertion: bool = False) -> JsonColumnPlan:
     """Decide whether a contract's conforming documents are exactly
-    representable as a typed struct — round 7: RECURSIVELY, nested
+    representable in one typed root slot (``plan.root``): an
+    ``("object", fields)`` struct — round 7: RECURSIVELY, nested
     objects become nested ``StructType`` fields, arrays of objects
     ``ArrayType(StructType)``, and nested dynamic-key slots
     ``MapType`` (all value sources agreeing on one node) — or (round
-    6, VERDICT r5 #6) as a ``map<string, T>`` when the contract types
-    its values through dynamic-key keywords (``patternProperties`` /
-    ``additionalProperties``) with ONE scalar/array type (object-typed
-    values route as a root ``("map", node)`` through the wrapper), or
-    (round 7) as a ROOT VALUE slot when the documents are bare scalars
-    or arrays rather than objects.  Unroutable
+    6, VERDICT r5 #6) a ``("map", node)`` when the contract types its
+    values through dynamic-key keywords (``patternProperties`` /
+    ``additionalProperties``) that agree on one value node, or (round
+    7) a ROOT VALUE slot when the documents are bare scalars or arrays
+    rather than objects.  Unroutable
     contracts are not an error — ``with_valid_json`` just runs them
     whole on the kernel plane — but the reasons are published so a
     pipeline owner can see why a contract is stuck on the slow plane.
@@ -898,14 +887,13 @@ def analyze_json_contract(schema: Any,
         value_node = _dyn_map_node(schema, root, dyn, merged_fixed,
                                    typed, format_assertion)
         if value_node is not None:
-            plan.map_value = value_node
+            plan.root = ("map", value_node)
             return plan
         if not sources:
             # round 7: value sources beyond scalars/arrays (object or
-            # nested-map values) — route as a ROOT map node through the
-            # {"v": <doc>} wrapper; _build_node's object branch builds
-            # ("map", <node>) when every source agrees on one node,
-            # else publishes the disagreement
+            # nested-map values) — _build_node's object branch builds
+            # the root ("map", <node>) when every source agrees on one
+            # node, else publishes the disagreement
             plan.root = _build_node(schema, root, "root value",
                                     plan.reasons, 1, format_assertion,
                                     slots)
@@ -944,23 +932,24 @@ def analyze_json_contract(schema: Any,
                     "root has no properties and carries unevaluated* — "
                     "whole-plan kernel check, routing buys nothing")
                 return plan
-            plan.map_value = ("variant", None)
+            plan.root = ("map", ("variant", None))
             return plan
         plan.root = _build_node(schema, root, "root value",
                                 plan.reasons, 1, format_assertion, slots)
         return plan
-    props = {name: subs[0] if len(subs) == 1 else {"allOf": subs}
-             for name, subs in sources.items()}
-    for name, sub in props.items():
+    fields: Dict[str, Tuple[str, Any]] = {}
+    for name, subs in sources.items():
         if not _routable_name(name):
             plan.reasons.append(
                 f"property {name!r}: name not addressable in a variant "
                 "path (quote/backslash/control char) — kernel only")
             continue
+        sub = subs[0] if len(subs) == 1 else {"allOf": subs}
         node = _build_node(schema, sub, f"property {name!r}",
                            plan.reasons, 1, format_assertion, slots)
         if node is not None:
-            plan.fields[name] = node
+            fields[name] = node
+    plan.root = ("object", fields)
     return plan
 
 
@@ -982,7 +971,10 @@ def plan_choice(schema: Any, format_assertion: bool = False) -> Dict[str, Any]:
     if not isinstance(schema, Schema):
         schema = Schema(schema)
     plan = analyze_json_contract(schema, format_assertion=format_assertion)
-    sensitive = _has_number_slot(plan)
+    # a number slot re-renders integer-form tokens as ``x.0``, so such
+    # documents always miss the round-trip proof and take the (correct
+    # but slow) gate path
+    sensitive = plan.root is not None and _node_has(plan.root, "number")
     if not plan.routable:
         return {"shape": "kernel", "routable": False,
                 "why": "contract not routable: " + "; ".join(plan.reasons),
@@ -1000,31 +992,6 @@ def plan_choice(schema: Any, format_assertion: bool = False) -> Dict[str, Any]:
             "unroutable_reasons": []}
 
 
-def _has_number_slot(plan: JsonColumnPlan) -> bool:
-    """Static shortcut-sensitivity marker: a ``number``-typed slot
-    anywhere in the layout re-renders integer-form tokens as ``x.0``,
-    so such documents always miss the round-trip proof and take the
-    (correct but slow) gate path."""
-    def node_has(n) -> bool:
-        decl, extra = n
-        if decl == "number":
-            return True
-        if decl == "array":
-            return extra == "number" if isinstance(extra, str) \
-                else node_has(extra)
-        if decl == "object":
-            return any(node_has(c) for c in extra.values())
-        if decl == "map":
-            return node_has(extra)
-        return False
-
-    if plan.map_value is not None:
-        return node_has(plan.map_value)
-    if plan.root is not None:
-        return node_has(plan.root)
-    return any(node_has(n) for n in plan.fields.values())
-
-
 def _decimal_gate(tag: Column, max_int_digits: int = 15) -> Column:
     p = F.regexp_extract(tag, _DECIMAL_RE, 1)
     s = F.regexp_extract(tag, _DECIMAL_RE, 2)
@@ -1040,16 +1007,18 @@ def _reprable(base: Column, path: str, node: Tuple[str, Any],
               doc: Optional[Column], clean: Optional[Column]) -> Column:
     """True when the PRESENT variant value at ``path`` under ``base``
     is exactly representable in ``node``'s typed slot — the one
-    recursive gate behind every routing mode (round 7; it subsumes the
-    round-6 flat field gate and map-value gate).
+    recursive gate, applied once to the plan's root slot (round 7; it
+    subsumes the round-6 flat field gate and map-value gate).
 
     ``doc`` is the root raw JSON string when per-path raw text exists
     (``get_json_object`` powers the ≥16-digit integer-token screens for
-    ``number`` slots); below array-of-node elements there is no raw
-    path, so ``doc`` is None and the doc-wide ``clean`` screen applies
-    — computed ONCE per row in the barrier (inlining ``doc.rlike``
-    per value would re-scan the document each time, round-6 review
-    find).  A hit routes to the kernel: slower, never wrong.
+    ``number`` slots); a wrapped root value, array-of-node elements,
+    map values and bracket-quoted names have no reliable raw path, so
+    ``doc`` is None there and the doc-wide ``clean`` screen applies
+    (:func:`_node_needs_doc_screen` mirrors this descent) — computed
+    ONCE per row in the barrier (inlining ``doc.rlike`` per value would
+    re-scan the document each time, round-6 review find).  A hit routes
+    to the kernel: slower, never wrong.
 
     A VOID tag (present JSON null) is never representable — struct
     ``to_json`` omits null fields, so the bridge would read it as
@@ -1201,7 +1170,7 @@ def _exact_guard(col: Column, node: Tuple[str, Any]) -> Optional[Column]:
                 return None
             return col.isNull() | F.forall(
                 col, lambda x: x.isNull() | _exact_long_range(x))
-        if not (_node_has_integer(extra) or _node_has_map(extra)):
+        if not (_node_has(extra, "integer") or _node_has(extra, "map")):
             return None
         child_node = extra
 
@@ -1221,7 +1190,7 @@ def _exact_guard(col: Column, node: Tuple[str, Any]) -> Optional[Column]:
         g = ((F.size(keys) == F.size(F.array_distinct(keys)))
              & ~F.exists(F.map_values(col), lambda x: x.isNull()))
         child_node = extra
-        if _node_has_integer(child_node) or _node_has_map(child_node):
+        if _node_has(child_node, "integer") or _node_has(child_node, "map"):
             def val_guard(x: Column) -> Column:
                 vg_ = _exact_guard(x, child_node)
                 return F.lit(True) if vg_ is None \
@@ -1420,20 +1389,20 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     """The df-independent expression bundle behind
     :func:`_routing_pieces` — see the staging rationale inline."""
     doc = F.col(json_col)
-    struct_type = plan.struct_type()
+    root = plan.root
+    wrapped = plan.wrapped
 
-    # Root-value mode (round 7): ``from_json`` parses struct/map/array
-    # roots only, so a scalar-or-array-root contract parses the doc
-    # WRAPPED as ``{"v": <doc>}`` into struct<v: T>.  The round-trip
+    # Root values (round 7): ``from_json`` cannot parse a bare scalar,
+    # so a plan whose root slot is not an object or a map parses the
+    # doc WRAPPED as ``{"v": <doc>}`` into struct<v: T>.  The round-trip
     # proof compares against the same wrapped string: ``to_json(p)``
     # is ``{"v":`` + canonical(v) + ``}`` by construction, so equality
     # forces the raw doc to BE canonical(v) — no document text can
     # spoof it (an injection like ``5,"v":6`` changes the parse, fails
     # the equality, and the variant gates below run on the RAW doc, so
     # wrapper tricks only cost speed, never a verdict).
-    root_mode = plan.root is not None
     parse_src = F.concat(F.lit('{"v":'), doc, F.lit('}')) \
-        if root_mode else doc
+        if wrapped else doc
 
     # Generate-node barriers (explode of a 1-element array): Catalyst
     # re-inlines a derived column's defining expression into EVERY
@@ -1447,8 +1416,9 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     # Stage 1: the typed struct, parsed directly from the string.  This
     # is the ONLY JSON parse canonical documents pay.
     jp = F.explode(F.array(
-        F.from_json(parse_src, struct_type))).alias("__jp")
+        F.from_json(parse_src, plan.struct_type()))).alias("__jp")
     p = F.col("__jp")
+    slot, slot_type = plan.slot(p)
 
     # Stage 2: the round-trip shortcut.  ``to_json(p) == doc`` proves
     # the document is exactly the canonical rendering of the struct:
@@ -1459,45 +1429,17 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     # number the double slot can't render back verbatim (int tokens,
     # 17+ significant digits, exponent-form mismatches) fails the
     # equality.  All hazards fall through to the variant gates =
-    # fail-closed.  One residue the equality cannot see: an integer
-    # slot holding an exact int64 in (2^53, 2^63) round-trips, but the
-    # kernel applies JS float semantics there — the magnitude guard
-    # routes those to the kernel.  (Null array ELEMENTS round-trip and
-    # stay columnar: the bridge reads them as JSON null, parity pinned
-    # in tests.)
+    # fail-closed.  Residues the equality cannot see: an integer slot
+    # holding an exact int64 in (2^53, 2^63) round-trips, but the
+    # kernel applies JS float semantics there; and map slots keep
+    # duplicate keys and JSON-null values through the round trip —
+    # _exact_guard routes all of these to the kernel.  (Null array
+    # ELEMENTS round-trip and stay columnar: the bridge reads them as
+    # JSON null, parity pinned in tests.)
     guards = [F.to_json(p) == parse_src]
-    if root_mode:
-        g = _exact_guard(p["v"], plan.root)
-        if g is not None:
-            guards.append(g)
-    elif plan.map_value is not None:
-        # map hazards the round-trip alone cannot see (probed round 6):
-        # duplicate keys round-trip through from_json/to_json but the
-        # map lookup is first-match while the kernel is last-wins; and
-        # map to_json RENDERS null values the bridge reads as absent
-        keys_ = F.map_keys(p)
-        guards.append(F.size(keys_) == F.size(F.array_distinct(keys_)))
-        decl, elem = plan.map_value
-        if decl != "variant":
-            # typed values only: variant values keep JSON nulls as
-            # variant nulls (present, kernel semantics — no bridge
-            # hazard) and big integers either render back exactly
-            # (int64/decimal) or fail the round-trip equality above
-            guards.append(~F.exists(F.map_values(p),
-                                    lambda x: x.isNull()))
-        if decl == "integer":
-            guards.append(F.forall(F.map_values(p),
-                                   lambda x: _exact_long_range(x)))
-        elif decl == "array" and elem == "integer":
-            guards.append(F.forall(
-                F.map_values(p),
-                lambda a: F.forall(a, lambda x: x.isNull()
-                                   | _exact_long_range(x))))
-    else:
-        for n, node in plan.fields.items():
-            g = _exact_guard(p[n], node)
-            if g is not None:
-                guards.append(g)
+    g = _exact_guard(slot, root)
+    if g is not None:
+        guards.append(g)
     jsc = F.explode(F.array(F.coalesce(
         functools.reduce(lambda a, b: a & b, guards),
         F.lit(False)))).alias("__jsc")
@@ -1529,9 +1471,10 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     #
     # The doc-wide big-int screen is materialized in the same barrier
     # once per row when any number slot lacks a per-value raw path:
-    # map-mode number values (dynamic keys), struct-mode number slots
-    # below an array-of-object element, or any root-mode number slot
-    # (see _reprable).
+    # map values (dynamic keys), slots below an array-of-object element
+    # or a bracket-quoted name, or any slot of a wrapped root value —
+    # the gates judge the raw doc, which IS the value there, so a
+    # per-path get_json_object buys nothing (see _reprable).
     sentinel = F.md5(doc)
     wrapped_arr = F.concat(F.lit('['), doc, F.lit(',"'), sentinel,
                            F.lit('"]'))
@@ -1547,34 +1490,13 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
         & F.try_variant_get(vw, "$[2]", "variant").isNull()
         & (F.try_variant_get(vw, "$[1]", "string") == F.col("__jw.s")))
     v_expr = F.when(complete, F.try_variant_get(vw, "$[0]", "variant"))
-    # root mode passes doc=None to the gates (the doc IS the value —
-    # a per-path get_json_object buys nothing over the doc-wide
-    # screen), so every number slot under the root uses `clean`
-    needs_clean = (
-        (root_mode and _node_needs_doc_screen(plan.root, True))
-        or (plan.map_value is not None
-            and ("number" in plan.map_value
-                 # keys-only mode: a ≥16-digit integer token melts to
-                 # a DOUBLE through try_parse_json, and a Plane-B check
-                 # reading the value would judge the melted rendering —
-                 # screen those docs to the kernel on the gate path
-                 or plan.map_value[0] == "variant"))
-        or (not root_mode and plan.map_value is None
-            and any(_node_needs_doc_screen(n)
-                    for n in plan.fields.values())))
-    if needs_clean:
+    if _node_needs_doc_screen(root, wrapped):
         # plans carrying variant slots also screen big exponents: a
         # non-finite double inside an opaque value renders as the
         # string "Infinity" wherever a Plane-B check reads it (variants
         # have no float_paths restoration) — one merged regex, one scan
-        has_variant = (
-            (plan.map_value is not None and plan.map_value[0] == "variant")
-            or (root_mode and _node_has_variant(plan.root))
-            or (not root_mode and plan.map_value is None
-                and any(_node_has_variant(n)
-                        for n in plan.fields.values())))
-        screen_re = _BIG_INT_OR_EXP_ANYWHERE if has_variant \
-            else _BIG_INT_ANYWHERE
+        screen_re = _BIG_INT_OR_EXP_ANYWHERE \
+            if _node_has(root, "variant") else _BIG_INT_ANYWHERE
         jv = F.explode(F.array(F.when(~sc, F.struct(
             v_expr.alias("v"),
             (~doc.rlike(screen_re)).alias("clean"),
@@ -1587,41 +1509,20 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
         v = F.col("__jv")
         clean = None
 
-    if root_mode:
-        # the gates judge the RAW doc (never the wrapped parse): one
-        # recursive representability check of the root slot.  A VOID
-        # tag (doc "null") is not representable — p.v NULL would read
-        # as absent under the bridge — and _reprable already rejects it.
-        gates = [
-            v.isNotNull(),     # parses COMPLETELY; no duplicate keys
-            F.coalesce(_reprable(v, "$", plan.root, None, clean),
-                       F.lit(False)),
-        ]
-    elif plan.map_value is not None:
-        vm = F.try_variant_get(v, "$", "map<string, variant>")
-        value_node: Tuple[str, Any] = plan.map_value
-
-        def entry_bad(k: Column, vv: Column) -> Column:
-            return ~F.coalesce(_reprable(vv, "$", value_node, None, clean),
-                               F.lit(False))
-
-        gates = [
-            v.isNotNull(),     # parses COMPLETELY; no duplicate keys
-            vm.isNotNull(),                  # is an object
-            F.size(F.map_filter(vm, entry_bad)) == 0,
-        ]
-    else:
-        # the whole struct layout is one object node — key exactness
-        # and per-field recursion (nested objects, arrays of objects)
-        # all live in _reprable
-        gates = [
-            v.isNotNull(),     # parses COMPLETELY; no duplicate keys
-            _reprable(v, "$", ("object", plan.fields), doc, clean),
-        ]
-    # every routing mode: documents carrying surrogate escape tokens
-    # take the kernel — the JVM parse replaces lone surrogates while
-    # the kernel keeps them (see _SURROGATE_ESC_ANYWHERE)
-    gates.append(~doc.rlike(_SURROGATE_ESC_ANYWHERE))
+    # the gates judge the RAW doc (never the wrapped parse): one
+    # recursive representability check of the root slot — key
+    # exactness and per-value recursion (nested objects, arrays of
+    # objects, map values) all live in _reprable.  A VOID root (doc
+    # "null") is not representable — p.v NULL would read as absent
+    # under the bridge — and _reprable rejects it.
+    gates = [
+        v.isNotNull(),     # parses COMPLETELY; no duplicate keys
+        _reprable(v, "$", root, None if wrapped else doc, clean),
+        # documents carrying surrogate escape tokens take the kernel —
+        # the JVM parse replaces lone surrogates while the kernel keeps
+        # them (see _SURROGATE_ESC_ANYWHERE)
+        ~doc.rlike(_SURROGATE_ESC_ANYWHERE),
+    ]
     full_gates = functools.reduce(lambda a, b: a & b, gates)
     # shortcut hits skip the gate chain entirely (CaseWhen-lazy).  The
     # route verdict is then MATERIALIZED as a generated attribute
@@ -1636,13 +1537,11 @@ def _route_bundle(json_col: str, schema: Schema, plan: JsonColumnPlan,
     jr = F.explode(F.array(route_expr)).alias("__jr")
     route = F.coalesce(F.col("__jr"), F.lit(False))
 
-    # root mode compiles the contract against the single extracted
-    # value column — the schema root applies to p.v, not the wrapper
+    # a wrapped root compiles against the single extracted value
+    # column — the schema root applies to p.v, not the wrapper
     compiled: CompiledPlan = SchemaCompiler(
         schema, format_assertion=format_assertion) \
-        .compile_plan_for_column(
-            p["v"] if root_mode else p,
-            struct_type["v"].dataType if root_mode else struct_type)
+        .compile_plan_for_column(slot, slot_type)
 
     return {"jp": jp, "jsc": jsc, "jw": jw, "jv": jv, "jr": jr,
             "route": route, "compiled": compiled}

@@ -251,7 +251,7 @@ def test_map_columns_mine_value_type(spark):
 
     from jema_js_spark.validation.json_plane import analyze_json_contract
     plan = analyze_json_contract(contract["properties"]["m"])
-    assert plan.map_value == ("integer", None), plan.reasons
+    assert plan.root == ("map", ("integer", None)), plan.reasons
 
     arr_df = spark.createDataFrame(
         [({"a": [0.5]},), ({"b": [1.5, 2.0]},)], "m map<string,array<double>>")

@@ -473,8 +473,9 @@ def test_allof_composed_contracts_route(spark):
     }
     plan = analyze_json_contract(contract)
     assert plan.routable, plan.reasons
-    assert set(plan.fields) == {"k", "name", "xs", "flag"}
-    assert plan.fields["xs"] == ("array", "integer")
+    assert plan.root[0] == "object"
+    assert set(plan.root[1]) == {"k", "name", "xs", "flag"}
+    assert plan.root[1]["xs"] == ("array", "integer")
 
     docs = [
         '{"k": 1, "name": "ab", "xs": [1, 2], "flag": true}',
@@ -536,7 +537,7 @@ def test_map_route_matches_kernel(spark, contract):
     JSON-null values (map to_json RENDERS those — gated), huge
     integers, off-type values, and non-objects."""
     plan = analyze_json_contract(contract)
-    assert plan.map_value is not None, plan.reasons
+    assert plan.root[0] == "map", plan.reasons
     df = spark.createDataFrame([(i, d) for i, d in enumerate(MAP_DOCS)],
                                "i long, doc string")
     out = with_valid_json(df, "doc", contract, route_col="route").collect()
@@ -686,14 +687,15 @@ def test_mixed_value_types_fall_through_to_struct_mode(spark):
              "properties": {"id": {"type": "string", "minLength": 2}},
              "additionalProperties": {"type": "integer", "minimum": 0}}
     plan = analyze_json_contract(mixed)
-    assert plan.map_value is None and plan.routable
-    assert set(plan.fields) == {"id"}
+    assert plan.root[0] == "object" and plan.routable
+    assert set(plan.root[1]) == {"id"}
 
     no_fixed = {"type": "object",
                 "patternProperties": {"^a": {"type": "integer"},
                                        "^b": {"type": "string"}}}
     plan2 = analyze_json_contract(no_fixed)
-    assert plan2.routable and plan2.map_value == ("variant", None), plan2
+    assert plan2.routable and plan2.root == ("map", ("variant", None)), \
+        plan2
 
     no_fixed_reading = {"type": "object",
                         "patternProperties": {
@@ -1503,8 +1505,8 @@ NESTED_MAP_CONTRACTS = [
     {"properties": {"counts": {"type": "object",
                                "additionalProperties": {"type": "integer",
                                                         "minimum": 0}}}},
-    # top-level map of OBJECTS: routes as a root ("map", node) through
-    # the {"v": <doc>} wrapper
+    # top-level map of OBJECTS: the root ("map", node) parses the doc
+    # directly, like every object or map root
     {"type": "object",
      "additionalProperties": {"type": "object", "required": ["x"],
                               "properties": {"x": {"type": "number"}}}},
@@ -1538,6 +1540,10 @@ NESTED_MAP_DOCS = [
     '{"m":{}}', '{"tags":{"go":true}}', '{"tags":{"GO":true}}',
     '{"tags":{"go":"x"}}', '{"a": {"x": 2}} junk', 'junk', 'null',
     '{"id": 1, "labels": {"a": "x"}}',
+    # top-level map-of-objects hazards: a null value, duplicate keys, a
+    # big integer below a map value — and a whitespace-variant doc
+    '{"k":null}', '{"k":{"x":1},"k":{"x":"s"}}',
+    '{"k":{"x":12345678901234567890}}', '{"k": {"x": 1.5}}',
 ]
 
 
@@ -1545,7 +1551,9 @@ def test_nested_map_route_matches_kernel(spark):
     """Round-7 map nodes: dynamic-key slots nested inside struct
     layouts (and top-level dynamic contracts with object values) route
     — parity with the kernel on dup-key, null-value, wrong-type, and
-    big-int hazards."""
+    big-int hazards.  The top-level map of objects parses the doc
+    directly: its hazards take the kernel, its whitespace variant the
+    gate path."""
     df = spark.createDataFrame([(i, d) for i, d in
                                 enumerate(NESTED_MAP_DOCS)],
                                "i long, doc string")
@@ -1559,6 +1567,13 @@ def test_nested_map_route_matches_kernel(spark):
                for r in out
                if r["valid"] != expected[NESTED_MAP_DOCS[r["i"]]]]
         assert not bad, f"{contract}: {bad[:5]}"
+        if contract is NESTED_MAP_CONTRACTS[2]:
+            assert plan.root[0] == "map" and not plan.wrapped, plan.root
+            route = {NESTED_MAP_DOCS[r["i"]]: r["route"] for r in out}
+            for d in ('{"k":null}', '{"k":{"x":1},"k":{"x":"s"}}',
+                      '{"k":{"x":12345678901234567890}}'):
+                assert route[d] == "kernel", (d, route[d])
+            assert route['{"k": {"x": 1.5}}'] == "columnar", route
 
 
 def test_nested_map_hazards_route_kernel(spark):
@@ -1645,7 +1660,7 @@ def test_nullable_idiom_routes_on_value_type(spark):
         "n": {"anyOf": [{"type": "integer", "minimum": 0},
                         {"type": "null"}]}}}
     plan = analyze_json_contract(contract)
-    assert plan.fields["n"] == ("integer", None), plan.fields
+    assert plan.root[1]["n"] == ("integer", None), plan.root
     docs = ['{"n":5}', '{"n":0}', '{"n":null}', '{"n":-1}', '{"n":"x"}',
             '{"n":1.5}', '{}']
     df = spark.createDataFrame([(d,) for d in docs], "doc string")
@@ -1659,9 +1674,10 @@ def test_nullable_idiom_routes_on_value_type(spark):
 
 
 def test_root_and_map_fast_plans_stay_plane_a(spark):
-    """The new round-7 modes must keep the routed subset UDF-free:
-    compile the contract exactly as _routing_pieces does (root mode
-    targets the extracted value column) and assert pure Plane A."""
+    """Round-7 root values and maps must keep the routed subset
+    UDF-free: compile the contract exactly as _route_bundle does
+    (``plan.slot`` — a wrapped root targets the extracted value column)
+    and assert pure Plane A."""
     from jema_js_spark.compiler.compile import SchemaCompiler
 
     cases = [
@@ -1680,13 +1696,8 @@ def test_root_and_map_fast_plans_stay_plane_a(spark):
     for contract in cases:
         plan = analyze_json_contract(contract)
         assert plan.routable, (contract, plan.reasons)
-        st = plan.struct_type()
-        if plan.root is not None:
-            col, dt = F.lit(None).cast(st)["v"], st["v"].dataType
-        else:
-            col, dt = F.lit(None).cast(st), st
         cov = SchemaCompiler(contract).compile_plan_for_column(
-            col, dt).coverage()
+            *plan.slot(F.lit(None).cast(plan.struct_type()))).coverage()
         assert cov["plane_a_fraction"] == 1.0, (contract,
                                                 cov["plane_b_names"])
 
@@ -1734,6 +1745,7 @@ KEYS_ONLY_CONTRACTS = [
     {"dependentRequired": {"a": ["b"]}},
     {"maxProperties": 2},
     {"minProperties": 1, "maxProperties": 3},
+    {"minProperties": 1},
     {"type": "object"},
     {"additionalProperties": True, "required": ["a"]},
     {"dependentSchemas": {"a": {"required": ["b"]}}},
@@ -1769,7 +1781,8 @@ KEYS_ONLY_OTHER_MODE = [
 ]
 
 KEYS_ONLY_DOCS = [
-    '{"a":1}', '{"a":null}', '{"b":2}', '{"a":1,"b":2}', '{}',
+    '{"a":1}', '{"a":null}', '{"a": null}',   # variant nulls: present
+    '{"b":2}', '{"a":1,"b":2}', '{}',
     '{"a":1,"a":2}',                    # dup keys: first-match vs
     '{"a":1} junk',                     # last-wins — gates → kernel
     '123', '"s"', 'null', '[1]', 'true',  # non-objects: vacuous pass
@@ -1802,7 +1815,7 @@ def test_keys_only_variant_map_analysis():
     variants no Plane-A predicate reads."""
     for contract in KEYS_ONLY_CONTRACTS:
         plan = analyze_json_contract(contract)
-        assert plan.routable and plan.map_value == ("variant", None), \
+        assert plan.routable and plan.root == ("map", ("variant", None)), \
             (contract, plan.reasons)
     # unevaluated* in the subtree = 100% Plane-B plan: stays kernel
     for contract in [
@@ -1834,6 +1847,12 @@ def test_keys_only_variant_map_differential(spark):
         if contract in KEYS_ONLY_CONTRACTS:
             routed = {r["doc"]: r["route"] for r in out}
             assert routed['{"a":1,"b":2}'] == "columnar", contract
+        if contract == {"minProperties": 1}:
+            # JSON-null values parse as variant nulls, never SQL NULLs,
+            # so the map guard's null-value check keeps them routed
+            # (canonical and whitespace-variant alike)
+            assert routed['{"a":null}'] == routed['{"a": null}'] \
+                == "columnar", routed
 
 
 def test_keys_only_fast_plan_stays_plane_a(spark):
@@ -1971,6 +1990,27 @@ def test_bracket_quoted_field_names_route(spark):
         ("object", {"": ("number", None)}))
     assert not _node_needs_doc_screen(
         ("object", {"v": ("number", None)}))
+
+
+def test_quoted_top_level_number_gets_the_doc_wide_screen(spark):
+    """A top-level ``number`` field under a bracket-quoted name has no
+    per-value raw path, so its gate reads the doc-wide big-int screen:
+    non-canonical doubles take the columnar route (they used to fall to
+    the kernel — the screen was never computed and the DOUBLE gate
+    ANDed with a NULL), a ≥16-digit integer token still takes the
+    kernel, and every verdict equals the kernel's."""
+    contract = {"properties": {"content-type": {"type": "number",
+                                                "minimum": 0}}}
+    docs = ['{"content-type": 1.5e1}', '{"content-type": -1.5e1}',
+            '{"content-type": 12345678901234567890}']
+    df = spark.createDataFrame([(d,) for d in docs], "doc string")
+    out = {r["doc"]: (r["valid"], r["route"]) for r in with_valid_json(
+        df, "doc", contract, route_col="route").collect()}
+    want = _kernel_verdicts(contract, docs)
+    assert {d: out[d][0] for d in docs} == want, out
+    assert out['{"content-type": 1.5e1}'][1] == "columnar", out
+    assert out['{"content-type": -1.5e1}'][1] == "columnar", out
+    assert out['{"content-type": 12345678901234567890}'][1] == "kernel", out
 
 
 # --- variant tag checks (round 7 session 5): type-affine subschemas
@@ -2140,25 +2180,26 @@ def test_variant_slot_routing_differential(spark):
             assert r["valid"] == want[r["doc"]], \
                 (contract, r["doc"], r["valid"], r["route"])
         routed = {r["doc"] for r in out if r["route"] == "columnar"}
-        assert '{}' not in routed or plan.map_value or plan.fields
+        assert '{}' not in routed or not plan.wrapped
     # analysis shapes: mixed dynamic values land on the variant map,
     # union slots on variant fields
     assert analyze_json_contract(
-        VARIANT_SLOT_CONTRACTS[0]).map_value == ("variant", None)
+        VARIANT_SLOT_CONTRACTS[0]).root == ("map", ("variant", None))
     assert analyze_json_contract(
-        VARIANT_SLOT_CONTRACTS[3]).fields == {"id": ("variant", None)}
+        VARIANT_SLOT_CONTRACTS[3]).root == \
+        ("object", {"id": ("variant", None)})
     nested = analyze_json_contract(VARIANT_SLOT_CONTRACTS[7])
-    assert nested.fields == {"meta": ("map", ("variant", None))}
+    assert nested.root == ("object", {"meta": ("map", ("variant", None))})
     # const-discriminator maps and union-agreed maps pick the variant
     assert analyze_json_contract(
-        VARIANT_SLOT_CONTRACTS[9]).map_value == ("variant", None)
+        VARIANT_SLOT_CONTRACTS[9]).root == ("map", ("variant", None))
     assert analyze_json_contract(
-        VARIANT_SLOT_CONTRACTS[10]).map_value == ("variant", None)
+        VARIANT_SLOT_CONTRACTS[10]).root == ("map", ("variant", None))
     # a single-typed dynamic value keeps the TYPED map (richer slots
     # for any future value-reading sibling; nothing to gain opaquely)
     assert analyze_json_contract(
         {"additionalProperties": {"type": "integer"}}
-    ).map_value == ("integer", None)
+    ).root == ("map", ("integer", None))
     # dynamic-value heterogeneity through VALUE-READING keywords still
     # stays kernel; a union-typed slot WITH a value-reading keyword
     # keeps the round-6 typed slot (first member routes, rest kernel)
@@ -2168,7 +2209,7 @@ def test_variant_slot_routing_differential(spark):
     assert analyze_json_contract(
         {"properties": {"id": {"type": ["integer", "string"],
                                "minLength": 3}}}
-    ).fields == {"id": ("integer", None)}
+    ).root == ("object", {"id": ("integer", None)})
 
 
 def test_variant_slot_fast_plan_stays_plane_a(spark):
@@ -2300,7 +2341,7 @@ def test_variant_affinity_respects_format_assertion(spark):
     contract = {"patternProperties": {"^a": {"type": "string",
                                              "format": "email"},
                                       "^b": {"type": "integer"}}}
-    assert analyze_json_contract(contract).map_value == ("variant", None)
+    assert analyze_json_contract(contract).root == ("map", ("variant", None))
     off = analyze_json_contract(contract, format_assertion=False)
     on = analyze_json_contract(contract, format_assertion=True)
     assert off.routable and not on.routable, (off, on.reasons)
@@ -2482,7 +2523,7 @@ def test_recursive_ref_contract_routes(spark):
                        + [d + 1])
         return d
 
-    assert depth_of(("object", plan.fields)) == _MAX_NEST + 1
+    assert depth_of(plan.root) == _MAX_NEST + 1
     docs = []
     for depth in (0, 1, _MAX_NEST - 1, _MAX_NEST, _MAX_NEST + 1,
                   _MAX_NEST + 6):
@@ -2549,7 +2590,7 @@ def test_branching_recursion_bounded_by_slot_budget():
             return 1 + count(extra)
         return 1
 
-    n = count(("object", plan.fields))
+    n = count(plan.root)
     # budget + the free shallow levels + in-flight nodes
     assert n <= _MAX_UNROLL_SLOTS + 48, n
     assert len(plan.struct_type().simpleString()) < 20_000
@@ -2605,7 +2646,7 @@ def test_auto_shape_rule(spark):
               "dependentSchemas": {"a": {"properties":
                                          {"b": {"minimum": 3}}}}}
     plan = analyze_json_contract(netted)
-    assert plan.routable and plan.map_value == ("variant", None), plan
+    assert plan.routable and plan.root == ("map", ("variant", None)), plan
     out = with_valid_json(df, "doc", netted, route_col="r")
     assert_single_pass(out)
     assert [(r["valid"], r["r"]) for r in out.collect()] == \
@@ -2707,8 +2748,8 @@ def test_wide_flat_contract_keeps_full_typed_layout():
                            for i in range(300)}}
     plan = analyze_json_contract(wide)
     assert plan.routable, plan.reasons
-    assert len(plan.fields) == 300
-    assert all(node == ("integer", None) for node in plan.fields.values())
+    assert plan.root[0] == "object" and len(plan.root[1]) == 300
+    assert all(node == ("integer", None) for node in plan.root[1].values())
 
 
 def test_recursive_contract_fuzz_matches_kernel(spark):

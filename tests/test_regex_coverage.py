@@ -288,12 +288,8 @@ def test_routable_corpus_plans_have_zero_pattern_fallbacks(spark):
             continue
         if not plan.routable:
             continue
-        st = plan.struct_type()
-        root_mode = plan.root is not None
-        col = F.from_json(F.lit("{}"), st)
         cp = SchemaCompiler(schema).compile_plan_for_column(
-            col["v"] if root_mode else col,
-            st["v"].dataType if root_mode else st)
+            *plan.slot(F.from_json(F.lit("{}"), plan.struct_type())))
         n_plans += 1
         cov = cp.coverage()
         if cov["pattern_fallbacks"]:

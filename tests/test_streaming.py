@@ -244,7 +244,8 @@ def test_with_valid_json_streaming_map_contract(spark):
                 "propertyNames": {"pattern": "^[a-z]+$"},
                 "additionalProperties": {"type": "integer",
                                          "minimum": 0, "maximum": 80}}
-    assert analyze_json_contract(contract).map_value == ("integer", None)
+    assert analyze_json_contract(contract).root == \
+        ("map", ("integer", None))
     doc = (F.when(F.col("value") % 11 == 0, F.lit('{"K": 1}'))
            .when(F.col("value") % 7 == 0, F.lit('{"a": null}'))
            .otherwise(F.concat(F.lit('{"a":'),
