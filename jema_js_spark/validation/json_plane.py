@@ -280,8 +280,7 @@ def _node_has(node: Tuple[str, Any], kind: str) -> bool:
     return False
 
 
-def _node_needs_doc_screen(node: Tuple[str, Any],
-                           no_path: bool = False) -> bool:
+def _node_needs_doc_screen(node: Tuple[str, Any], no_path: bool) -> bool:
     """True when a ``number`` slot has no per-value raw JSON path — it
     sits below an array-of-node element, a map value, a bracket-quoted
     field name or a wrapped root (``no_path`` marks ``node`` itself as
@@ -343,6 +342,9 @@ class JsonColumnPlan:
 
     @property
     def wrapped(self) -> bool:
+        """Defined, like :meth:`slot` and :meth:`struct_type`, only for
+        plans with a root (every routable plan)."""
+        assert self.root is not None, self.reasons
         return self.root[0] not in ("object", "map")
 
     def slot(self, parsed: Column) -> Tuple[Column, T.DataType]:
@@ -352,9 +354,10 @@ class JsonColumnPlan:
                 _node_dtype(self.root))
 
     def struct_type(self) -> T.DataType:
-        dt = _node_dtype(self.root)
-        return T.StructType([T.StructField("v", dt, True)]) \
-            if self.wrapped else dt
+        if not self.wrapped:
+            return _node_dtype(self.root)
+        return T.StructType([T.StructField("v", _node_dtype(self.root),
+                                           True)])
 
 
 def _declared_type(schema: Schema, node: Any,
