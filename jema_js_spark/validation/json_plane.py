@@ -46,10 +46,13 @@ This module routes each row at runtime, entirely JVM-side:
    cannot parse a non-object root, so the route parses ``{"v": <doc>}``
    and validates the single extracted slot; the round-trip proof
    compares against the same wrapped string, so no document text can
-   spoof it).  Every stage of the routed plan is one call on that node.
-   Slots with no single storable type — union-typed properties
+   spoof it).  Every stage of the routed plan is one call on that node,
+   and ONE analysis builds it: ``analyze_json_contract`` hands the root
+   to ``_build_node`` like any nested slot, so a subschema gets the
+   same layout at the root as one level down.  Slots with no single
+   storable type — union-typed properties
    (``{"type": ["integer", "string"]}``), mixed-type
-   patternProperties, keys-only layoutless roots — store the value as
+   patternProperties, keys-only layoutless objects — store the value as
    an OPAQUE VARIANT when every constraint on it is TAG-AFFINE (type
    checks and combinators of type checks): the compiler judges those
    by ``schema_of_variant`` tags, still pure Plane A
@@ -101,7 +104,7 @@ from __future__ import annotations
 import functools
 import re
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -360,104 +363,29 @@ class JsonColumnPlan:
                                            True)])
 
 
-def _declared_type(schema: Schema, node: Any,
-                   seen: Optional[set] = None) -> Optional[str]:
-    """The single JSON type this subschema forces, found at the node,
-    in an allOf branch, or through a $ref hop — conjunctive positions
-    only, so a value of any OTHER type is guaranteed invalid (and may
-    therefore be judged by the kernel route without a columnar twin)."""
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return None
-    seen.add(id(node))
-    t = node.get("type")
-    if isinstance(t, str):
-        return t
-    if t is not None:
-        return None                       # union type: not a single type
-    for branch in node.get("allOf") or []:
-        found = _declared_type(schema, branch, seen)
-        if found is not None:
-            return found
-    if "$ref" in node:
-        target = schema.registry.ref_targets.get(id(node))
-        found = _declared_type(schema, target, seen)
-        if found is not None:
-            return found
-    return None
-
-
-def _find_items(schema: Schema, node: Any,
-                seen: Optional[set] = None) -> Any:
-    """First ``items`` subschema found in a conjunctive position of a
-    property subschema (the node itself, allOf branches, $ref
-    targets)."""
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return None
-    seen.add(id(node))
-    if node.get("items") is not None and "items" in node:
-        return node["items"]
-    for branch in node.get("allOf") or []:
-        found = _find_items(schema, branch, seen)
-        if found is not None:
-            return found
-    if "$ref" in node:
-        return _find_items(schema, schema.registry.ref_targets.get(id(node)),
-                           seen)
-    return None
-
-
-def _collect_property_sources(schema: Schema, node: Any,
-                              out: Dict[str, list],
-                              seen: Optional[set] = None) -> None:
-    """Property subschemas from every CONJUNCTIVE position: the node's
-    own ``properties`` plus allOf branches and non-cyclic $ref targets
-    (all applied to the same document, so each source constrains the
-    same field — any one of them may declare the routing type, and a
-    value violating another source is invalid on whichever plane
-    judges it)."""
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return
-    seen.add(id(node))
-    props = node.get("properties")
-    if isinstance(props, dict):
-        for k, v in props.items():
-            out.setdefault(k, []).append(v)
-    for branch in node.get("allOf") or []:
-        _collect_property_sources(schema, branch, out, seen)
-    if "$ref" in node:
-        _collect_property_sources(
-            schema, schema.registry.ref_targets.get(id(node)), out, seen)
-
-
-def _collect_dynamic_value_sources(schema: Schema, node: Any,
-                                   out: list,
-                                   seen: Optional[set] = None) -> None:
-    """Dynamic-key VALUE subschemas from conjunctive positions: dict
-    ``additionalProperties`` and every ``patternProperties`` value.
-    (Boolean additionalProperties and ``propertyNames`` constrain keys
-    or presence, not value shape, so they are not type sources.)"""
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return
-    seen.add(id(node))
-    ap = node.get("additionalProperties")
-    if isinstance(ap, dict):
-        out.append(ap)
-    pp = node.get("patternProperties")
-    if isinstance(pp, dict):
-        out.extend(pp.values())
-    for branch in node.get("allOf") or []:
-        _collect_dynamic_value_sources(schema, branch, out, seen)
-    if "$ref" in node:
-        _collect_dynamic_value_sources(
-            schema, schema.registry.ref_targets.get(id(node)), out, seen)
+def _conjuncts(schema: Schema, node: Any) -> Iterator[Any]:
+    """Every subschema in a CONJUNCTIVE position of ``node``, pre-order:
+    the node itself, then its ``allOf`` branches, then its ``$ref``
+    target, each visited once.  Conjunctive positions all apply to the
+    same value, so any one of them may declare the routing type, and a
+    value violating another is invalid on whichever plane judges it
+    (anyOf/oneOf/not/if force no type and are not walked).  Yields the
+    dict subschemas and any ``false`` schema reached — no value
+    satisfies that one (:func:`_slot_decl`)."""
+    seen: set = set()
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        if node is False:
+            yield node
+            continue
+        if not isinstance(node, dict) or id(node) in seen:
+            continue
+        seen.add(id(node))
+        yield node
+        if "$ref" in node:
+            stack.append(schema.registry.ref_targets.get(id(node)))
+        stack.extend(reversed(list(node.get("allOf") or [])))
 
 
 # keyword → the single JSON type it constrains; used to pick a slot for
@@ -504,28 +432,21 @@ def _enum_type(values: list) -> Optional[str]:
     return kinds.pop() if len(kinds) == 1 else None
 
 
-def _slot_signals(schema: Schema, sub: Any,
-                  seen: Optional[set] = None) -> tuple:
+def _slot_signals(schema: Schema, sub: Any) -> tuple:
     """The raw type signals one subschema emits from conjunctive
     positions — ``(single, union, enum_t, classes, has_false)`` —
     shared by :func:`_slot_decl` (typed-slot pick) and
     :func:`_union_members` (variant-slot pick, round 7 session 5) so
     the two can never read the schema differently."""
-    if seen is None:
-        seen = set()
     single: List[str] = []
     union: List[str] = []
     enum_t: List[str] = []
     classes: List[str] = []
-    has_false = [False]
-
-    def walk(node: Any) -> None:
+    has_false = False
+    for node in _conjuncts(schema, sub):
         if node is False:
-            has_false[0] = True
-            return
-        if not isinstance(node, dict) or id(node) in seen:
-            return
-        seen.add(id(node))
+            has_false = True
+            continue
         t = node.get("type")
         if isinstance(t, str):
             single.append(t)
@@ -558,21 +479,12 @@ def _slot_signals(schema: Schema, sub: Any,
         for name, kws in _AFFINITY:
             if any(k in node for k in kws):
                 classes.append(name)
-        for branch in node.get("allOf") or []:
-            walk(branch)
-        if "$ref" in node:
-            walk(schema.registry.ref_targets.get(id(node)))
-
-    walk(sub)
-    return single, union, enum_t, classes, has_false[0]
+    return single, union, enum_t, classes, has_false
 
 
-def _slot_decl(schema: Schema, sub: Any,
-               seen: Optional[set] = None) -> Optional[str]:
-    """The slot type for one subschema — round 7's generalization of
-    :func:`_declared_type`.  Resolution order, all signals gathered
-    from conjunctive positions only (the node, allOf branches, $ref
-    targets — never anyOf/oneOf/not/if, which don't force a type):
+def _slot_decl(schema: Schema, sub: Any) -> Optional[str]:
+    """The slot type for one subschema.  Resolution order, all signals
+    gathered from conjunctive positions only (:func:`_conjuncts`):
 
     1. an explicit single ``type`` (the round-6 rule, unchanged);
     2. a ``type`` union list → its first supported non-"null" member
@@ -585,8 +497,7 @@ def _slot_decl(schema: Schema, sub: Any,
     A conjunctive ``false`` schema short-circuits to "boolean": no
     value can satisfy it, so the slot is arbitrary and the compiled
     false-check judges whatever routes."""
-    single, union, enum_t, classes, has_false = \
-        _slot_signals(schema, sub, seen)
+    single, union, enum_t, classes, has_false = _slot_signals(schema, sub)
     if has_false:
         return "boolean"
     if single:
@@ -618,33 +529,12 @@ def _union_members(schema: Schema, sub: Any) -> set:
     return members
 
 
-def _value_decl(schema: Schema, sub: Any) -> Optional[Tuple[str, Optional[str]]]:
-    """(decl, elem) routing type of one map-mode value subschema, or
-    None.  Round 7: uses the generalized :func:`_slot_decl` (keyword
-    affinity, union pick, enum types) with a "string" default for a
-    fully unconstrained value — sound for the same fail-closed reason,
-    see ``_AFFINITY``."""
-    d = _slot_decl(schema, sub)
-    if d is None and isinstance(sub, (dict, bool)):
-        d = "string"
-    if d in _SCALAR_SQL:
-        return (d, None)
-    if d == "array":
-        items = _find_items(schema, sub)
-        e = _slot_decl(schema, items)
-        if e is None and (items is None or isinstance(items, (dict, bool))):
-            e = "string"
-        if e in _SCALAR_SQL:
-            return ("array", e)
-    return None
-
-
 def _promote_numeric(nodes) -> list:
     """Collapse a mixed integer/number slot collection to the wider
     number slot — integers are exactly representable there (the gates
-    keep them within 2^53 / DECIMAL-exact).  ONE implementation shared
-    by the top-level map mode and nested map nodes so their
-    routability can never silently diverge (round-7 review)."""
+    keep them within 2^53 / DECIMAL-exact).  Used by the one
+    dynamic-key decision in :func:`_build_node`'s object branch, which
+    serves the root and every nested map alike."""
     reprs = sorted(repr(n) for n in nodes)
     if reprs == [repr(("array", "integer")), repr(("array", "number"))]:
         return [("array", "number")]
@@ -656,12 +546,12 @@ def _promote_numeric(nodes) -> list:
 def _dyn_map_node(schema: Schema, node: Any, dyn: list, merged: list,
                   typed: Optional[Tuple[str, Any]],
                   fa: bool) -> Optional[Tuple[str, Any]]:
-    """ONE value-node decision for a dynamic-key slot, shared by the
-    top-level map mode and nested map nodes (mirroring the
-    _promote_numeric extraction: the two must never silently diverge —
-    round-7 review).  ``typed`` is the agreed typed value node, or
-    None when the sources disagree.  Returns the value node to use, or
-    None (stay kernel / publish the disagreement):
+    """The value-node decision for a dynamic-key slot at any depth, the
+    root included (there is one layout analysis, :func:`_build_node`).
+    ``typed`` is the agreed typed value node, or None when the sources
+    disagree.  Returns the value node to use, or None (the sources
+    disagree; the caller falls back to the fixed-key struct or
+    publishes the disagreement):
 
     - sources that are all TAG-AFFINE under the session's
       format_assertion route as opaque variants — even over an
@@ -689,11 +579,12 @@ def _build_node(schema: Schema, sub: Any, label: str,
                 reasons: List[str], depth: int,
                 fa: bool = False,
                 slots: Optional[list] = None) -> Optional[Tuple[str, Any]]:
-    """Routing node of one property subschema, recursing into nested
-    objects (fixed-key ``properties`` at any depth) and arrays of
-    objects — or None with a published reason.  Depth counts EVERY
-    recursion step, so a recursive $ref chain hits ``_MAX_NEST`` and
-    truncates to a variant leaf (round-8 bounded unroll) instead of
+    """Routing node of one subschema — the contract root (depth 0) or
+    any slot below it, by ONE policy — recursing into nested objects
+    (fixed-key ``properties`` at any depth), dynamic-key maps and
+    arrays of objects; or None with a published reason.  Depth counts
+    EVERY recursion step, so a recursive $ref chain hits ``_MAX_NEST``
+    and truncates to a variant leaf (round-8 bounded unroll) instead of
     unfolding forever; ``slots`` is the per-contract expansion budget
     (``_MAX_UNROLL_SLOTS``) guarding BRANCHING recursion against an
     exponential unroll.  ``fa`` is the session's format_assertion:
@@ -747,7 +638,9 @@ def _build_node(schema: Schema, sub: Any, label: str,
     if decl in _SCALAR_SQL:
         return (decl, None)
     if decl == "array":
-        items = _find_items(schema, sub)
+        items = next((n["items"] for n in _conjuncts(schema, sub)
+                      if n is not False and n.get("items") is not None),
+                     None)
         elem = _slot_decl(schema, items)
         if elem == "null":
             elem = "string"
@@ -765,20 +658,36 @@ def _build_node(schema: Schema, sub: Any, label: str,
             f"type, got {elem!r}")
         return None
     if decl == "object":
-        dyn: list = []
-        _collect_dynamic_value_sources(schema, sub, dyn)
+        # fixed property sources by name and dynamic-key VALUE sources
+        # (dict additionalProperties, every patternProperties value —
+        # boolean additionalProperties and propertyNames constrain keys
+        # or presence, not value shape), from every conjunctive position
         srcs: Dict[str, list] = {}
-        _collect_property_sources(schema, sub, srcs)
+        dyn: list = []
+        for n in _conjuncts(schema, sub):
+            if n is False:
+                continue
+            props = n.get("properties")
+            if isinstance(props, dict):
+                for k, v in props.items():
+                    srcs.setdefault(k, []).append(v)
+            ap = n.get("additionalProperties")
+            if isinstance(ap, dict):
+                dyn.append(ap)
+            pp = n.get("patternProperties")
+            if isinstance(pp, dict):
+                dyn.extend(pp.values())
+        merged = {k: subs[0] if len(subs) == 1 else {"allOf": subs}
+                  for k, subs in srcs.items()}
         if dyn:
             # dynamic-key slot (round 7): a map<string, V> node.  Every
             # value source — dynamic AND fixed properties (their keys
-            # live in the same map) — must agree on ONE routing node;
-            # heterogeneous contracts publish a reason and stay kernel.
+            # live in the same map) — must agree on ONE routing node,
+            # so any conforming document's values fit the value slot.
             probe: List[str] = []
             nodes: List[Any] = []
-            merged_srcs = [subs[0] if len(subs) == 1 else {"allOf": subs}
-                           for subs in srcs.values()]
-            for s in dyn + merged_srcs:
+            fixed = list(merged.values())
+            for s in dyn + fixed:
                 n = _build_node(schema, s, f"{label} values", probe,
                                 depth + 1, fa, slots)
                 if n not in nodes:          # object nodes hold dicts —
@@ -786,26 +695,49 @@ def _build_node(schema: Schema, sub: Any, label: str,
             nodes = _promote_numeric(nodes)
             typed = nodes[0] if None not in nodes and len(nodes) == 1 \
                 else None
-            value_node = _dyn_map_node(schema, sub, dyn, merged_srcs,
-                                       typed, fa)
+            value_node = _dyn_map_node(schema, sub, dyn, fixed, typed,
+                                       fa)
             if value_node is not None:
                 return ("map", value_node)
-            reasons.append(
-                f"{label}: dynamic-key value schemas disagree on a "
-                "single routing node — kernel only"
-                + (f" ({probe[0]})" if probe else ""))
-            return None
+            if not merged:
+                reasons.append(
+                    f"{label}: dynamic-key value schemas disagree on a "
+                    "single routing node — kernel only"
+                    + (f" ({probe[0]})" if probe else ""))
+                return None
+            # the values disagree but fixed properties exist: the
+            # fixed-key struct below still routes the documents that
+            # use only those keys; extra keys take the kernel
+        elif not merged:
+            # KEYS-ONLY map routing (round 7, session 4): an object
+            # with no fixed properties and no dynamic values (bare
+            # ``required``, ``propertyNames``, ``dependentRequired``,
+            # ``min/maxProperties``, ``dependentSchemas``,
+            # ``{"type": "object"}`` …) never reads a value — its
+            # keywords constrain the KEY SET.  Such objects route as
+            # ``map<string, variant>``: keys are real map keys, values
+            # opaque variants no Plane-A predicate touches (the
+            # compiler's variant net turns any value-reading subschema
+            # into one kernel check over the value's exact rendering).
+            # JSON-null values parse as variant nulls — present,
+            # exactly like the kernel — so the typed-map null-value
+            # hazard doesn't exist here.  unevaluated* anywhere in the
+            # subtree compiles as ONE whole-node kernel check, so such
+            # an object keeps the empty struct, which routes only
+            # ``{}`` (analyze_json_contract refuses it as a root).
+            if SchemaCompiler(schema)._contains_unevaluated_deep(sub):
+                return ("object", {})
+            return ("map", ("variant", None))
         fields: Dict[str, Tuple[str, Any]] = {}
         ok = True
-        for k, subs in srcs.items():
+        for k, s in merged.items():
             if not _routable_name(k):
                 reasons.append(
                     f"{label}.{k}: name not addressable in a variant "
                     "path (quote/backslash/control char) — kernel only")
                 ok = False
                 continue
-            merged = subs[0] if len(subs) == 1 else {"allOf": subs}
-            child = _build_node(schema, merged, f"{label}.{k}",
+            child = _build_node(schema, s, f"{label}.{k}",
                                 reasons, depth + 1, fa, slots)
             if child is None:
                 ok = False
@@ -828,21 +760,27 @@ def analyze_json_contract(schema: Any,
                           format_assertion: bool = False) -> JsonColumnPlan:
     """Decide whether a contract's conforming documents are exactly
     representable in one typed root slot (``plan.root``): an
-    ``("object", fields)`` struct — round 7: RECURSIVELY, nested
-    objects become nested ``StructType`` fields, arrays of objects
-    ``ArrayType(StructType)``, and nested dynamic-key slots
-    ``MapType`` (all value sources agreeing on one node) — or (round
-    6, VERDICT r5 #6) a ``("map", node)`` when the contract types its
-    values through dynamic-key keywords (``patternProperties`` /
-    ``additionalProperties``) that agree on one value node, or (round
-    7) a ROOT VALUE slot when the documents are bare scalars or arrays
-    rather than objects.  Unroutable
-    contracts are not an error — ``with_valid_json`` just runs them
-    whole on the kernel plane — but the reasons are published so a
-    pipeline owner can see why a contract is stuck on the slow plane.
-    Layouts are drawn from every conjunctive position (root keywords,
-    allOf branches, $ref targets) — the ``allOf``-composed
-    strict-contract idiom routes like a flat one.
+    ``("object", fields)`` struct (nested objects become nested
+    ``StructType`` fields, arrays of objects ``ArrayType(StructType)``),
+    a ``("map", node)`` when dynamic-key keywords
+    (``patternProperties`` / ``additionalProperties``) agree on one
+    value node (``("map", ("variant", None))`` for keys-only objects),
+    or a ROOT VALUE slot when the documents are bare scalars or arrays
+    rather than objects.  Unroutable contracts are not an error —
+    ``with_valid_json`` just runs them whole on the kernel plane — but
+    the reasons are published so a pipeline owner can see why a
+    contract is stuck on the slow plane.  Layouts are drawn from every
+    conjunctive position (root keywords, allOf branches, $ref targets)
+    — the ``allOf``-composed strict-contract idiom routes like a flat
+    one.
+
+    There is ONE layout analysis: the root is built by
+    :func:`_build_node` exactly like any nested slot, so a subschema
+    gets the same layout at the root as one level down.  Only three
+    rules are the root's own: a boolean root has no shape, a
+    scope-sensitive ``$dynamicRef`` hoists the whole contract to one
+    kernel check, and an empty-struct root (an object carrying
+    unevaluated* with nothing else to route) would route only ``{}``.
 
     ``format_assertion`` must match the validation call's setting: the
     variant-slot choices probe tag-affinity, which classes ``format``
@@ -852,9 +790,7 @@ def analyze_json_contract(schema: Any,
     if not isinstance(schema, Schema):
         schema = Schema(schema)
     plan = JsonColumnPlan(schema=schema)
-    slots = [0]                     # per-contract unroll budget
-    root = schema.schema
-    if not isinstance(root, dict):
+    if not isinstance(schema.schema, dict):
         plan.reasons.append("root schema is boolean — no declared shape")
         return plan
     hazard = _dynamic_scope_hazard(schema)
@@ -866,93 +802,14 @@ def analyze_json_contract(schema: Any,
             f"scope-sensitive $dynamicRef '#{hazard}' — whole-plan "
             "kernel check, routing buys nothing")
         return plan
-    sources: Dict[str, list] = {}
-    _collect_property_sources(schema, root, sources)
-    dyn: list = []
-    _collect_dynamic_value_sources(schema, root, dyn)
-    if dyn:
-        # map mode: every value source — dynamic AND fixed properties —
-        # must agree on one routing type, so any conforming document's
-        # values all fit the map's value slot; documents that don't fit
-        # (heterogeneous values under a permissive additionalProperties)
-        # simply fall to the kernel, never mis-judge
-        merged_fixed = [subs[0] if len(subs) == 1 else {"allOf": subs}
-                        for subs in sources.values()]
-        decls = {_value_decl(schema, sub) for sub in dyn + merged_fixed}
-        decls = _promote_numeric(decls)
-        # round 7 session 5: _dyn_map_node (ONE decision, shared with
-        # nested map nodes) may swap the typed value slot for an
-        # opaque variant — when the sources disagree only through
-        # tag-affine keywords (mixed-type patternProperties), or
-        # "agree" only by collapsing a union type to its first member.
-        typed = decls[0] if None not in decls and len(decls) == 1 \
-            else None
-        value_node = _dyn_map_node(schema, root, dyn, merged_fixed,
-                                   typed, format_assertion)
-        if value_node is not None:
-            plan.root = ("map", value_node)
-            return plan
-        if not sources:
-            # round 7: value sources beyond scalars/arrays (object or
-            # nested-map values) — _build_node's object branch builds
-            # the root ("map", <node>) when every source agrees on one
-            # node, else publishes the disagreement
-            plan.root = _build_node(schema, root, "root value",
-                                    plan.reasons, 1, format_assertion,
-                                    slots)
-            return plan
-        # fall through: fixed-property struct mode still routes the
-        # fixed-key documents; extra keys go to the kernel
-    if not sources:
-        # Root-value mode (round 7): the contract's documents are not
-        # objects at all — a scalar ("5", "\"en\"") or an array
-        # ("[1,2]") root.  Conformance suites and real pipelines are
-        # full of these (a JSON column of tags lists, scores, ids).
-        # Object-affine layoutless roots (bare {"type": "object"},
-        # {"minProperties": 2}, …) stay on the kernel: a root slot for
-        # them would route only the empty object and pay parse + gates
-        # on everything else.
-        decl = _slot_decl(schema, root)
-        if decl == "object":
-            # KEYS-ONLY map routing (round 7, session 4): an
-            # object-affine root with no fixed properties and no typed
-            # dynamic values (bare ``required``, ``propertyNames``,
-            # ``dependentRequired``, ``min/maxProperties``,
-            # ``dependentSchemas``, ``{"type": "object"}`` …) never
-            # reads a value — its keywords constrain the KEY SET.  The
-            # documents route as ``map<string, variant>``: keys are
-            # real map keys, values opaque variants no Plane-A
-            # predicate touches (the compiler's variant net turns any
-            # value-reading subschema into one kernel check over the
-            # value's exact rendering).  JSON-null values parse as
-            # variant nulls — present, exactly like the kernel — so
-            # the typed-map null-value hazard doesn't exist here.
-            # unevaluated* anywhere in the subtree compiles as ONE
-            # whole-node kernel check, so routing would pay parse +
-            # gates to reach a 100% Plane-B plan — those stay kernel.
-            if SchemaCompiler(schema)._contains_unevaluated_deep(root):
-                plan.reasons.append(
-                    "root has no properties and carries unevaluated* — "
-                    "whole-plan kernel check, routing buys nothing")
-                return plan
-            plan.root = ("map", ("variant", None))
-            return plan
-        plan.root = _build_node(schema, root, "root value",
-                                plan.reasons, 1, format_assertion, slots)
-        return plan
-    fields: Dict[str, Tuple[str, Any]] = {}
-    for name, subs in sources.items():
-        if not _routable_name(name):
-            plan.reasons.append(
-                f"property {name!r}: name not addressable in a variant "
-                "path (quote/backslash/control char) — kernel only")
-            continue
-        sub = subs[0] if len(subs) == 1 else {"allOf": subs}
-        node = _build_node(schema, sub, f"property {name!r}",
-                           plan.reasons, 1, format_assertion, slots)
-        if node is not None:
-            fields[name] = node
-    plan.root = ("object", fields)
+    root = _build_node(schema, schema.schema, "root", plan.reasons, 0,
+                       format_assertion)
+    if root == ("object", {}):
+        plan.reasons.append(
+            "root has no properties and carries unevaluated* — "
+            "whole-plan kernel check, routing buys nothing")
+    else:
+        plan.root = root
     return plan
 
 
@@ -971,8 +828,6 @@ def plan_choice(schema: Any, format_assertion: bool = False) -> Dict[str, Any]:
     One rule: a routable contract routes, anything else runs on the
     kernel.  Calling it ahead of a deploy shows which plane a contract
     will run on and why."""
-    if not isinstance(schema, Schema):
-        schema = Schema(schema)
     plan = analyze_json_contract(schema, format_assertion=format_assertion)
     # a number slot re-renders integer-form tokens as ``x.0``, so such
     # documents always miss the round-trip proof and take the (correct
@@ -1248,12 +1103,9 @@ def with_valid_json(df: DataFrame, json_col: str, schema: Any,
         if not isinstance(schema, Schema):
             schema = Schema(schema)
         plan = None
-    elif not isinstance(schema, Schema):
+    else:
         schema, plan = _cached_analysis(schema, contract_json,
                                         format_assertion)
-    else:
-        plan = analyze_json_contract(schema,
-                                     format_assertion=format_assertion)
 
     # built only where a plan needs it: constructing the UDF parses its
     # return type over py4j, wasted on a masked-memo hit
@@ -1338,14 +1190,16 @@ def _maybe_consolidate(df: DataFrame) -> DataFrame:
 # builds a fresh DataFrame lineage and recomputes from its inputs.
 # Only plain-dict contracts are cached (a caller-supplied Schema may
 # carry a registry whose remote documents the compiled Plane-B
-# fallbacks embed); every memo keys on ``contract_key``'s text, taken
-# once per call.
-def _cached_analysis(raw_schema, contract_json: Optional[str],
+# fallbacks embed — ``contract_key`` is None for one, so it is analyzed
+# uncached); every memo keys on ``contract_key``'s text, taken once per
+# call.
+def _cached_analysis(schema: Any, contract_json: Optional[str],
                      format_assertion: bool):
+    """``(Schema, JsonColumnPlan)`` for a contract dict or a Schema."""
     def build():
-        schema = Schema(raw_schema)
-        return schema, analyze_json_contract(
-            schema, format_assertion=format_assertion)
+        s = schema if isinstance(schema, Schema) else Schema(schema)
+        return s, analyze_json_contract(
+            s, format_assertion=format_assertion)
 
     key = None if contract_json is None else (
         "json_plane.analyze", contract_json, format_assertion)
@@ -1594,12 +1448,7 @@ def json_violation_rows(df: DataFrame, json_col: str, schema: Any,
     id_cols = list(id_cols or [])
     base = _maybe_consolidate(df.select(*id_cols, json_col))
     contract_json = contract_key(schema)
-    if not isinstance(schema, Schema):
-        schema, plan = _cached_analysis(schema, contract_json,
-                                        format_assertion)
-    else:
-        plan = analyze_json_contract(schema,
-                                     format_assertion=format_assertion)
+    schema, plan = _cached_analysis(schema, contract_json, format_assertion)
     screened = False
     if plan.routable:
         b3, route, compiled, work = _routing_pieces(

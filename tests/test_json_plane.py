@@ -232,16 +232,19 @@ def test_unroutable_contracts_fall_back_whole(spark):
     """Nested objects / arrays of objects, heuristic slots (union
     types, keyword affinity, enum types, typeless defaults),
     scalar/array roots, nested dynamic-key slots, layoutless
-    object-affine roots (keys-only variant maps), unknown type names,
-    tag-affine heterogeneity (union-typed slots, mixed-type
-    patternProperties — variant slots, round 7 session 5), and — round
-    8 — recursive $refs / past-_MAX_NEST nesting (bounded unroll,
-    variant-leaf tails) ALL route now — what stays unroutable: boolean
-    roots, property names with quote/backslash/control chars,
-    dynamic-key value schemas that disagree through VALUE-READING
-    keywords, layoutless roots carrying unevaluated* (100% Plane-B
-    plan — routing buys nothing), and scope-sensitive $dynamicRef
-    (same hoist)."""
+    object-affine objects at any depth (keys-only variant maps),
+    unknown type names, tag-affine heterogeneity (union-typed slots,
+    mixed-type patternProperties — variant slots, round 7 session 5),
+    and — round 8 — recursive $refs / past-_MAX_NEST nesting (bounded
+    unroll, variant-leaf tails) ALL route now.  One layout analysis
+    judges the root and nested slots alike, so what stays unroutable
+    does so at any depth: property names with quote/backslash/control
+    chars, and dynamic-key value schemas that disagree through
+    VALUE-READING keywords with no fixed properties to fall back on.
+    Three rules are the root's own: boolean roots, layoutless roots
+    carrying unevaluated* (an empty-struct root: 100% Plane-B plan —
+    routing buys nothing), and scope-sensitive $dynamicRef (same
+    hoist)."""
     docs = ['{"a": {"b": 1}}', '{"a": null}', 'junk', '{"a": [1, {"z": 2}]}']
     contracts = [
         {"minProperties": 2,             # layoutless root + unevaluated*
@@ -1038,6 +1041,65 @@ def test_oversized_docs_route_matches_kernel(spark):
     assert out2[wide_bad][0] is False
 
 
+def _route_verdicts(spark, items, batch=16):
+    """Every ``(contract, [(label, doc, want), ...])`` item through
+    with_valid_json, ``batch`` contracts per job as stacked auto
+    columns: the routed shape references its input ONCE per stack
+    (linear plan growth).  Every contract judges every row of its job;
+    only its own rows are asserted.  Returns the mismatches as
+    ``(contract, label, got, want)`` and how many own rows the route
+    judged columnar."""
+    from tests.suite_cases import REMOTES
+
+    mismatches, routed = [], 0
+    for start in range(0, len(items), batch):
+        chunk = items[start:start + batch]
+        rows = [(si, i, doc) for si, (_c, docs) in enumerate(chunk)
+                for i, (_label, doc, _want) in enumerate(docs)]
+        if not rows:
+            continue
+        df = spark.createDataFrame(rows, "sid int, i int, doc string")
+        for si, (contract, _docs) in enumerate(chunk):
+            df = with_valid_json(df, "doc", contract, col_name=f"v{si}",
+                                 route_col=f"r{si}", remotes=REMOTES)
+        for r in df.collect():
+            contract, docs = chunk[r["sid"]]
+            label, _doc, want = docs[r["i"]]
+            got = r[f"v{r['sid']}"]
+            routed += r[f"r{r['sid']}"] == "columnar"
+            if got != want:
+                mismatches.append((contract, label, got, want))
+    return mismatches, routed
+
+
+def _corpus_schemas():
+    """The corpus's dict schemas, deduped, each with its cases (round 7
+    root-value mode: scalar/array data cases run through the route too
+    — only the schema must be a dict; boolean roots are unroutable by
+    analysis)."""
+    from collections import defaultdict
+
+    from tests.suite_cases import CASES
+
+    by_schema = defaultdict(list)
+    for c in CASES:
+        if not isinstance(c.schema, dict):
+            continue
+        try:
+            key = json.dumps(c.schema, sort_keys=True)
+        except (TypeError, ValueError):
+            continue
+        by_schema[key].append(c)
+    return [(key, cs[0].schema, cs) for key, cs in by_schema.items()]
+
+
+def _dumps_or_none(value):
+    try:
+        return json.dumps(value)
+    except (TypeError, ValueError):
+        return None
+
+
 def test_conformance_corpus_through_route(spark):
     """The conformance corpus itself through with_valid_json: every
     object-data case whose schema the analyzer deems routable must get
@@ -1046,26 +1108,10 @@ def test_conformance_corpus_through_route(spark):
     per-contract docs become a JSON column.  This ties the route to the
     same 48-file suite the kernel parity runs on, beyond the
     hand-built batteries."""
-    from collections import defaultdict
-
-    from tests.suite_cases import CASES, REMOTES, expected_for
-
-    by_schema = defaultdict(list)
-    for c in CASES:
-        # round 7 root-value mode: scalar/array data cases run through
-        # the route too — only the schema must be a dict (boolean roots
-        # are unroutable by analysis)
-        if not isinstance(c.schema, dict):
-            continue
-        try:
-            key = json.dumps(c.schema, sort_keys=True)
-        except (TypeError, ValueError):
-            continue
-        by_schema[key].append(c)
+    from tests.suite_cases import expected_for
 
     routable = []
-    for key, cs in by_schema.items():
-        contract = cs[0].schema
+    for _key, contract, cs in _corpus_schemas():
         try:
             if analyze_json_contract(contract).routable:
                 routable.append((contract, cs))
@@ -1088,38 +1134,135 @@ def test_conformance_corpus_through_route(spark):
     # Round 8 (VERDICT r7 #2): EVERY routable corpus schema, every
     # case — the fixed 60-schema sample left ~363 schemas' routed
     # verdicts to the targeted batteries, and the last two verdict
-    # bugs lived exactly in routing-mode interactions.  Batched 16
-    # schemas per job as stacked auto columns: the routed shape
-    # references its input ONCE per stack (linear plan growth).  Every
-    # schema judges every batch row; only its own rows' verdicts are
-    # asserted.  Measured: 27 jobs, 1587 cases, ~2.5 min at local[4].
-    mismatches = []
-    BATCH = 16
-    for start in range(0, len(routable), BATCH):
-        batch = routable[start:start + BATCH]
-        rows, want = [], {}
-        for si, (contract, cs) in enumerate(batch):
-            for i, c in enumerate(cs):
-                try:
-                    d = json.dumps(c.data)
-                except (TypeError, ValueError):
-                    continue
-                rows.append((si, i, d))
-                want[(si, i)] = expected_for(c)
-        if not rows:
-            continue
-        df = spark.createDataFrame(rows, "sid int, i int, doc string")
-        for si, (contract, cs) in enumerate(batch):
-            df = with_valid_json(df, "doc", contract, col_name=f"v{si}",
-                                 remotes=REMOTES)
-        for r in df.collect():
-            if r[f"v{r['sid']}"] != want[(r["sid"], r["i"])]:
-                contract, cs = batch[r["sid"]]
-                mismatches.append((contract, cs[r["i"]].desc,
-                                   r[f"v{r['sid']}"],
-                                   want[(r["sid"], r["i"])]))
+    # bugs lived exactly in routing-mode interactions.
+    items = [(contract, [(c.desc, d, expected_for(c)) for c in cs
+                         if (d := _dumps_or_none(c.data)) is not None])
+             for contract, cs in routable]
+    mismatches, _routed = _route_verdicts(spark, items)
     assert not mismatches, \
         f"{len(mismatches)} mismatches; first: {mismatches[:2]}"
+
+
+def _ref_free_routable_corpus():
+    """Corpus schemas without any reference keyword (wrapping one under
+    a property would move what its JSON pointers address), routable on
+    their own."""
+    out = []
+    for key, contract, cs in _corpus_schemas():
+        if any(r in key for r in ('"$ref"', '"$dynamicRef"',
+                                  '"$recursiveRef"')):
+            continue
+        if analyze_json_contract(contract).routable:
+            out.append((contract, cs))
+    return out
+
+
+def test_root_and_nested_layouts_agree():
+    """ONE layout analysis: a subschema gets the same routing node at
+    the root as one property level down — analyze_json_contract builds
+    the root with _build_node, so no root-only policy can drift from
+    the nested one.  Before the root went through _build_node, 34 of
+    these schemas got a different layout at the root (variant vs typed
+    map values, keys-only vs empty struct, struct fallthrough)."""
+    corpus = _ref_free_routable_corpus()
+    assert len(corpus) >= 340, len(corpus)
+    bad = []
+    for s, _cs in corpus:
+        want = ("object", {"a": analyze_json_contract(s).root})
+        got = analyze_json_contract({"properties": {"a": s}})
+        if got.root != want:
+            bad.append((s, got.root, want, got.reasons))
+    assert not bad, f"{len(bad)} disagree; first: {bad[:2]}"
+
+
+# layout shifts of the one layout analysis, each pinned: (contract, root)
+LAYOUT_SHIFTS = [
+    # a nested layoutless object routes keys-only, like a root one
+    ({"properties": {"a": {"type": "object", "required": ["x"]}}},
+     ("object", {"a": ("map", ("variant", None))})),
+    ({"items": {"type": "object"}}, ("array", ("map", ("variant", None)))),
+    # a nested map whose values disagree falls through to its fixed-key
+    # struct, like a root one (extra keys take the kernel)
+    ({"properties": {"a": {
+        "properties": {"x": {"type": "integer"}, "y": {"type": "string"}},
+        "patternProperties": {"^z": {"type": "integer", "minimum": 0}}}}},
+     ("object", {"a": ("object", {"x": ("integer", None),
+                                  "y": ("string", None)})})),
+    # root map values are built like nested ones: a null-typed value
+    # takes the default string slot
+    ({"additionalProperties": {"type": "null"}}, ("map", ("string", None))),
+    # a root union of tag-affine types is a variant slot
+    ({"type": ["object", "array"]}, ("variant", None)),
+    # a root's own non-object type wins over its properties
+    ({"type": "integer", "properties": {"a": {"type": "string"}}},
+     ("integer", None)),
+    # unevaluated* keeps a nested layoutless object an empty struct
+    ({"properties": {"a": {"minProperties": 2,
+                           "unevaluatedProperties": False}}},
+     ("object", {"a": ("object", {})})),
+]
+
+
+def test_layout_shifts_pinned():
+    for contract, root in LAYOUT_SHIFTS:
+        plan = analyze_json_contract(contract)
+        assert plan.routable and plan.root == root, (contract, plan)
+    # root reasons are labelled like nested ones
+    plan = analyze_json_contract({"properties": {"b": {"properties": {
+        "q'r": {}}}}})
+    assert plan.reasons == [
+        "root.b.q'r: name not addressable in a variant path "
+        "(quote/backslash/control char) — kernel only"], plan.reasons
+
+
+def test_nested_layout_shifts_route_columnar(spark):
+    """The two nested shifts that widen routing: a document that only
+    reached the kernel before now runs columnar, with the kernel's
+    verdict."""
+    docs = ['{"a":{"x":1,"y":"z"}}', '{"a":{"y":"z"}}', '{"a":{"x":"1"}}',
+            '{"a":{"x":1,"x":2}}', '{"a":{"x":1,"z":-1}}', '{"a":null}',
+            '{"a":[]}', '{}']
+    df = spark.createDataFrame([(d,) for d in docs], "doc string")
+    for contract, _root in (LAYOUT_SHIFTS[0], LAYOUT_SHIFTS[2]):
+        rows = with_valid_json(df, "doc", contract,
+                               route_col="route").collect()
+        expected = _kernel_verdicts(contract, docs)
+        bad = [(r["doc"], r["valid"]) for r in rows
+               if r["valid"] != expected[r["doc"]]]
+        assert not bad, (contract, bad)
+        routes = {r["doc"]: r["route"] for r in rows}
+        assert routes['{"a":{"x":1,"y":"z"}}'] == "columnar", contract
+
+
+# hazard documents added for every wrapped contract: an empty nested
+# object, a JSON-null value, duplicate nested keys, the empty document
+NESTED_WRAP_HAZARDS = ['{"a":{}}', '{"a":null}', '{"a":{"k":1,"k":"x"}}',
+                       '{}']
+
+
+def test_nested_wrapped_corpus_differential(spark):
+    """Every ref-free corpus schema S one level down — contract
+    ``{"properties": {"a": S}}``, documents ``{"a": d}`` plus
+    NESTED_WRAP_HAZARDS — through the route: verdicts must equal the
+    kernel's on every row.  The routed-row floor pins the nested
+    layouts' reach (measured: 974 of 2,760 rows, 342 contracts; 880 of
+    2,745 rows, 340 contracts, before nested layouts followed the
+    root's policy)."""
+    items = []
+    for s, cs in _ref_free_routable_corpus():
+        contract = {"properties": {"a": s}}
+        if not analyze_json_contract(contract).routable:
+            continue
+        docs = [d for c in cs
+                if (d := _dumps_or_none({"a": c.data})) is not None]
+        docs += NESTED_WRAP_HAZARDS
+        want = _kernel_verdicts(contract, docs)
+        items.append((contract, [(d, d, want[d]) for d in docs]))
+    assert len(items) >= 340, len(items)
+    mismatches, routed = _route_verdicts(spark, items)
+    assert not mismatches, \
+        f"{len(mismatches)} mismatches; first: {mismatches[:2]}"
+    assert routed >= 974, routed
 
 
 NESTED_CONTRACT = {
