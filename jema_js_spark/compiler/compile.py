@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,7 +45,7 @@ from jema_js_spark.kernel.regex_js import (
     java_regex_explain,
     java_regex_or_none,
 )
-from jema_js_spark.schema.frontend import Schema
+from jema_js_spark.schema.frontend import Schema, iter_subschemas
 
 __all__ = ["SchemaCompiler", "CompiledPlan", "CheckSpec", "ColumnarUnsupported"]
 
@@ -416,11 +416,6 @@ def _variant_scalar_eq(value: Any, col: Column, tag: Column) -> Column:
     scalar enum/const member: the tag rules out cross-type equality
     (JS === is type-strict) and the matching-tag extraction is
     lossless for null/boolean/string."""
-    if not _affine_scalar(value):
-        # numbers/containers need deep_equal; lone-surrogate strings
-        # would not even survive F.lit's UTF-8 encoding
-        raise ColumnarUnsupported(
-            "enum/const member needs deep_equal — kernel")
     if value is None:
         return tag == "VOID"
     if isinstance(value, bool):
@@ -446,15 +441,10 @@ def _variant_sub_pred(sub: Any, col: Column, tag: Column, dbl: Column,
 def _variant_kw_pred(kw: str, sval: Any, node: dict, col: Column,
                      tag: Column, dbl: Column, format_assertion: bool
                      ) -> Optional[Column]:
-    """Predicate of ONE keyword over a present variant value — None
-    for inert keywords, ColumnarUnsupported for anything that must
-    read the value."""
-    cls = _variant_kw_class(kw, format_assertion)
-    if cls == "inert":
+    """Predicate of ONE keyword of a tag-affine subschema over a present
+    variant value — None for inert keywords."""
+    if _variant_kw_class(kw, format_assertion) == "inert":
         return None
-    if cls == "kernel":
-        raise ColumnarUnsupported(
-            f"keyword {kw} reads an opaque variant value")
     if kw == "type":
         members = sval if isinstance(sval, list) else [sval]
         return _or_all([_variant_type_member(t, tag, dbl)
@@ -462,14 +452,8 @@ def _variant_kw_pred(kw: str, sval: Any, node: dict, col: Column,
     if kw == "const":
         return _variant_scalar_eq(sval, col, tag)
     if kw == "enum":
-        if not isinstance(sval, list):
-            raise ColumnarUnsupported(
-                "malformed enum on a variant value — kernel replays it")
         return _or_all([_variant_scalar_eq(v, col, tag) for v in sval])
     if kw in ("allOf", "anyOf", "oneOf"):
-        if not isinstance(sval, list):
-            raise ColumnarUnsupported(
-                f"malformed {kw} on a variant value — kernel replays it")
         branches = [_variant_sub_pred(b, col, tag, dbl, format_assertion)
                     for b in sval]
         if kw == "allOf":
@@ -515,11 +499,16 @@ def _compile_variant_node(c: "SchemaCompiler", node: dict, texpr: "_TExpr",
                           spath: Tuple, dpath: Tuple) -> List["CheckSpec"]:
     """Plane-A tag checks for a tag-affine subschema over an opaque
     variant value, or ColumnarUnsupported (the caller then emits the
-    whole-node kernel net).  One CheckSpec per constraining keyword,
-    mirroring the typed compiler's shape.  An absent value (SQL NULL —
-    absent key under the bridge) passes vacuously; a present JSON null
-    is a VOID-tagged variant and is judged — exactly the kernel's view
-    of dynamic-key values."""
+    whole-node kernel net).  The session-free probe
+    :func:`variant_tag_affine` is the ONE refusal decision: the
+    predicate builders below assume it passed.  One CheckSpec per
+    constraining keyword, mirroring the typed compiler's shape.  An
+    absent value (SQL NULL — absent key under the bridge) passes
+    vacuously; a present JSON null is a VOID-tagged variant and is
+    judged — exactly the kernel's view of dynamic-key values."""
+    if not variant_tag_affine(node, c.format_assertion):
+        raise ColumnarUnsupported(
+            "subschema reads an opaque variant value")
     col = texpr.col
     tag = F.schema_of_variant(col)
     dbl = F.try_variant_get(col, "$", "double")
@@ -670,9 +659,10 @@ class SchemaCompiler:
         # unevaluated*, this whole node must run as ONE kernel check.
         # unevaluated* directly AT this node stays on the existing path
         # (static claim analysis, or a carried-sibling fallback that is
-        # whole-node-equivalent).
-        if any(self._contains_unevaluated_deep(sub)
-               for sub in self._inplace_subtrees(node)):
+        # whole-node-equivalent).  Because this gate runs first on every
+        # dict node, the anyOf/oneOf/not/if handlers below never meet a
+        # branch that reaches unevaluated*.
+        if _reaches_unevaluated(self.schema, *self._inplace_subtrees(node)):
             return [self._plane_b_check(
                 dict(node), texpr, spath + ("(unevaluated-context)",),
                 dpath, node, "unevaluated", owner_node=node,
@@ -759,42 +749,6 @@ class SchemaCompiler:
                 subs.append(target)
         return subs
 
-    def _contains_unevaluated_deep(self, node: Any,
-                                   seen: Optional[set] = None) -> bool:
-        """unevaluated* anywhere in the subtree, following $ref targets
-        (a ref'd branch contributes claims exactly like an inline one).
-
-        NOTE: iter_subschemas mirrors the reference's traversal, which
-        yields the patternProperties CONTAINER (not its values) and
-        skips draft-4 ``dependencies`` entirely — for THIS analysis
-        those subschemas must be walked too (round-2 review find: an
-        unevaluated* inside a patternProperties value slipped past the
-        whole-node gate)."""
-        from jema_js_spark.schema.frontend import iter_subschemas
-
-        if seen is None:
-            seen = set()
-        if not isinstance(node, dict) or id(node) in seen:
-            return False
-        seen.add(id(node))
-        if "unevaluatedProperties" in node or "unevaluatedItems" in node:
-            return True
-        if "$ref" in node or "$dynamicRef" in node:
-            target = self.schema.registry.ref_targets.get(id(node))
-            if target is not None and self._contains_unevaluated_deep(target, seen):
-                return True
-        extra = []
-        pprops = node.get("patternProperties")
-        if isinstance(pprops, dict):
-            extra.extend(pprops.values())
-        deps = node.get("dependencies")
-        if isinstance(deps, dict):
-            extra.extend(v for v in deps.values() if isinstance(v, dict))
-        if any(self._contains_unevaluated_deep(sub, seen) for sub in extra):
-            return True
-        return any(self._contains_unevaluated_deep(sub, seen)
-                   for sub in iter_subschemas(node))
-
     # -- Plane-B bridge ---------------------------------------------------
     def _plane_b_check(self, sub_schema: dict, texpr: _TExpr,
                        spath: Tuple, dpath: Tuple,
@@ -810,7 +764,9 @@ class SchemaCompiler:
         # URL and ship the registry documents as remotes so the executor-
         # side kernel resolves them against the real documents.
         remotes = None
-        if _contains_refs(sub_schema):
+        if any(isinstance(n.get("$ref"), str)
+               or isinstance(n.get("$dynamicRef"), str)
+               for n in _schema_positions(sub_schema)):
             import copy as _copy
 
             registry = self.schema.registry
@@ -851,24 +807,57 @@ _NAME_MAP_KEYWORDS = ("properties", "patternProperties", "$defs",
                       "definitions", "dependentSchemas", "dependencies")
 
 
-def _contains_refs(node: Any, at_schema: bool = True) -> bool:
-    if isinstance(node, dict):
-        if not at_schema:  # name→schema map: values are schemas
-            return any(_contains_refs(v) for v in node.values())
-        for k, v in node.items():
-            if k in _DATA_KEYWORDS:
-                continue
-            if k in ("$ref", "$dynamicRef") and isinstance(v, str):
-                return True
-            if k in _NAME_MAP_KEYWORDS and isinstance(v, dict):
-                if _contains_refs(v, at_schema=False):
-                    return True
-            elif _contains_refs(v):
-                return True
-        return False
-    if isinstance(node, list):
-        return any(_contains_refs(x) for x in node)
-    return False
+def _schema_positions(doc: Any) -> Iterator[dict]:
+    """Every dict in a SCHEMA position of a raw (unresolved) document:
+    lists are transparent, ``_DATA_KEYWORDS`` values are literal data
+    and are skipped, and the values of a ``_NAME_MAP_KEYWORDS`` dict are
+    schemas (its keys are names, never keywords).  No seen-set — raw
+    JSON documents are trees."""
+    stack = [doc]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, list):
+            stack.extend(node)
+        elif isinstance(node, dict):
+            yield node
+            for k, v in node.items():
+                if k in _DATA_KEYWORDS:
+                    continue
+                if k in _NAME_MAP_KEYWORDS and isinstance(v, dict):
+                    stack.extend(v.values())
+                else:
+                    stack.append(v)
+
+
+def _reachable_subschemas(schema: Schema, *roots: Any) -> Iterator[dict]:
+    """Every dict subschema reachable from ``roots`` in the RESOLVED
+    schema graph, each once: ``$ref``/``$dynamicRef`` targets are
+    followed (a ref'd branch applies exactly like an inline one).
+    :func:`iter_subschemas` mirrors the reference's traversal, which
+    yields the patternProperties CONTAINER rather than its values and
+    skips draft-4 ``dependencies`` — both are walked here too (round-2
+    review find: an unevaluated* inside a patternProperties value
+    slipped past the whole-node gate)."""
+    seen: set = set()
+    stack = list(roots)
+    while stack:
+        node = stack.pop()
+        if not isinstance(node, dict) or id(node) in seen:
+            continue
+        seen.add(id(node))
+        yield node
+        if "$ref" in node or "$dynamicRef" in node:
+            stack.append(schema.registry.ref_targets.get(id(node)))
+        for kw in ("patternProperties", "dependencies"):
+            if isinstance(node.get(kw), dict):
+                stack.extend(node[kw].values())
+        stack.extend(iter_subschemas(node))
+
+
+def _reaches_unevaluated(schema: Schema, *roots: Any) -> bool:
+    """unevaluated* anywhere reachable from ``roots``."""
+    return any("unevaluatedProperties" in n or "unevaluatedItems" in n
+               for n in _reachable_subschemas(schema, *roots))
 
 
 def _dynamic_scope_hazard(schema: "Schema") -> Optional[str]:
@@ -891,36 +880,17 @@ def _dynamic_scope_hazard(schema: "Schema") -> Optional[str]:
     contract to Plane B, published via ``coverage()``."""
     anchor_defs: Dict[str, int] = {}
     ref_names: set = set()
-
-    def walk(node: Any, at_schema: bool = True) -> None:
-        if isinstance(node, dict):
-            if not at_schema:  # name→schema map: values are schemas
-                for v in node.values():
-                    walk(v)
-                return
-            for k, v in node.items():
-                if k in _DATA_KEYWORDS:
-                    continue
-                if k == "$dynamicAnchor" and isinstance(v, str):
-                    anchor_defs[v] = anchor_defs.get(v, 0) + 1
-                elif k == "$dynamicRef" and isinstance(v, str):
-                    frag = v.split("#", 1)[1] if "#" in v else ""
-                    if frag and "/" not in frag:
-                        ref_names.add(frag)
-                elif k in _NAME_MAP_KEYWORDS and isinstance(v, dict):
-                    walk(v, at_schema=False)
-                else:
-                    walk(v)
-        elif isinstance(node, list):
-            for x in node:
-                walk(x)
-
-    seen_docs: set = set()
-    for doc in [schema.schema, *schema.registry._docs.values()]:
-        if id(doc) in seen_docs:
-            continue
-        seen_docs.add(id(doc))
-        walk(doc)
+    docs = {id(d): d for d in [schema.schema, *schema.registry._docs.values()]}
+    for doc in docs.values():
+        for node in _schema_positions(doc):
+            anchor = node.get("$dynamicAnchor")
+            if isinstance(anchor, str):
+                anchor_defs[anchor] = anchor_defs.get(anchor, 0) + 1
+            ref = node.get("$dynamicRef")
+            if isinstance(ref, str):
+                frag = ref.split("#", 1)[1] if "#" in ref else ""
+                if frag and "/" not in frag:
+                    ref_names.add(frag)
     for name in sorted(ref_names):
         if anchor_defs.get(name, 0) >= 2:
             return name
@@ -1875,46 +1845,13 @@ def _h_all_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
         checks.extend(sub_checks)
 
 
-def _contains_unevaluated(node: Any, seen: Optional[set] = None) -> bool:
-    """True when a subtree contains unevaluated* — such subtrees cannot
-    be compiled independently inside probing combinators: the kernel's
-    ``not``-suppression (schema.js:183,280-282) empties their evaluated
-    set, and an abandoned first-error probe can leak a partial set into
-    a sibling branch's sweep.  Those subtrees stay on Plane B."""
-    from jema_js_spark.schema.frontend import iter_subschemas
-
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return False
-    seen.add(id(node))
-    if "unevaluatedProperties" in node or "unevaluatedItems" in node:
-        return True
-    # iter_subschemas yields the patternProperties CONTAINER, not its
-    # values, and skips draft-4 dependencies — walk those explicitly
-    pprops = node.get("patternProperties")
-    if isinstance(pprops, dict) and any(
-            _contains_unevaluated(v, seen) for v in pprops.values()):
-        return True
-    deps = node.get("dependencies")
-    if isinstance(deps, dict) and any(
-            _contains_unevaluated(v, seen) for v in deps.values()
-            if isinstance(v, dict)):
-        return True
-    return any(_contains_unevaluated(sub, seen) for sub in iter_subschemas(node))
-
-
 def _h_any_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
               spath, dpath, refs):
-    if any(_contains_unevaluated(sub) for sub in sval):
-        raise ColumnarUnsupported("anyOf branch with unevaluated* needs the kernel")
     add(kw, sval, _or_all([descend(sub, texpr) for sub in sval]))
 
 
 def _h_one_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
               spath, dpath, refs):
-    if any(_contains_unevaluated(sub) for sub in sval):
-        raise ColumnarUnsupported("oneOf branch with unevaluated* needs the kernel")
     count = None
     for sub in sval:
         term = descend(sub, texpr).cast("int")
@@ -1924,19 +1861,11 @@ def _h_one_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 
 def _h_not(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
            spath, dpath, refs):
-    if _contains_unevaluated(sval):
-        # inside `not`, annotation collection is suppressed — the
-        # evaluated set the inner sweep observes is EMPTY, which an
-        # independently-compiled predicate cannot express
-        raise ColumnarUnsupported("not with unevaluated* needs the kernel")
     add(kw, sval, ~descend(sval, texpr))
 
 
 def _h_if(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
-    for sub in (sval, node.get("then"), node.get("else")):
-        if _contains_unevaluated(sub):
-            raise ColumnarUnsupported("if/then/else branch with unevaluated* needs the kernel")
     p_if = descend(sval, texpr)
     p_then = descend(node["then"], texpr) if node.get("then") is not None and "then" in node else F.lit(True)
     p_else = descend(node["else"], texpr) if node.get("else") is not None and "else" in node else F.lit(True)
@@ -2007,37 +1936,6 @@ def _h_dynamic_ref(c, kw, sval, node, texpr, jt, is_null, add, descend,
 # kernel-only: its target is runtime-scoped.
 
 
-def _contains_not_deep(c, node: Any, seen: Optional[set] = None) -> bool:
-    """``not`` anywhere in the subtree (following $ref targets, walking
-    the containers iter_subschemas skips) — the scope in which the
-    kernel's plain-reset quirk could re-enable claim collection inside
-    an outer suppressed probe."""
-    from jema_js_spark.schema.frontend import iter_subschemas
-
-    if seen is None:
-        seen = set()
-    if not isinstance(node, dict) or id(node) in seen:
-        return False
-    seen.add(id(node))
-    if "not" in node:
-        return True
-    if "$ref" in node or "$dynamicRef" in node:
-        target = c.schema.registry.ref_targets.get(id(node))
-        if target is not None and _contains_not_deep(c, target, seen):
-            return True
-    extra = []
-    pprops = node.get("patternProperties")
-    if isinstance(pprops, dict):
-        extra.extend(pprops.values())
-    deps = node.get("dependencies")
-    if isinstance(deps, dict):
-        extra.extend(v for v in deps.values() if isinstance(v, dict))
-    if any(_contains_not_deep(c, sub, seen) for sub in extra):
-        return True
-    return any(_contains_not_deep(c, sub, seen)
-               for sub in iter_subschemas(node))
-
-
 def _claimed_keys_static(c, node: Any, texpr: _TExpr, descend,
                          ref_stack: frozenset = frozenset()):
     """Set of statically-claimed property names plus an optional
@@ -2101,7 +1999,8 @@ def _claimed_keys_static(c, node: Any, texpr: _TExpr, descend,
         # claims inside `not` are suppressed (stop_collecting) — it
         # contributes nothing — unless a nested `not` below it could
         # plain-reset the flag mid-probe (kernel quirk, schema.js:412)
-        if _contains_not_deep(c, node["not"]):
+        if any("not" in n
+               for n in _reachable_subschemas(c.schema, node["not"])):
             raise ColumnarUnsupported(
                 "unevaluated* with nested not-in-not needs the kernel "
                 "(plain stop_collecting reset re-enables collection)")
@@ -2260,7 +2159,8 @@ def _claimed_items_static(c, node: Any,
         n_prefix = max(n_prefix, tn)
         all_claimed |= tall
 
-    if "not" in node and _contains_not_deep(c, node["not"]):
+    if "not" in node and any(
+            "not" in n for n in _reachable_subschemas(c.schema, node["not"])):
         raise ColumnarUnsupported(
             "unevaluatedItems with nested not-in-not needs the kernel "
             "(plain stop_collecting reset re-enables collection)")

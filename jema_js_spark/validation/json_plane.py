@@ -112,6 +112,7 @@ from pyspark.sql import types as T
 
 from jema_js_spark.compiler.compile import (CompiledPlan, SchemaCompiler,
                                             _dynamic_scope_hazard,
+                                            _reaches_unevaluated,
                                             variant_tag_affine)
 from jema_js_spark.runtime.colcache import cached_column
 from jema_js_spark.schema.frontend import Schema, contract_key
@@ -435,9 +436,10 @@ def _enum_type(values: list) -> Optional[str]:
 def _slot_signals(schema: Schema, sub: Any) -> tuple:
     """The raw type signals one subschema emits from conjunctive
     positions — ``(single, union, enum_t, classes, has_false)`` —
-    shared by :func:`_slot_decl` (typed-slot pick) and
-    :func:`_union_members` (variant-slot pick, round 7 session 5) so
-    the two can never read the schema differently."""
+    computed once per subschema and read by both :func:`_slot_decl`
+    (typed-slot pick) and :func:`_union_members` (variant-slot pick,
+    round 7 session 5), so the two can never read the schema
+    differently."""
     single: List[str] = []
     union: List[str] = []
     enum_t: List[str] = []
@@ -482,9 +484,10 @@ def _slot_signals(schema: Schema, sub: Any) -> tuple:
     return single, union, enum_t, classes, has_false
 
 
-def _slot_decl(schema: Schema, sub: Any) -> Optional[str]:
-    """The slot type for one subschema.  Resolution order, all signals
-    gathered from conjunctive positions only (:func:`_conjuncts`):
+def _slot_decl(signals: tuple) -> Optional[str]:
+    """The slot type from one subschema's :func:`_slot_signals`.
+    Resolution order, all signals gathered from conjunctive positions
+    only (:func:`_conjuncts`):
 
     1. an explicit single ``type`` (the round-6 rule, unchanged);
     2. a ``type`` union list → its first supported non-"null" member
@@ -497,7 +500,7 @@ def _slot_decl(schema: Schema, sub: Any) -> Optional[str]:
     A conjunctive ``false`` schema short-circuits to "boolean": no
     value can satisfy it, so the slot is arbitrary and the compiled
     false-check judges whatever routes."""
-    single, union, enum_t, classes, has_false = _slot_signals(schema, sub)
+    single, union, enum_t, classes, has_false = signals
     if has_false:
         return "boolean"
     if single:
@@ -513,14 +516,14 @@ def _slot_decl(schema: Schema, sub: Any) -> Optional[str]:
     return None
 
 
-def _union_members(schema: Schema, sub: Any) -> set:
+def _union_members(signals: tuple) -> set:
     """The distinct non-null routable types a slot's UNION signals
     (type lists + all-branches-typed anyOf/oneOf) when no conjunctive
     single type pins it — {} otherwise.  ``integer`` collapses into a
     ``number`` member (a number slot already holds both exactly), so
     two members here mean two genuinely different storage shapes and a
     typed slot could route only the first one's documents."""
-    single, union, _enum_t, _classes, has_false = _slot_signals(schema, sub)
+    single, union, _enum_t, _classes, has_false = signals
     if single or has_false:
         return set()
     members = {t for t in union if t != "null" and t in _SLOT_TYPES}
@@ -561,14 +564,12 @@ def _dyn_map_node(schema: Schema, node: Any, dyn: list, merged: list,
       whole node compiles as one kernel check, routing buys nothing."""
     def all_affine() -> bool:
         # lazy: the common single-typed path decides without paying
-        # the affinity walks + SchemaCompiler construction (round-7
-        # review)
+        # the affinity and unevaluated* walks (round-7 review)
         return (all(variant_tag_affine(s, fa) for s in dyn + merged)
-                and not SchemaCompiler(schema)
-                ._contains_unevaluated_deep(node))
+                and not _reaches_unevaluated(schema, node))
 
     if typed is not None:
-        if any(len(_union_members(schema, s)) >= 2
+        if any(len(_union_members(_slot_signals(schema, s))) >= 2
                for s in dyn + merged) and all_affine():
             return ("variant", None)
         return typed
@@ -613,7 +614,8 @@ def _build_node(schema: Schema, sub: Any, label: str,
         # levels compiled Plane A (see compile.py _h_ref's
         # (node, dtype) cycle key).
         return ("variant", None)
-    decl = _slot_decl(schema, sub)
+    signals = _slot_signals(schema, sub)
+    decl = _slot_decl(signals)
     if decl == "null":
         # a null-typed slot has no storable value; any slot works:
         # absent keys route, a present null (or anything routed) is
@@ -624,7 +626,7 @@ def _build_node(schema: Schema, sub: Any, label: str,
         # — sound per _AFFINITY's fail-closed argument; only the route
         # rate for non-string values is affected
         decl = "string"
-    if len(_union_members(schema, sub)) >= 2 and variant_tag_affine(sub, fa):
+    if len(_union_members(signals)) >= 2 and variant_tag_affine(sub, fa):
         # round 7 session 5: a slot typed as a genuine UNION (type
         # lists, all-branches-typed anyOf/oneOf) whose constraints are
         # all TAG-AFFINE stores the value as an OPAQUE variant — the
@@ -641,7 +643,7 @@ def _build_node(schema: Schema, sub: Any, label: str,
         items = next((n["items"] for n in _conjuncts(schema, sub)
                       if n is not False and n.get("items") is not None),
                      None)
-        elem = _slot_decl(schema, items)
+        elem = _slot_decl(_slot_signals(schema, items))
         if elem == "null":
             elem = "string"
         if elem is None and (items is None
@@ -725,7 +727,7 @@ def _build_node(schema: Schema, sub: Any, label: str,
             # subtree compiles as ONE whole-node kernel check, so such
             # an object keeps the empty struct, which routes only
             # ``{}`` (analyze_json_contract refuses it as a root).
-            if SchemaCompiler(schema)._contains_unevaluated_deep(sub):
+            if _reaches_unevaluated(schema, sub):
                 return ("object", {})
             return ("map", ("variant", None))
         fields: Dict[str, Tuple[str, Any]] = {}

@@ -559,6 +559,11 @@ def test_uneval_under_pattern_props_and_dependencies_gates(spark, df):
              "properties": {"meta": {"properties": {"zip": True},
                                       "unevaluatedProperties": False}}}}}],
          "properties": {"meta": {"properties": {"depth": True}}}},
+        # reached only through a $ref inside an anyOf branch
+        {"anyOf": [{"$ref": "#/$defs/strict"}, {"required": ["id"]}],
+         "properties": {"id": True, "url": True},
+         "$defs": {"strict": {"properties": {"text": True},
+                              "unevaluatedProperties": False}}},
     ]
     from jema_js_spark.kernel.kernel import Validator
 
@@ -569,6 +574,52 @@ def test_uneval_under_pattern_props_and_dependencies_gates(spark, df):
         for row in df.collect():
             value = _row_to_json_value(row, ROWS_SCHEMA)
             assert out[row["id"]] == v.validate(value), (schema, value)
+
+
+def test_schema_walkers_on_hostile_shapes():
+    """Session-free pin of the compiler's two schema walkers.  The
+    resolved-graph walk (whole-node unevaluated* gate, nested-not scan)
+    must follow $ref targets and reach patternProperties values and
+    draft-4 dependencies under anyOf/not/if; the raw-document walk
+    (Plane-B ref rebase trigger, dynamic-scope hazard) must skip
+    const/enum data and treat name-map keys as names."""
+    from jema_js_spark.compiler.compile import (_dynamic_scope_hazard,
+                                                _reaches_unevaluated,
+                                                _schema_positions)
+
+    for target, want in (({"unevaluatedProperties": False}, True),
+                         ({"type": "object"}, False)):
+        for via in ({"$ref": "#/$defs/u"},
+                    {"patternProperties": {"^a": target}},
+                    {"dependencies": {"a": target}}):
+            for wrap in ("anyOf", "not", "if"):
+                c = SchemaCompiler({wrap: [via] if wrap == "anyOf" else via,
+                                    "$defs": {"u": target}})
+                got = _reaches_unevaluated(
+                    c.schema, *c._inplace_subtrees(c.schema.schema))
+                assert got is want, (wrap, via)
+
+    def has_ref(doc):
+        return any(isinstance(n.get("$ref"), str)
+                   for n in _schema_positions(doc))
+
+    assert has_ref({"anyOf": [{"not": {"$ref": "#/$defs/x"}}]})
+    assert has_ref({"properties": {"$ref": {"$ref": "#"}}})
+    assert not has_ref({"const": {"$ref": "#x"}, "enum": [{"$ref": "#y"}],
+                        "default": {"$ref": "#z"}})
+    assert not has_ref({"properties": {"$ref": "#/nowhere"}})
+
+    dyn = {"$dynamicRef": "#node",
+           "$defs": {"a": {"$dynamicAnchor": "node"}}}
+    assert _dynamic_scope_hazard(Schema(dict(dyn))) is None
+    dup = {**dyn, "$defs": {**dyn["$defs"],
+                            "b": {"$id": "http://example.com/b",
+                                  "$dynamicAnchor": "node"}}}
+    assert _dynamic_scope_hazard(Schema(dup)) == "node"
+    for data_copy in ({"const": {"$dynamicAnchor": "node"}},
+                      {"enum": [{"$dynamicAnchor": "node"}]},
+                      {"properties": {"$dynamicAnchor": "node"}}):
+        assert _dynamic_scope_hazard(Schema({**dyn, **data_copy})) is None
 
 
 def test_plane_b_rewrite_never_touches_const_enum_data(spark, df):

@@ -2028,7 +2028,7 @@ def test_keys_only_fast_plan_stays_plane_a(spark):
     assert cov["plane_b_checks"] == 0, cov["plane_b_names"]
 
 
-def test_keys_only_variant_net_coverage():
+def test_keys_only_variant_net_coverage(spark):
     """A value-reading subschema under a variant map compiles as ONE
     kernel check with a published reason — the variant net, honest in
     CompiledPlan.coverage().  (Since round 7 session 5 a body that is
@@ -2707,7 +2707,7 @@ def test_recursive_ref_contract_routes(spark):
     assert by_doc["not json"] == "kernel"
 
 
-def test_recursive_unroll_plane_a_share():
+def test_recursive_unroll_plane_a_share(spark):
     """The unrolled levels compile Plane A (the (node, dtype) cycle
     key in _h_ref) — only the horizon leaf's kernel net is Plane B, so
     shallow documents never touch Python."""
