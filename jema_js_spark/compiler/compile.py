@@ -18,8 +18,9 @@ Typed-column semantics (the relational bridge, SURVEY.md §1.1/§7.4):
   NULL`` and ``type: 'null'`` to ``IS NULL``.
 - a keyword whose ``affects`` type cannot match the column's static
   type is folded to ``TRUE`` at compile time (the columnar analog of
-  the vacuous type-gate at schema.js:199) — constant-folding erases it
-  from the physical plan.
+  the vacuous type-gate at schema.js:199, applied once in
+  ``_compile_node`` from the kernel's vocabulary) — constant-folding
+  erases it from the physical plan.
 - non-finite doubles match no JSON type (schema.js:680), so ``type:
   'number'`` on a double column carries an ``isnan``/infinity guard.
 - ``TimestampType`` columns stand for ``{type: 'string', format:
@@ -104,19 +105,17 @@ class CheckSpec:
 @dataclass
 class _TExpr:
     """A typed value expression during compilation: either the row
-    itself (``is_row``) or a column/lambda expression with its Spark
-    type."""
+    itself (``is_row``: a non-null struct of top-level columns, its
+    ``dtype`` the DataFrame schema) or a column/lambda expression with
+    its Spark type."""
 
     col: Optional[Column]
     dtype: Optional[T.DataType]
     is_row: bool = False
-    row_fields: Optional[List[T.StructField]] = None
 
     def json_type(self) -> Optional[str]:
         """Static JSON type when non-null, per the bridge table
         (SURVEY.md §1.1)."""
-        if self.is_row:
-            return "object"
         d = self.dtype
         if isinstance(d, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                           T.FloatType, T.DoubleType, T.DecimalType)):
@@ -162,35 +161,33 @@ class _TExpr:
         """Dynamic-keyed object: ``map<string, V>`` (round 6 — object
         keywords compile to map lambdas instead of falling to the
         kernel; SURVEY §2.6 names this mapping)."""
-        return (not self.is_row) and isinstance(self.dtype, T.MapType) \
+        return isinstance(self.dtype, T.MapType) \
             and isinstance(self.dtype.keyType, T.StringType)
 
-    def map_value(self, name: str) -> "_TExpr":
-        """One named entry of a map-typed object — NULL when the key is
-        absent OR its value is JSON null, exactly the relational
-        bridge's struct-field semantics."""
-        return _TExpr(F.try_element_at(self.col, F.lit(name)),
-                      self.dtype.valueType)
+    def member(self, name: str) -> Optional["_TExpr"]:
+        """The value under key ``name`` of an object: the map entry
+        (NULL when the key is absent OR its value is JSON null, exactly
+        the relational bridge's struct-field semantics), the struct
+        field, or None when the struct has no such field — a key that
+        can never be present."""
+        if self.is_map():
+            return _TExpr(F.try_element_at(self.col, F.lit(name)),
+                          self.dtype.valueType)
+        return self.field(name) if name in self.field_names() else None
 
     def field_names(self) -> List[str]:
-        if self.is_row:
-            return [f.name for f in self.row_fields]
         if isinstance(self.dtype, T.StructType):
             return [f.name for f in self.dtype.fields]
         raise ColumnarUnsupported("dynamic object shape")
 
     def field(self, name: str) -> "_TExpr":
-        if self.is_row:
-            for f in self.row_fields:
-                if f.name == name:
-                    return _TExpr(F.col(name), f.dataType)
-            raise KeyError(name)
-        if isinstance(self.dtype, T.StructType):
-            for f in self.dtype.fields:
-                if f.name == name:
-                    return _TExpr(self.col.getField(name), f.dataType)
-            raise KeyError(name)
-        raise ColumnarUnsupported("field access on non-struct")
+        if not isinstance(self.dtype, T.StructType):
+            raise ColumnarUnsupported("field access on non-struct")
+        for f in self.dtype.fields:
+            if f.name == name:
+                col = F.col(name) if self.is_row else self.col.getField(name)
+                return _TExpr(col, f.dataType)
+        raise KeyError(name)
 
     def to_json_col(self) -> Column:
         """JSON serialization for Plane-B handoff (Arrow batch of JSON
@@ -198,7 +195,7 @@ class _TExpr:
         if self.is_row:
             return F.to_json(F.struct(*[
                 _bridge_json_value(F.col(f.name), f.dataType).alias(f.name)
-                for f in self.row_fields]))
+                for f in self.dtype.fields]))
         d = self.dtype
         if isinstance(d, (T.StructType, T.ArrayType, T.MapType)):
             return F.to_json(_bridge_json_value(self.col, d))
@@ -208,8 +205,8 @@ class _TExpr:
         return F.to_json(F.array(self.col))
 
     def needs_unwrap(self) -> bool:
-        return not self.is_row and not isinstance(
-            self.dtype, (T.StructType, T.ArrayType, T.MapType))
+        return not isinstance(self.dtype,
+                              (T.StructType, T.ArrayType, T.MapType))
 
     def float_paths(self) -> list:
         """Paths of float/double fields inside the serialized value —
@@ -230,13 +227,6 @@ class _TExpr:
                 return walk(dtype.valueType, prefix + ("*",))
             return []
 
-        if self.is_row:
-            out = []
-            for f in self.row_fields:
-                out += walk(f.dataType, (f.name,))
-            return out
-        if isinstance(self.dtype, (T.StructType, T.ArrayType, T.MapType)):
-            return walk(self.dtype, ())
         return walk(self.dtype, ())
 
 
@@ -562,7 +552,7 @@ class SchemaCompiler:
 
     # -- public -----------------------------------------------------------
     def compile_plan(self, df: DataFrame) -> "CompiledPlan":
-        root = _TExpr(None, None, is_row=True, row_fields=list(df.schema.fields))
+        root = _TExpr(None, df.schema, is_row=True)
         checks = self._compile_root(root)
         return CompiledPlan(checks=checks, compiler=self)
 
@@ -713,6 +703,15 @@ class SchemaCompiler:
             try:
                 handler = _HANDLERS.get(keyword)
                 if handler is None:
+                    continue
+                affects = _AFFECTS.get(keyword)
+                if affects is not None and jt != affects:
+                    # the vacuous type gate (schema.js:199): a keyword
+                    # whose affects type cannot match the value's static
+                    # type passes — one TRUE check, or none for the
+                    # applicators that only descend into members
+                    if keyword not in _SILENT_OFF_TYPE:
+                        add(keyword, sval, F.lit(True))
                     continue
                 handler(self, keyword, sval, node, texpr, jt, is_null,
                         add, descend_pred, checks, spath, dpath, ref_stack)
@@ -995,7 +994,10 @@ def _or_all(preds: List[Column]) -> Column:
 
 # ---------------------------------------------------------------------------
 # keyword handlers — each emits checks via add() or raises
-# ColumnarUnsupported.  Signature:
+# ColumnarUnsupported.  A keyword with an affects type (``_AFFECTS``)
+# reaches its handler only when the value's static JSON type ``jt`` is
+# that type: the one type gate in ``_compile_node`` has already emitted
+# the vacuous pass otherwise.  Signature:
 # (compiler, keyword, sval, node, texpr, jt, is_null, add, descend_pred,
 #  checks, spath, dpath, ref_stack)
 # ---------------------------------------------------------------------------
@@ -1151,11 +1153,9 @@ def _h_const(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
     add(kw, sval, F.when(is_null, F.lit(False)).otherwise(col == F.lit(compat[0])))
 
 
-def _numeric_gate(texpr, jt, is_null):
-    """Vacuous-pass gate for affects:'number' keywords: null, non-number
-    type, or non-finite double all pass (schema.js:199,680)."""
-    if jt != "number":
-        return None  # statically vacuous
+def _numeric_gate(texpr, is_null):
+    """Vacuous-pass gate for affects:'number' keywords over a number
+    column: null or a non-finite double passes (schema.js:199,680)."""
     gate = is_null
     if texpr.is_float_type():
         gate = gate | ~_finite(texpr.col)
@@ -1165,10 +1165,7 @@ def _numeric_gate(texpr, jt, is_null):
 def _h_bound(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
-        if texpr.is_row or jt != "number":
-            add(kw, sval, F.lit(True))
-            return
-        gate = _numeric_gate(texpr, jt, is_null)
+        gate = _numeric_gate(texpr, is_null)
         col = texpr.col.cast("double") if isinstance(texpr.dtype, T.DecimalType) else texpr.col
         add(kw, sval, gate | op(col, F.lit(sval)))
     return h
@@ -1176,10 +1173,7 @@ def _h_bound(op):
 
 def _h_multiple_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
                    spath, dpath, refs):
-    if texpr.is_row or jt != "number":
-        add(kw, sval, F.lit(True))
-        return
-    gate = _numeric_gate(texpr, jt, is_null)
+    gate = _numeric_gate(texpr, is_null)
     # multipleOf ±1 on an integral column is vacuously true in JS float
     # semantics at ANY long magnitude (v/1 is an integral double, which
     # Math.round fixes) — the common "assert integer-ness" idiom costs
@@ -1204,18 +1198,12 @@ def _h_multiple_of(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 def _h_strlen(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
-        if texpr.is_row or jt != "string":
-            add(kw, sval, F.lit(True))
-            return
         add(kw, sval, is_null | op(F.length(texpr.string_col()), F.lit(sval)))
     return h
 
 
 def _h_pattern(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
                spath, dpath, refs):
-    if texpr.is_row or jt != "string":
-        add(kw, sval, F.lit(True))
-        return
     jre, why = java_regex_explain(sval)
     if jre is not None:
         add(kw, sval, is_null | texpr.string_col().rlike(jre))
@@ -1426,7 +1414,7 @@ _FORMAT_PRED = {
 
 def _h_format(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
               spath, dpath, refs):
-    if not c.format_assertion or texpr.is_row or jt != "string":
+    if not c.format_assertion:
         # annotation-only default — parity with the shipped reference
         # (hard `return true`, schema.js:499)
         add(kw, sval, F.lit(True))
@@ -1446,23 +1434,11 @@ def _h_format(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 
 def _h_required(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
                 spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
-    if texpr.is_map():
-        for i, prop in enumerate(sval):
-            pred = texpr.map_value(prop).col.isNotNull()
-            add(kw, prop, is_null | pred, extra_path=(i,))
-        return
-    names = set(texpr.field_names())
     for i, prop in enumerate(sval):
-        if prop in names:
-            # relational bridge: presence == NOT NULL (see module doc)
-            pred = texpr.field(prop).col.isNotNull()
-            if not texpr.is_row:
-                pred = is_null | pred
-        else:
-            pred = F.lit(False) if texpr.is_row else is_null
+        child = texpr.member(prop)
+        # relational bridge: presence == NOT NULL (see module doc)
+        pred = is_null if child is None \
+            else is_null | child.col.isNotNull()
         add(kw, prop, pred, extra_path=(i,))
 
 
@@ -1475,14 +1451,18 @@ def _wrap_vacuous(sub_checks: List[CheckSpec], gate: Column) -> List[CheckSpec]:
             for s in sub_checks]
 
 
-def _child_gate(texpr: _TExpr, is_null, child: _TExpr) -> Column:
+def _child_gate(is_null, child: _TExpr) -> Column:
     # NULL column ⇔ key absent ⇒ property subschema is never applied
     # (mirror of the present-key loop, schema.js:237-254); a NULL parent
     # struct likewise has no keys at all
-    gate = child.null_col()
-    if not texpr.is_row:
-        gate = gate | is_null
-    return gate
+    return child.null_col() | is_null
+
+
+def _present(texpr: _TExpr, name: str) -> Column:
+    """Key ``name`` present on the object (relational bridge: NOT
+    NULL); FALSE for a struct field that does not exist."""
+    child = texpr.member(name)
+    return F.lit(False) if child is None else child.col.isNotNull()
 
 
 def _map_key_regex(pattern: str) -> str:
@@ -1499,32 +1479,18 @@ def _map_key_regex(pattern: str) -> str:
 
 def _h_properties(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
                   spath, dpath, refs):
-    if jt != "object":
-        return
-    if texpr.is_map():
-        for prop, sub in sval.items():
-            child = texpr.map_value(prop)
-            sub_checks = c._compile_node(sub, child,
-                                         spath + ("properties", prop),
-                                         dpath + (prop,), refs)
-            checks.extend(_wrap_vacuous(sub_checks,
-                                        _child_gate(texpr, is_null, child)))
-        return
-    names = set(texpr.field_names())
     for prop, sub in sval.items():
-        if prop not in names:
+        child = texpr.member(prop)
+        if child is None:
             continue  # key can never be present → vacuous
-        child = texpr.field(prop)
         sub_checks = c._compile_node(sub, child,
                                      spath + ("properties", prop),
                                      dpath + (prop,), refs)
-        checks.extend(_wrap_vacuous(sub_checks, _child_gate(texpr, is_null, child)))
+        checks.extend(_wrap_vacuous(sub_checks, _child_gate(is_null, child)))
 
 
 def _h_pattern_properties(c, kw, sval, node, texpr, jt, is_null, add, descend,
                           checks, spath, dpath, refs):
-    if jt != "object":
-        return
     if texpr.is_map():
         vt = texpr.dtype.valueType
         preds = []
@@ -1558,7 +1524,7 @@ def _h_pattern_properties(c, kw, sval, node, texpr, jt, is_null, add, descend,
                     sub, child, spath + ("patternProperties", pattern),
                     dpath + (prop,), refs)
                 checks.extend(_wrap_vacuous(sub_checks,
-                                            _child_gate(texpr, is_null, child)))
+                                            _child_gate(is_null, child)))
 
 
 def _matched_keys(node: dict, texpr: _TExpr) -> set:
@@ -1580,8 +1546,6 @@ def _matched_keys(node: dict, texpr: _TExpr) -> set:
 
 def _h_additional_properties(c, kw, sval, node, texpr, jt, is_null, add,
                              descend, checks, spath, dpath, refs):
-    if jt != "object":
-        return
     if texpr.is_map():
         prop_names = list((node.get("properties") or {})
                           if isinstance(node.get("properties"), dict) else [])
@@ -1617,23 +1581,18 @@ def _h_additional_properties(c, kw, sval, node, texpr, jt, is_null, add,
         if sval is False:
             # presence of an unclaimed field (non-null under the
             # relational bridge) is a violation
-            pred = child.col.isNull()
-            if not texpr.is_row:
-                pred = is_null | pred
-            add(kw, False, pred, extra_path=(prop,))
+            add(kw, False, is_null | child.col.isNull(),
+                extra_path=(prop,))
         else:
             sub_checks = c._compile_node(
                 sval, child, spath + ("additionalProperties",),
                 dpath + (prop,), refs)
             checks.extend(_wrap_vacuous(sub_checks,
-                                        _child_gate(texpr, is_null, child)))
+                                        _child_gate(is_null, child)))
 
 
 def _h_property_names(c, kw, sval, node, texpr, jt, is_null, add, descend,
                       checks, spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
     if texpr.is_map():
         fn = _elem_pred_fn(c, sval, T.StringType(),
                            spath + ("propertyNames",), dpath, refs)
@@ -1656,19 +1615,13 @@ def _h_property_names(c, kw, sval, node, texpr, jt, is_null, add, descend,
         add(kw, sval, F.lit(True))
         return
     # a statically-bad name only violates when the field is "present"
-    preds = [texpr.field(p).col.isNull() for p in bad]
-    pred = _and_all(preds)
-    if not texpr.is_row:
-        pred = is_null | pred
-    add(kw, sval, pred)
+    add(kw, sval,
+        is_null | _and_all([texpr.field(p).col.isNull() for p in bad]))
 
 
 def _h_prop_count(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
-        if jt != "object":
-            add(kw, sval, F.lit(True))
-            return
         if texpr.is_map():
             cnt = F.size(F.map_filter(texpr.col,
                                       lambda k, v: v.isNotNull()))
@@ -1680,66 +1633,29 @@ def _h_prop_count(op):
             cnt = term if cnt is None else cnt + term
         if cnt is None:
             cnt = F.lit(0)
-        pred = op(cnt, F.lit(sval))
-        if not texpr.is_row:
-            pred = is_null | pred
-        add(kw, sval, pred)
+        add(kw, sval, is_null | op(cnt, F.lit(sval)))
     return h
 
 
 def _h_dependent_required(c, kw, sval, node, texpr, jt, is_null, add, descend,
                           checks, spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
-    if texpr.is_map():
-        def present(p):
-            return texpr.map_value(p).col.isNotNull()
-    else:
-        names = set(texpr.field_names())
-
-        def present(p):
-            return texpr.field(p).col.isNotNull() if p in names \
-                else F.lit(False)
-
     preds = []
     for prop, reqs in sval.items():
-        trigger = present(prop)
-        need = _and_all([present(r) for r in reqs])
+        trigger = _present(texpr, prop)
+        need = _and_all([_present(texpr, r) for r in reqs])
         preds.append(~trigger | need)
-    pred = _and_all(preds)
-    if not texpr.is_row:
-        pred = is_null | pred
-    add(kw, sval, pred)
+    add(kw, sval, is_null | _and_all(preds))
 
 
 def _h_dependent_schemas(c, kw, sval, node, texpr, jt, is_null, add, descend,
                          checks, spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
-    if texpr.is_map():
-        names = None
-    else:
-        names = set(texpr.field_names())
     for prop, sub in sval.items():
-        if names is None:
-            trigger = texpr.map_value(prop).col.isNotNull()
-        else:
-            trigger = (texpr.field(prop).col.isNotNull()
-                       if prop in names else F.lit(False))
-        sub_pred = descend(sub, texpr)
-        pred = ~trigger | sub_pred
-        if not texpr.is_row:
-            pred = is_null | pred
-        add(kw, prop, pred, extra_path=(prop,))
+        pred = ~_present(texpr, prop) | descend(sub, texpr)
+        add(kw, prop, is_null | pred, extra_path=(prop,))
 
 
 def _h_dependencies(c, kw, sval, node, texpr, jt, is_null, add, descend,
                     checks, spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
     for prop, dep in sval.items():
         if isinstance(dep, list):
             _h_dependent_required(c, kw, {prop: dep}, node, texpr, jt, is_null,
@@ -1754,9 +1670,6 @@ def _h_dependencies(c, kw, sval, node, texpr, jt, is_null, add, descend,
 def _h_arrlen(op):
     def h(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
-        if texpr.is_row or jt != "array":
-            add(kw, sval, F.lit(True))
-            return
         add(kw, sval, is_null | op(F.size(texpr.col), F.lit(sval)))
     return h
 
@@ -1773,8 +1686,6 @@ def _elem_pred_fn(c, sub: Any, elem_type: T.DataType, spath, dpath, refs
 
 def _h_items(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
              spath, dpath, refs):
-    if texpr.is_row or jt != "array":
-        return
     elem_t = texpr.dtype.elementType
     prefix = node.get("prefixItems")
     n_prefix = len(prefix) if isinstance(prefix, list) else 0
@@ -1787,8 +1698,6 @@ def _h_items(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 
 def _h_prefix_items(c, kw, sval, node, texpr, jt, is_null, add, descend,
                     checks, spath, dpath, refs):
-    if texpr.is_row or jt != "array":
-        return
     elem_t = texpr.dtype.elementType
     preds = []
     for i, sub in enumerate(sval):
@@ -1804,8 +1713,6 @@ def _h_prefix_items(c, kw, sval, node, texpr, jt, is_null, add, descend,
 
 def _h_contains(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
                 spath, dpath, refs):
-    if texpr.is_row or jt != "array":
-        return
     elem_t = texpr.dtype.elementType
     fn = _elem_pred_fn(c, sval, elem_t, spath + ("contains",), dpath, refs)
     n = F.size(F.filter(texpr.col, fn))
@@ -1826,7 +1733,7 @@ def _h_min_max_contains(c, kw, sval, node, texpr, jt, is_null, add, descend,
 
 def _h_unique_items(c, kw, sval, node, texpr, jt, is_null, add, descend,
                     checks, spath, dpath, refs):
-    if texpr.is_row or jt != "array" or not sval:
+    if not sval:
         add(kw, sval, F.lit(True))
         return
     col = texpr.col
@@ -1867,8 +1774,10 @@ def _h_not(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
 def _h_if(c, kw, sval, node, texpr, jt, is_null, add, descend, checks,
           spath, dpath, refs):
     p_if = descend(sval, texpr)
-    p_then = descend(node["then"], texpr) if node.get("then") is not None and "then" in node else F.lit(True)
-    p_else = descend(node["else"], texpr) if node.get("else") is not None and "else" in node else F.lit(True)
+    p_then = descend(node["then"], texpr) \
+        if node.get("then") is not None else F.lit(True)
+    p_else = descend(node["else"], texpr) \
+        if node.get("else") is not None else F.lit(True)
     add(kw, sval, F.when(p_if, p_then).otherwise(p_else))
 
 
@@ -2078,9 +1987,6 @@ def _claimed_keys_static(c, node: Any, texpr: _TExpr, descend,
 
 def _h_unevaluated_properties(c, kw, sval, node, texpr, jt, is_null, add,
                               descend, checks, spath, dpath, refs):
-    if jt != "object":
-        add(kw, sval, F.lit(True))
-        return
     always, conditional = _claimed_keys_static(c, node, texpr, descend, refs)
     preds = []
     for prop in texpr.field_names():
@@ -2093,10 +1999,7 @@ def _h_unevaluated_properties(c, kw, sval, node, texpr, jt, is_null, add,
         if prop in conditional:
             covered = conditional[prop] | covered
         preds.append(covered)
-    pred = _and_all(preds)
-    if not texpr.is_row:
-        pred = is_null | pred
-    add(kw, sval, pred)
+    add(kw, sval, is_null | _and_all(preds))
 
 
 def _claimed_items_static(c, node: Any,
@@ -2198,9 +2101,6 @@ def _claimed_items_static(c, node: Any,
 
 def _h_unevaluated_items(c, kw, sval, node, texpr, jt, is_null, add,
                          descend, checks, spath, dpath, refs):
-    if texpr.is_row or jt != "array":
-        add(kw, sval, F.lit(True))
-        return
     # claims: prefixItems positions, all items if `items` present,
     # contains-matching elements (schema.js:289-331).  The node's own
     # `contains` keeps its runtime element-probe handling below; the
@@ -2270,6 +2170,28 @@ _HANDLERS: Dict[str, Callable] = {
     "unevaluatedProperties": _h_unevaluated_properties,
     "unevaluatedItems": _h_unevaluated_items,
 }
+
+# the affects types of the keywords the kernel's vocabulary leaves
+# ungated: its object/array passes (schema.js:229-338) run only on their
+# own type, and the draft-4 dependencies shim bails on non-objects
+_PASS_AFFECTS = {
+    "properties": "object", "patternProperties": "object",
+    "additionalProperties": "object", "unevaluatedProperties": "object",
+    "dependencies": "object",
+    "items": "array", "prefixItems": "array", "contains": "array",
+    "unevaluatedItems": "array",
+}
+# keyword → the one JSON type it applies to; the type gate in
+# _compile_node reads this and nothing else
+_AFFECTS: Dict[str, str] = {
+    kw: t for kw in _HANDLERS
+    if (t := _KERNEL_VOCABULARY.get(kw, (None,))[0]
+        or _PASS_AFFECTS.get(kw))}
+# gated keywords that emit no check at all off their type: they only
+# descend into members, and a value without members has none to judge
+_SILENT_OFF_TYPE = frozenset({
+    "properties", "patternProperties", "additionalProperties",
+    "items", "prefixItems", "contains"})
 
 
 # ---------------------------------------------------------------------------

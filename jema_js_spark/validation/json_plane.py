@@ -104,7 +104,7 @@ from __future__ import annotations
 import functools
 import re
 from dataclasses import dataclass, field
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, Iterator, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -433,22 +433,36 @@ def _enum_type(values: list) -> Optional[str]:
     return kinds.pop() if len(kinds) == 1 else None
 
 
-def _slot_signals(schema: Schema, sub: Any) -> tuple:
-    """The raw type signals one subschema emits from conjunctive
-    positions — ``(single, union, enum_t, classes, has_false)`` —
-    computed once per subschema and read by both :func:`_slot_decl`
-    (typed-slot pick) and :func:`_union_members` (variant-slot pick,
-    round 7 session 5), so the two can never read the schema
-    differently."""
+class _Signals(NamedTuple):
+    """The raw type signals one subschema emits from its conjunctive
+    positions, plus those positions' dict subschemas (``nodes``,
+    pre-order) for the layout branches of :func:`_build_node`."""
+
+    single: List[str]
+    union: List[str]
+    enum_t: List[str]
+    classes: List[str]
+    has_false: bool
+    nodes: List[dict]
+
+
+def _slot_signals(schema: Schema, sub: Any) -> _Signals:
+    """ONE :func:`_conjuncts` walk per subschema, read by
+    :func:`_slot_decl` (typed-slot pick), :func:`_union_members`
+    (variant-slot pick, round 7 session 5) and the array/object layout
+    branches of :func:`_build_node`, so none of them can read the
+    schema differently."""
     single: List[str] = []
     union: List[str] = []
     enum_t: List[str] = []
     classes: List[str] = []
     has_false = False
+    nodes: List[dict] = []
     for node in _conjuncts(schema, sub):
         if node is False:
             has_false = True
             continue
+        nodes.append(node)
         t = node.get("type")
         if isinstance(t, str):
             single.append(t)
@@ -481,10 +495,10 @@ def _slot_signals(schema: Schema, sub: Any) -> tuple:
         for name, kws in _AFFINITY:
             if any(k in node for k in kws):
                 classes.append(name)
-    return single, union, enum_t, classes, has_false
+    return _Signals(single, union, enum_t, classes, has_false, nodes)
 
 
-def _slot_decl(signals: tuple) -> Optional[str]:
+def _slot_decl(signals: _Signals) -> Optional[str]:
     """The slot type from one subschema's :func:`_slot_signals`.
     Resolution order, all signals gathered from conjunctive positions
     only (:func:`_conjuncts`):
@@ -500,7 +514,7 @@ def _slot_decl(signals: tuple) -> Optional[str]:
     A conjunctive ``false`` schema short-circuits to "boolean": no
     value can satisfy it, so the slot is arbitrary and the compiled
     false-check judges whatever routes."""
-    single, union, enum_t, classes, has_false = signals
+    single, union, enum_t, classes, has_false, _nodes = signals
     if has_false:
         return "boolean"
     if single:
@@ -516,14 +530,14 @@ def _slot_decl(signals: tuple) -> Optional[str]:
     return None
 
 
-def _union_members(signals: tuple) -> set:
+def _union_members(signals: _Signals) -> set:
     """The distinct non-null routable types a slot's UNION signals
     (type lists + all-branches-typed anyOf/oneOf) when no conjunctive
     single type pins it — {} otherwise.  ``integer`` collapses into a
     ``number`` member (a number slot already holds both exactly), so
     two members here mean two genuinely different storage shapes and a
     typed slot could route only the first one's documents."""
-    single, union, _enum_t, _classes, has_false = signals
+    single, union, _enum_t, _classes, has_false, _nodes = signals
     if single or has_false:
         return set()
     members = {t for t in union if t != "null" and t in _SLOT_TYPES}
@@ -546,15 +560,17 @@ def _promote_numeric(nodes) -> list:
     return list(nodes)
 
 
-def _dyn_map_node(schema: Schema, node: Any, dyn: list, merged: list,
+def _dyn_map_node(schema: Schema, node: Any, sources: list,
+                  signals: List[_Signals],
                   typed: Optional[Tuple[str, Any]],
                   fa: bool) -> Optional[Tuple[str, Any]]:
     """The value-node decision for a dynamic-key slot at any depth, the
     root included (there is one layout analysis, :func:`_build_node`).
-    ``typed`` is the agreed typed value node, or None when the sources
-    disagree.  Returns the value node to use, or None (the sources
-    disagree; the caller falls back to the fixed-key struct or
-    publishes the disagreement):
+    ``sources`` are the value schemas (dynamic and fixed) and
+    ``signals`` their :func:`_slot_signals`; ``typed`` is the agreed
+    typed value node, or None when the sources disagree.  Returns the
+    value node to use, or None (the sources disagree; the caller falls
+    back to the fixed-key struct or publishes the disagreement):
 
     - sources that are all TAG-AFFINE under the session's
       format_assertion route as opaque variants — even over an
@@ -565,12 +581,12 @@ def _dyn_map_node(schema: Schema, node: Any, dyn: list, merged: list,
     def all_affine() -> bool:
         # lazy: the common single-typed path decides without paying
         # the affinity and unevaluated* walks (round-7 review)
-        return (all(variant_tag_affine(s, fa) for s in dyn + merged)
+        return (all(variant_tag_affine(s, fa) for s in sources)
                 and not _reaches_unevaluated(schema, node))
 
     if typed is not None:
-        if any(len(_union_members(_slot_signals(schema, s))) >= 2
-               for s in dyn + merged) and all_affine():
+        if any(len(_union_members(sig)) >= 2 for sig in signals) \
+                and all_affine():
             return ("variant", None)
         return typed
     return ("variant", None) if all_affine() else None
@@ -579,7 +595,9 @@ def _dyn_map_node(schema: Schema, node: Any, dyn: list, merged: list,
 def _build_node(schema: Schema, sub: Any, label: str,
                 reasons: List[str], depth: int,
                 fa: bool = False,
-                slots: Optional[list] = None) -> Optional[Tuple[str, Any]]:
+                slots: Optional[list] = None,
+                signals: Optional[_Signals] = None
+                ) -> Optional[Tuple[str, Any]]:
     """Routing node of one subschema — the contract root (depth 0) or
     any slot below it, by ONE policy — recursing into nested objects
     (fixed-key ``properties`` at any depth), dynamic-key maps and
@@ -591,7 +609,8 @@ def _build_node(schema: Schema, sub: Any, label: str,
     exponential unroll.  ``fa`` is the session's format_assertion:
     tag-affinity classes ``format`` as inert only when assertion is
     off, and the probe must match what the compiler will do (round-7
-    review)."""
+    review).  ``signals`` is ``sub``'s :func:`_slot_signals` when the
+    caller has already computed it."""
     if slots is None:
         slots = [0]
     if depth > _BUDGET_FREE_DEPTH:
@@ -614,7 +633,8 @@ def _build_node(schema: Schema, sub: Any, label: str,
         # levels compiled Plane A (see compile.py _h_ref's
         # (node, dtype) cycle key).
         return ("variant", None)
-    signals = _slot_signals(schema, sub)
+    if signals is None:
+        signals = _slot_signals(schema, sub)
     decl = _slot_decl(signals)
     if decl == "null":
         # a null-typed slot has no storable value; any slot works:
@@ -640,10 +660,10 @@ def _build_node(schema: Schema, sub: Any, label: str,
     if decl in _SCALAR_SQL:
         return (decl, None)
     if decl == "array":
-        items = next((n["items"] for n in _conjuncts(schema, sub)
-                      if n is not False and n.get("items") is not None),
-                     None)
-        elem = _slot_decl(_slot_signals(schema, items))
+        items = next((n["items"] for n in signals.nodes
+                      if n.get("items") is not None), None)
+        item_signals = _slot_signals(schema, items)
+        elem = _slot_decl(item_signals)
         if elem == "null":
             elem = "string"
         if elem is None and (items is None
@@ -653,7 +673,8 @@ def _build_node(schema: Schema, sub: Any, label: str,
             return ("array", elem)
         if elem in ("object", "array"):
             child = _build_node(schema, items, f"{label} items",
-                                reasons, depth + 1, fa, slots)
+                                reasons, depth + 1, fa, slots,
+                                item_signals)
             return None if child is None else ("array", child)
         reasons.append(
             f"{label}: array items need a single scalar/object/array "
@@ -666,9 +687,7 @@ def _build_node(schema: Schema, sub: Any, label: str,
         # or presence, not value shape), from every conjunctive position
         srcs: Dict[str, list] = {}
         dyn: list = []
-        for n in _conjuncts(schema, sub):
-            if n is False:
-                continue
+        for n in signals.nodes:
             props = n.get("properties")
             if isinstance(props, dict):
                 for k, v in props.items():
@@ -688,17 +707,18 @@ def _build_node(schema: Schema, sub: Any, label: str,
             # so any conforming document's values fit the value slot.
             probe: List[str] = []
             nodes: List[Any] = []
-            fixed = list(merged.values())
-            for s in dyn + fixed:
+            sources = dyn + list(merged.values())
+            source_signals = [_slot_signals(schema, s) for s in sources]
+            for s, sig in zip(sources, source_signals):
                 n = _build_node(schema, s, f"{label} values", probe,
-                                depth + 1, fa, slots)
+                                depth + 1, fa, slots, sig)
                 if n not in nodes:          # object nodes hold dicts —
                     nodes.append(n)         # dedup by equality, not hash
             nodes = _promote_numeric(nodes)
             typed = nodes[0] if None not in nodes and len(nodes) == 1 \
                 else None
-            value_node = _dyn_map_node(schema, sub, dyn, fixed, typed,
-                                       fa)
+            value_node = _dyn_map_node(schema, sub, sources,
+                                       source_signals, typed, fa)
             if value_node is not None:
                 return ("map", value_node)
             if not merged:

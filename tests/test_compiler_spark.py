@@ -7,6 +7,7 @@ the row kernel (the semantic anchor) under the relational bridge
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 import math
 
 import pytest
@@ -1024,6 +1025,87 @@ def test_map_column_enum_const_deep_equality(spark):
             kd = None if d is None else {k: x for k, x in d.items()
                                          if x is not None}
             assert bool(g) == v.validate(kd), (contract, d, g)
+
+
+# the keyword type gate: keyword → (affects type, a constraining value)
+GATED_KEYWORDS = {
+    "minimum": ("number", 5), "maximum": ("number", -5),
+    "exclusiveMinimum": ("number", 5), "exclusiveMaximum": ("number", -5),
+    "multipleOf": ("number", 7),
+    "minLength": ("string", 5), "maxLength": ("string", 0),
+    "pattern": ("string", "^z$"), "format": ("string", "email"),
+    "required": ("object", ["zz"]), "properties": ("object", {"a": False}),
+    "patternProperties": ("object", {"^a": False}),
+    "additionalProperties": ("object", False),
+    "propertyNames": ("object", {"maxLength": 0}),
+    "minProperties": ("object", 5), "maxProperties": ("object", 0),
+    "dependentRequired": ("object", {"a": ["zz"]}),
+    "dependentSchemas": ("object", {"a": False}),
+    "dependencies": ("object", {"a": ["zz"]}),
+    "unevaluatedProperties": ("object", False),
+    "minItems": ("array", 5), "maxItems": ("array", 0),
+    "uniqueItems": ("array", True), "items": ("array", False),
+    "prefixItems": ("array", [False]), "contains": ("array", False),
+    "unevaluatedItems": ("array", False),
+}
+# gated keywords that emit no check off their type (they only descend
+# into members); every other gated keyword emits one vacuous check
+SILENT_OFF_TYPE = {"properties", "patternProperties", "additionalProperties",
+                   "items", "prefixItems", "contains"}
+
+# bridge column shapes: name → (dtype, JSON type, values incl. NULL)
+GATE_COLUMNS = {
+    "bigint": (T.LongType(), "number", [1, -3, None]),
+    "double": (T.DoubleType(), "number", [2.5, None]),
+    "decimal": (T.DecimalType(10, 2), "number",
+                [decimal.Decimal("1.50"), None]),
+    "string": (T.StringType(), "string", ["ab", "", None]),
+    "boolean": (T.BooleanType(), "boolean", [True, None]),
+    "array": (T.ArrayType(T.LongType()), "array", [[1, 1], [], None]),
+    "struct": (T.StructType([T.StructField("a", T.LongType()),
+                             T.StructField("b", T.StringType())]),
+               "object", [(1, "x"), (None, None), None]),
+    "map": (T.MapType(T.StringType(), T.LongType()), "object",
+            [{"a": 1}, {}, None]),
+}
+
+
+@pytest.mark.parametrize("shape", list(GATE_COLUMNS))
+def test_keyword_type_gate_matrix(spark, shape):
+    """The one keyword type gate (schema.js:199): every gated keyword
+    compiled against a column whose JSON type differs from its affects
+    type emits exactly one vacuous Plane-A ``true`` check named after
+    the keyword — or nothing at all for the keywords that only descend
+    into members — and its verdicts equal the kernel's."""
+    from jema_js_spark.compiler.compile import _AFFECTS
+
+    assert _AFFECTS == {k: t for k, (t, _v) in GATED_KEYWORDS.items()}
+    dtype, jtype, values = GATE_COLUMNS[shape]
+    df = spark.createDataFrame([(v,) for v in values],
+                               T.StructType([T.StructField("c", dtype)]))
+    cols, contracts = [], []
+    for kw, (affects, sval) in GATED_KEYWORDS.items():
+        if affects == jtype:
+            continue
+        contract = {kw: sval}
+        plan = SchemaCompiler(Schema(dict(contract)), format_assertion=True) \
+            .compile_plan_for_column(F.col("c"), dtype)
+        want = [] if kw in SILENT_OFF_TYPE else [kw]
+        assert [c.name for c in plan.checks] == want, (shape, kw)
+        for c in plan.checks:
+            assert (c.plane, c.note) == ("A", None), (shape, kw)
+            assert str(c.predicate) == "Column<'true'>", (shape, kw)
+        cols.append(plan.valid_column().alias(kw))
+        contracts.append(contract)
+    assert cols
+    for row in df.select("c", *cols).collect():
+        value = _row_to_json_value(row, df.schema).get("c")
+        if isinstance(value, decimal.Decimal):
+            value = float(value)
+        for contract, got in zip(contracts, row[1:]):
+            want = Validator(Schema(dict(contract)),
+                             format_assertion=True).validate(value)
+            assert got == want, (shape, contract, value)
 
 
 def test_dynamic_scope_sensitive_ref_hoists_to_root(spark):
